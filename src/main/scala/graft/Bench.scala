@@ -62,30 +62,46 @@ object Bench {
     (adv, math.min(adv / 4, 1L << 20))
   }
 
+  /** The AQE grain `SPARK_GRAFT_AQE_GRAIN` asks for: `off` restores
+    * Spark's defaults, `on` (the default) is `derived`, `adv:min` pins
+    * explicit byte values (A/B levers for grain bisection). Split with
+    * limit -1 (a plain split drops trailing empties); anything malformed,
+    * including a value past Long.MaxValue, falls back to `derived` with a
+    * stderr note instead of crashing at startup. */
+  def aqeGrain(spec: String, derived: (Long, Long)): (Long, Long) =
+    spec match {
+      case "off" => ((64L << 20), (1L << 20))
+      case "on" => derived
+      case s =>
+        val parsed = s.split(":", -1) match {
+          case Array(a, m) if (a + m).forall(_.isDigit) =>
+            for (av <- a.toLongOption; mv <- m.toLongOption) yield (av, mv)
+          case _ => None
+        }
+        parsed.getOrElse {
+          System.err.println(
+            s"[bench] malformed SPARK_GRAFT_AQE_GRAIN '$s' — using derived")
+          derived
+        }
+    }
+
+  /** `s` as a JSON string literal. */
+  private def jsonStr(s: String): String =
+    if (s == null) "null"
+    else "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // derived, not constant — see derivedAqeGrain; SPARK_GRAFT_AQE_GRAIN=off
-    // restores Spark defaults, =adv:min (bytes) pins explicit values
-    // (A/B levers for grain bisection). Parsed ONCE with split(":", -1)
-    // (plain split drops trailing empties — "134217728:" used to throw);
-    // malformed input falls back to the derived grain with a stderr note
-    // instead of crashing at startup (ADVICE r16).
-    val derived = derivedAqeGrain(sfDir, cpus.toInt)
+    // derived, not constant — see derivedAqeGrain and aqeGrain
     val (adv, minPart) =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_GRAIN", "on") match {
-        case "off" => ((64L << 20), (1L << 20))
-        case "on" => derived
-        case s => s.split(":", -1) match {
-          case Array(a, m) if a.nonEmpty && m.nonEmpty &&
-              a.forall(_.isDigit) && m.forall(_.isDigit) =>
-            (a.toLong, m.toLong)
-          case _ =>
-            System.err.println(
-              s"[bench] malformed SPARK_GRAFT_AQE_GRAIN '$s' — using derived")
-            derived
-        }
-      }
+      aqeGrain(sys.env.getOrElse("SPARK_GRAFT_AQE_GRAIN", "on"),
+        derivedAqeGrain(sfDir, cpus.toInt))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -225,31 +241,38 @@ object Bench {
     }
 
     /** One timed run: (seconds, cpu%, gcMs, spillMemMB, spillDiskMB,
-      * peakExecMB, evictions) — every counter read BEFORE the
-      * harness-hygiene releaseAll so unpersists don't masquerade as
-      * evictions. */
+      * peakExecMB, evictions, …, status, staging events) — every counter
+      * read BEFORE the harness-hygiene releaseAll so unpersists don't
+      * masquerade as evictions. `status` is "ok" or "failed: <message>";
+      * a failed run's `t` is its time to failure. */
     case class RunTel(t: Double, cpuPct: Double, gcMs: Long,
                       spillMemMb: Long, spillDiskMb: Long,
                       peakExecMb: Long, evicted: Long,
-                      inputMb: Long, scanMs: Long)
+                      inputMb: Long, scanMs: Long, status: String,
+                      staging: Seq[Stage.Event])
     def runOnce(name: String): RunTel = {
       spillMem.set(0L); spillDisk.set(0L)
       peakExec.set(0L); evictions.set(0L)
       inputBytes.set(0L); scanMs.set(0L)
+      Stage.drainEvents()
       val gc0 = gcCumMs
       val cpu0 = procCpuNs
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val status =
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          "ok"
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          s"failed: ${e.getMessage}"
+        }
       val t = (System.nanoTime() - t0) / 1e9
       val cpuPct = (procCpuNs - cpu0) / 1e9 / math.max(t, 1e-9) /
         Runtime.getRuntime.availableProcessors * 100.0
       val tel = RunTel(t, cpuPct, gcCumMs - gc0, spillMem.get >> 20,
         spillDisk.get >> 20, peakExec.get >> 20, evictions.get,
-        inputBytes.get >> 20, scanMs.get)
+        inputBytes.get >> 20, scanMs.get, status, Stage.drainEvents())
       // free lineage-cut blocks the query pinned (outside the timed span —
       // it's harness hygiene, not query work): without this, 70 queries ×
       // 3 runs of leaked localCheckpoint blocks squat in the block manager
@@ -362,11 +385,18 @@ object Bench {
     // (gated on still-registered RDDs, so unpersist bleed from the
     // previous query's async cleanup is not counted — ADVICE r15),
     // scan_ms[] up with input_mb[] flat = the same bytes re-read
-    // slower (the cold-page-cache signature, VERDICT r15 #2)
+    // slower (the cold-page-cache signature, VERDICT r15 #2); status[]
+    // says whether each run succeeded, and staging[] lists each run's
+    // per-dir fact stagings (a miss writes, a hit reads the memo)
     fullJson ++= "  \"telemetry\": {\n"
     fullJson ++= telemetry.map { case (k, runs) =>
       def arr[A](f: RunTel => A): String =
         runs.map(f).mkString("[", ",", "]")
+      def staging(r: RunTel): String = r.staging.map(e =>
+        s"""{"fact": ${jsonStr(e.fact)}, "dir": ${jsonStr(e.key)}, """ +
+          s""""bytes": ${e.bytes}, "ms": ${f2(e.ms)}, """ +
+          s""""outcome": "${if (e.hit) "hit" else "miss"}"}""")
+        .mkString("[", ", ", "]")
       s"""    "$k": {"t": ${arr(r => f2(r.t))}, """ +
         s""""cpu_pct": ${arr(r => r.cpuPct.round)}, """ +
         s""""gc_ms": ${arr(_.gcMs)}, """ +
@@ -375,7 +405,9 @@ object Bench {
         s""""peak_exec_mb": ${arr(_.peakExecMb)}, """ +
         s""""evicted_blocks": ${arr(_.evicted)}, """ +
         s""""input_mb": ${arr(_.inputMb)}, """ +
-        s""""scan_ms": ${arr(_.scanMs)}}"""
+        s""""scan_ms": ${arr(_.scanMs)}, """ +
+        s""""status": ${arr(r => jsonStr(r.status))}, """ +
+        s""""staging": ${arr(staging)}}"""
     }.mkString(",\n")
     fullJson ++= "\n  }\n}\n"
     val sidecarBytes = fullJson.toString.getBytes("UTF-8")

@@ -47,6 +47,12 @@ object Tables {
     * must call this so a schema change is never masked). */
   def invalidateSchema(path: String): Unit = schemaCache.remove(path)
 
+  /** A typed empty frame: the result of a query whose input is empty. */
+  def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     parquetCached(spark, s"$dir/$name.parquet")
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Stage, Tables}
 import graft.meos.{Assembly, Boxes}
 
 /** The declared t2 query set (SURVEY.md §5.3): each key has a Spark
@@ -20,46 +20,9 @@ object CoreQueries {
 
   private val Cut = "timestamp '2024-01-15 00:00:00'"
 
-  // q52's staged ORC copy of events, keyed by dir (write once per run)
-  private val orcStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // q53's staged two-generation parquet layout, keyed by dir
-  private val evoStage =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  // q55's bucketed catalog tables (fact + dim), keyed by dir:
-  // (factTable, dimTable) names in the session catalog
-  private val bucketStage =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  // q56's partitioned-parquet layout, keyed by dir
-  private val partStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   // q88's per-invocation temp-view names (ADVICE r14: no fixed-name
   // session-catalog races)
   private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  // q64's year-partitioned fact layout, keyed by dir
-  private val dppStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // q68's blob-directory staging, keyed by dir
-  private val binStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // q57's envelope roundtrip dir and q61's CSV roundtrip dir, keyed by
-  // dir — a bench med3 run re-measures the READ side against one staged
-  // write instead of leaking three temp dirs per session (ADVICE r12)
-  private val envStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val csvStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // q75's staged JSONL-with-planted-corruption dir, keyed by dir
-  private val jsonStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** One envelope line per user: the q57 trip pipeline's v2-write
     * input. `vt` carries a deterministic 3-way type split (id mod 3,
@@ -83,20 +46,13 @@ object CoreQueries {
     * by q57 (full read-back), q84 (pushed-filter read) and q87/q89/q90
     * (pushed aggregates). The v2 write (per-task rename-commit, bytes
     * pinned identical to the legacy text sink by TripSinkSpec) feeds
-    * the v2 reads; staged once per dir (ADVICE r12: no temp-dir leak
-    * across bench legs; winner-return on the race). */
+    * the v2 reads; a bench run re-measures the read side against one
+    * staged write. */
   private def stagedEnvelope(s: SparkSession, dir: String): String =
-    Option(envStage.get(dir)).getOrElse {
-      val d = java.nio.file.Files
-        .createTempDirectory("q57-envelope").toString
+    Stage.dir("q57-envelope", dir) { d =>
       envelopeTrips(s, dir).write.format("trip-envelope")
         .mode("overwrite").save(d)
-      Option(envStage.putIfAbsent(dir, d)).getOrElse(d)
     }
-
-  // q91's range-clustered envelope staging, keyed by dir
-  private val envRangeStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q91's RANGE-CLUSTERED envelope (repartitionByRange on id before
     * the v2 write): each sink file covers a disjoint id slice, so the
@@ -108,12 +64,9 @@ object CoreQueries {
     * every file's [min, max] spans the whole id space, so nothing
     * could ever prune — separate staging keeps both layouts honest. */
   private def stagedEnvelopeRanged(s: SparkSession, dir: String): String =
-    Option(envRangeStage.get(dir)).getOrElse {
-      val d = java.nio.file.Files
-        .createTempDirectory("q91-envelope").toString
+    Stage.dir("q91-envelope", dir) { d =>
       envelopeTrips(s, dir).repartitionByRange(8, col("id"))
         .write.format("trip-envelope").mode("overwrite").save(d)
-      Option(envRangeStage.putIfAbsent(dir, d)).getOrElse(d)
     }
 
   /** The LINEAR pair-comparison segment frame shared by q104/q107: per
@@ -211,10 +164,6 @@ object CoreQueries {
       .withColumn("ny2", expr(numY("t2")))
   }
 
-  // q106's one-id-per-file envelope staging, keyed by dir
-  private val envKeyedStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q106's SINGLE-ID-PER-FILE envelope (one range partition per trip
     * id before the v2 write — the entity-per-file landing layout a
     * per-trip producer writes on purpose): the commit-time
@@ -226,9 +175,7 @@ object CoreQueries {
     * the scan simply declines to report and the query plans normally —
     * the optimization degrades, correctness never does. */
   private def stagedEnvelopeKeyed(s: SparkSession, dir: String): String =
-    Option(envKeyedStage.get(dir)).getOrElse {
-      val d = java.nio.file.Files
-        .createTempDirectory("q106-envelope").toString
+    Stage.dir("q106-envelope", dir) { d =>
       // BOUNDED BY CONSTRUCTION (id < 128): one file per entity means
       // one TASK per entity on the read side, and a corpus-
       // proportional entity count turns the keyed scan into a task-
@@ -242,25 +189,19 @@ object CoreQueries {
       val n = math.max(trips.count().toInt, 1)
       trips.repartitionByRange(n, col("id"))
         .write.format("trip-envelope").mode("overwrite").save(d)
-      Option(envKeyedStage.putIfAbsent(dir, d)).getOrElse(d)
     }
 
   // q108's keyed DIMENSION staging (same 128 ids as q106's fact side,
-  // different payload), keyed by dir
-  private val envKeyedDimStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // different payload)
   private def stagedEnvelopeKeyedDim(s: SparkSession, dir: String)
       : String =
-    Option(envKeyedDimStage.get(dir)).getOrElse {
-      val d = java.nio.file.Files
-        .createTempDirectory("q108-envelope-dim").toString
+    Stage.dir("q108-envelope-dim", dir) { d =>
       val trips = envelopeTrips(s, dir).where(col("id") < 128L)
         .select(col("id"), (col("vt") + 7).cast("int").as("vt"),
           concat(lit("D"), col("id")).as("json"))
       val n = math.max(trips.count().toInt, 1)
       trips.repartitionByRange(n, col("id"))
         .write.format("trip-envelope").mode("overwrite").save(d)
-      Option(envKeyedDimStage.putIfAbsent(dir, d)).getOrElse(d)
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = q42 ++ Map(
@@ -845,15 +786,11 @@ object CoreQueries {
     // oracle reads the ORIGINAL parquet, so any roundtrip loss
     // (timestamp truncation, encoding drift) hash-fails.
     "q52_orc_roundtrip" -> ((s, dir) => {
-      val staged = Option(orcStage.get(dir)).getOrElse {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-orc").toString
+      val staged = Stage.dir("q52-orc", dir) { d =>
         graft.Tables.events(s, dir)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .write.mode("overwrite").orc(d)
-        orcStage.putIfAbsent(dir, d)
-        d
       }
       s.read.orc(staged)
         .where(col("event_type") =!= "error")
@@ -878,9 +815,7 @@ object CoreQueries {
     // misalignment (column matched by position instead of name, type
     // widened wrong) hash-fails.
     "q53_schema_evolution" -> ((s, dir) => {
-      val (d1, d2) = Option(evoStage.get(dir)).getOrElse {
-        val base = java.nio.file.Files
-          .createTempDirectory("graft-evo").toString
+      val base = Stage.dir("q53-evo", dir) { base =>
         val ev = graft.Tables.events(s, dir)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
@@ -893,11 +828,9 @@ object CoreQueries {
         ev.where(col("event_id") % 2 === 1)
           .withColumn("ingest_v", lit(2L))
           .write.mode("overwrite").parquet(s"$base/gen2")
-        val entry = (s"$base/gen1", s"$base/gen2")
-        evoStage.putIfAbsent(dir, entry)
-        entry
       }
-      s.read.option("mergeSchema", "true").parquet(d1, d2)
+      s.read.option("mergeSchema", "true")
+        .parquet(s"$base/gen1", s"$base/gen2")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           count(col("ingest_v")).as("n_evolved"),
@@ -1015,39 +948,35 @@ object CoreQueries {
     // the fact scan's PartitionFilters; the oracle recomputes from the
     // raw table, so over- OR under-pruning hash-fails.
     "q64_dynamic_partition_prune" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_quantity"),
-          year(col("l_shipdate")).cast("long").as("yr"))
       // partitionBy of an empty frame emits no files (q56 rule): the
       // empty landing zone returns the typed empty result directly
-      if (li.isEmpty)
-        s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "yr BIGINT, n BIGINT, qty_milli BIGINT"))
-      else {
-        val staged = Option(dppStage.get(dir)).getOrElse {
-          val d = java.nio.file.Files
-            .createTempDirectory("graft-dpp").toString
+      Stage("q64-dpp", dir) { d =>
+        val li = Tables.lineitem(s, dir)
+          .select(col("l_orderkey"), col("l_quantity"),
+            year(col("l_shipdate")).cast("long").as("yr"))
+        if (li.isEmpty) None
+        else {
           li.write.mode("overwrite").partitionBy("yr").parquet(d)
-          dppStage.putIfAbsent(dir, d)
-          d
+          Some(d)
         }
-        val dim = Tables.orders(s, dir)
-          .where(col("o_orderdate") <
-            lit("1997-01-01").cast("timestamp"))
-          .select(year(col("o_orderdate")).cast("long").as("yr"))
-        // explicit schema keeps the inferred partition column BIGINT
-        // (inference would type the dir values INT and the join would
-        // cast, blocking the pruner's partition-column match)
-        s.read.schema("l_orderkey BIGINT, l_quantity DOUBLE, yr BIGINT")
-          .parquet(staged)
-          .join(dim, Seq("yr"), "left_semi")
-          .groupBy("yr")
-          .agg(count(lit(1)).as("n"),
-            sum(floor(col("l_quantity") * 1000).cast("long"))
-              .as("qty_milli"))
-          .orderBy("yr")
+      } match {
+        case None => Tables.empty(s, "yr BIGINT, n BIGINT, qty_milli BIGINT")
+        case Some(staged) =>
+          val dim = Tables.orders(s, dir)
+            .where(col("o_orderdate") <
+              lit("1997-01-01").cast("timestamp"))
+            .select(year(col("o_orderdate")).cast("long").as("yr"))
+          // explicit schema keeps the inferred partition column BIGINT
+          // (inference would type the dir values INT and the join would
+          // cast, blocking the pruner's partition-column match)
+          s.read.schema("l_orderkey BIGINT, l_quantity DOUBLE, yr BIGINT")
+            .parquet(staged)
+            .join(dim, Seq("yr"), "left_semi")
+            .groupBy("yr")
+            .agg(count(lit(1)).as("n"),
+              sum(floor(col("l_quantity") * 1000).cast("long"))
+                .as("qty_milli"))
+            .orderBy("yr")
       }
     }),
 
@@ -1132,15 +1061,9 @@ object CoreQueries {
       val blobs = Tables.documents(s, dir)
         .where(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
-      if (blobs.isEmpty)
-        s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, nbytes BIGINT, blob_md5 STRING"))
-      else {
-        val staged = Option(binStage.get(dir)).getOrElse {
-          val d = java.nio.file.Files
-            .createTempDirectory("q68-bin").toString
+      Stage("q68-bin", dir) { d =>
+        if (blobs.isEmpty) None
+        else {
           blobs.foreachPartition {
             rows: Iterator[org.apache.spark.sql.Row] =>
               rows.foreach { r =>
@@ -1151,16 +1074,19 @@ object CoreQueries {
                     java.nio.charset.StandardCharsets.UTF_8))
               }
           }
-          binStage.putIfAbsent(dir, d)
-          d
+          Some(d)
         }
-        s.read.format("binaryFile").load(staged)
-          .select(
-            regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1)
-              .cast("long").as("doc_id"),
-            col("length").as("nbytes"),
-            md5(col("content")).as("blob_md5"))
-          .orderBy("doc_id")
+      } match {
+        case None =>
+          Tables.empty(s, "doc_id BIGINT, nbytes BIGINT, blob_md5 STRING")
+        case Some(staged) =>
+          s.read.format("binaryFile").load(staged)
+            .select(
+              regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1)
+                .cast("long").as("doc_id"),
+              col("length").as("nbytes"),
+              md5(col("content")).as("blob_md5"))
+            .orderBy("doc_id")
       }
     }),
 
@@ -1386,19 +1312,11 @@ object CoreQueries {
         StructField("event_type", StringType),
         StructField("vm", LongType),
         StructField("_bad", StringType)))
-      // memo-hit first: skip the isEmpty probe job on re-builds (the
-      // bench rebuilds per timed run); the staged read carries an
-      // explicit schema, so no inference job either
-      val memoHit = Option(jsonStage.get(dir))
+      // the staged read carries an explicit schema, so no inference job
       val ev = Tables.events(s, dir)
-      if (memoHit.isEmpty && ev.isEmpty) {
-        // empty-lake contract: nothing staged, no rows
-        ev.select(col("event_type"), lit(0L).as("n"),
-          lit(0L).as("v_milli")).where(lit(false))
-      } else {
-        val path = memoHit.getOrElse {
-          val d = java.nio.file.Files
-            .createTempDirectory("q75-jsonl").toString
+      Stage("q75-jsonl", dir) { d =>
+        if (ev.isEmpty) None
+        else {
           ev.select(col("event_id"), unix_micros(col("ts")).as("us"),
             col("user_id"), col("event_type"),
             floor(col("value") * 1000).cast("long").as("vm"))
@@ -1415,22 +1333,27 @@ object CoreQueries {
             java.nio.file.Paths.get(d, "zz-quarantine.json"),
             bad.mkString("\n").getBytes(
               java.nio.charset.StandardCharsets.UTF_8))
-          Option(jsonStage.putIfAbsent(dir, d)).getOrElse(d)
+          Some(d)
         }
-        s.read.schema(schema)
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_bad")
-          .json(path)
-          // one pass: quarantined lines fold into a '__corrupt__' type
-          // (a corrupt-column-only filter is restricted by the JSON
-          // reader anyway — this projection references data columns)
-          .select(when(col("_bad").isNotNull, lit("__corrupt__"))
-            .otherwise(col("event_type")).as("event_type"),
-            when(col("_bad").isNotNull, lit(0L)).otherwise(col("vm"))
-              .as("vm"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("vm").as("v_milli"))
-          .orderBy("event_type")
+      } match {
+        case None =>
+          ev.select(col("event_type"), lit(0L).as("n"),
+            lit(0L).as("v_milli")).where(lit(false))
+        case Some(path) =>
+          s.read.schema(schema)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_bad")
+            .json(path)
+            // one pass: quarantined lines fold into a '__corrupt__' type
+            // (a corrupt-column-only filter is restricted by the JSON
+            // reader anyway — this projection references data columns)
+            .select(when(col("_bad").isNotNull, lit("__corrupt__"))
+              .otherwise(col("event_type")).as("event_type"),
+              when(col("_bad").isNotNull, lit(0L)).otherwise(col("vm"))
+                .as("vm"))
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum("vm").as("v_milli"))
+            .orderBy("event_type")
       }
     }),
 
@@ -1695,8 +1618,7 @@ object CoreQueries {
       // per-invocation view name + drop-after-analysis (ADVICE r14:
       // a fixed name races concurrent invocations with different dirs
       // between createOrReplaceTempView and s.sql, and leaks into the
-      // session catalog — the same discipline as the putIfAbsent
-      // staging caches). s.sql() resolves the view eagerly at analysis,
+      // session catalog). s.sql() resolves the view eagerly at analysis,
       // so the returned plan no longer needs the catalog entry.
       val view = s"q88_cnt_${viewSeq.incrementAndGet()}"
       Tables.events(s, dir).groupBy("user_id")
@@ -2235,19 +2157,11 @@ object CoreQueries {
     // hash-fails. Doubles roundtrip exactly (Java shortest-repr print,
     // exact parse); timestamps travel as integer micros.
     "q61_csv_roundtrip" -> ((s, dir) => {
-      // staged once per dir (ADVICE r12: no temp-dir leak per leg)
-      val path = Option(csvStage.get(dir)).getOrElse {
-        val d = java.nio.file.Files
-          .createTempDirectory("q61-csv").toString
+      val path = Stage.dir("q61-csv", dir) { d =>
         Tables.events(s, dir)
           .select(col("event_id"), unix_micros(col("ts")).as("us"),
             col("user_id"), col("event_type"), col("value"), col("props"))
           .write.mode("overwrite").option("header", "true").csv(d)
-        // return the putIfAbsent WINNER (the StreamingReplay pattern):
-        // a racing loser otherwise hands its own dir to this caller
-        // while every later caller reads the winner's — divergent
-        // inputs across concurrent callers plus a leaked temp dir
-        Option(csvStage.putIfAbsent(dir, d)).getOrElse(d)
       }
       s.read.option("header", "true")
         .schema("event_id BIGINT, us BIGINT, user_id BIGINT, " +
@@ -2836,13 +2750,11 @@ object CoreQueries {
     // from the raw table, so a bucket misroute (wrong hash, wrong
     // bucket count, dropped row) hash-fails.
     "q55_bucketed_join" -> ((s, dir) => {
-      val (ft, dt) = Option(bucketStage.get(dir)).getOrElse {
-        // EXTERNAL bucketed tables under a fresh temp path: the
-        // session catalog dies with the JVM but a managed table's
-        // warehouse LOCATION would not, and the next JVM's
-        // saveAsTable(overwrite) refuses an orphaned location
-        val base = java.nio.file.Files
-          .createTempDirectory("graft-bkt").toString
+      // EXTERNAL bucketed tables under the staged dir: the session
+      // catalog dies with the JVM but a managed table's warehouse
+      // LOCATION would not, and the next JVM's saveAsTable(overwrite)
+      // refuses an orphaned location
+      val (ft, dt) = Stage("q55-bucketed", dir) { base =>
         val tag = math.abs(dir.hashCode).toString +
           "_" + java.lang.ProcessHandle.current().pid()
         val (f, d) = (s"graft_fact_$tag", s"graft_dim_$tag")
@@ -2859,9 +2771,8 @@ object CoreQueries {
           .bucketBy(8, "user_id").sortBy("user_id")
           .option("path", s"$base/dim")
           .format("parquet").saveAsTable(d)
-        bucketStage.putIfAbsent(dir, (f, d))
-        (f, d)
-      }
+        Some((f, d))
+      }.get
       s.table(ft).where(col("event_type") === "purchase")
         .join(s.table(dt), "user_id")
         .groupBy("n_events")
@@ -2878,39 +2789,30 @@ object CoreQueries {
     // a partition dropped by the pruner hash-fails. PlanSpec pins the
     // PartitionFilters entry.
     "q56_partition_prune" -> ((s, dir) => {
-      // memo-hit first: skip the isEmpty probe job on re-builds (the
-      // bench rebuilds per timed run); partitioned read keeps live
-      // schema inference — the partition column's type comes from
-      // directory LAYOUT, not footers, so the footer-schema memo
-      // doesn't apply
-      def pruned(staged: String) = s.read.parquet(staged)
-        .where(col("event_type") === "purchase")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("value") * 1000).cast("long")).as("v_milli"))
-        .orderBy("user_id")
-      Option(partStage.get(dir)).map(pruned).getOrElse {
-      val ev = graft.Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
       // a partitionBy write of an EMPTY frame emits no part files at
       // all (nothing to infer a schema from on read-back) — the empty
       // landing zone returns the typed empty result directly
-      if (ev.isEmpty)
-        s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id BIGINT, n BIGINT, v_milli BIGINT"))
-      else {
-      val staged = Option(partStage.get(dir)).getOrElse {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-part").toString
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(d)
-        partStage.putIfAbsent(dir, d)
-        d
-      }
-      pruned(staged)
-      }
+      Stage("q56-part", dir) { d =>
+        val ev = graft.Tables.events(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))
+        if (ev.isEmpty) None
+        else {
+          ev.write.mode("overwrite").partitionBy("event_type").parquet(d)
+          Some(d)
+        }
+      } match {
+        case None =>
+          Tables.empty(s, "user_id BIGINT, n BIGINT, v_milli BIGINT")
+        // the partitioned read keeps live schema inference: the
+        // partition column's type comes from the directory layout, not
+        // footers, so the footer-schema memo doesn't apply
+        case Some(staged) => s.read.parquet(staged)
+          .where(col("event_type") === "purchase")
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n"),
+            sum(floor(col("value") * 1000).cast("long")).as("v_milli"))
+          .orderBy("user_id")
       }
     }),
 
