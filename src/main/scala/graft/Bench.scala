@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.StreamingReplay
+
 /** Benchmark main (driver contract): runs every declared query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{…},"sf":…}`.
@@ -241,7 +243,8 @@ object Bench {
     }
 
     /** One timed run: (seconds, cpu%, gcMs, spillMemMB, spillDiskMB,
-      * peakExecMB, evictions, …, status, staging events) — every counter
+      * peakExecMB, evictions, …, status, staging events, streaming
+      * micro-batches) — every counter
       * read BEFORE the harness-hygiene releaseAll so unpersists don't
       * masquerade as evictions. `status` is "ok" or "failed: <message>";
       * a failed run's `t` is its time to failure. */
@@ -249,12 +252,14 @@ object Bench {
                       spillMemMb: Long, spillDiskMb: Long,
                       peakExecMb: Long, evicted: Long,
                       inputMb: Long, scanMs: Long, status: String,
-                      staging: Seq[Stage.Event])
+                      staging: Seq[Stage.Event],
+                      streaming: Seq[StreamingReplay.Batch])
     def runOnce(name: String): RunTel = {
       spillMem.set(0L); spillDisk.set(0L)
       peakExec.set(0L); evictions.set(0L)
       inputBytes.set(0L); scanMs.set(0L)
       Stage.drainEvents()
+      StreamingReplay.drainBatches()
       val gc0 = gcCumMs
       val cpu0 = procCpuNs
       val t0 = System.nanoTime()
@@ -272,7 +277,8 @@ object Bench {
         Runtime.getRuntime.availableProcessors * 100.0
       val tel = RunTel(t, cpuPct, gcCumMs - gc0, spillMem.get >> 20,
         spillDisk.get >> 20, peakExec.get >> 20, evictions.get,
-        inputBytes.get >> 20, scanMs.get, status, Stage.drainEvents())
+        inputBytes.get >> 20, scanMs.get, status, Stage.drainEvents(),
+        StreamingReplay.drainBatches())
       // free lineage-cut blocks the query pinned (outside the timed span —
       // it's harness hygiene, not query work): without this, 70 queries ×
       // 3 runs of leaked localCheckpoint blocks squat in the block manager
@@ -386,8 +392,9 @@ object Bench {
     // previous query's async cleanup is not counted — ADVICE r15),
     // scan_ms[] up with input_mb[] flat = the same bytes re-read
     // slower (the cold-page-cache signature, VERDICT r15 #2); status[]
-    // says whether each run succeeded, and staging[] lists each run's
-    // per-dir fact stagings (a miss writes, a hit reads the memo)
+    // says whether each run succeeded, staging[] lists each run's
+    // per-dir fact stagings (a miss writes, a hit reads the memo), and
+    // streaming[] each run's replay micro-batches
     fullJson ++= "  \"telemetry\": {\n"
     fullJson ++= telemetry.map { case (k, runs) =>
       def arr[A](f: RunTel => A): String =
@@ -396,6 +403,13 @@ object Bench {
         s"""{"fact": ${jsonStr(e.fact)}, "dir": ${jsonStr(e.key)}, """ +
           s""""bytes": ${e.bytes}, "ms": ${f2(e.ms)}, """ +
           s""""outcome": "${if (e.hit) "hit" else "miss"}"}""")
+        .mkString("[", ", ", "]")
+      def streaming(r: RunTel): String = r.streaming.map(b =>
+        s"""{"query": ${jsonStr(b.query)}, "batch": ${b.batchId}, """ +
+          s""""rows": ${b.inputRows}, "ms": """ +
+          b.durationMs.map { case (p, ms) => s""""$p": $ms""" }
+            .mkString("{", ", ", "}") + ", \"state_commit_ms\": " +
+          b.stateCommitMs.mkString("[", ",", "]") + "}")
         .mkString("[", ", ", "]")
       s"""    "$k": {"t": ${arr(r => f2(r.t))}, """ +
         s""""cpu_pct": ${arr(r => r.cpuPct.round)}, """ +
@@ -407,7 +421,8 @@ object Bench {
         s""""input_mb": ${arr(_.inputMb)}, """ +
         s""""scan_ms": ${arr(_.scanMs)}, """ +
         s""""status": ${arr(r => jsonStr(r.status))}, """ +
-        s""""staging": ${arr(staging)}}"""
+        s""""staging": ${arr(staging)}, """ +
+        s""""streaming": ${arr(streaming)}}"""
     }.mkString(",\n")
     fullJson ++= "\n  }\n}\n"
     val sidecarBytes = fullJson.toString.getBytes("UTF-8")

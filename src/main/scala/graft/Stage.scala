@@ -38,9 +38,7 @@ class Stage(tmpParent: Path, shmParent: Option[Path]) {
 
   private val cells =
     new java.util.concurrent.ConcurrentHashMap[(String, Any), Cell]()
-  private val events =
-    new java.util.concurrent.ConcurrentLinkedQueue[Stage.Event]()
-  private val nEvents = new java.util.concurrent.atomic.AtomicInteger()
+  private val events = new EventLog[Stage.Event](4096)
 
   def apply[A](fact: String, key: Any)(write: String => Option[A])
       : Option[A] = {
@@ -68,7 +66,7 @@ class Stage(tmpParent: Path, shmParent: Option[Path]) {
         true
       }
     }
-    record(Stage.Event(fact, key.toString, cell.bytes,
+    events.record(Stage.Event(fact, key.toString, cell.bytes,
       (System.nanoTime() - t0) / 1e6, hit = !miss))
     cell.value.asInstanceOf[Option[A]]
   }
@@ -82,16 +80,7 @@ class Stage(tmpParent: Path, shmParent: Option[Path]) {
   def scratch(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
   /** The events recorded since the last drain, oldest first. */
-  def drainEvents(): Seq[Stage.Event] =
-    Iterator.continually(events.poll()).takeWhile(_ != null)
-      .map { e => nEvents.decrementAndGet(); e }.toSeq
-
-  private def record(e: Stage.Event): Unit = {
-    events.add(e)
-    // undrained events stay bounded: the oldest go first
-    if (nEvents.incrementAndGet() > Stage.MaxEvents && events.poll() != null)
-      nEvents.decrementAndGet()
-  }
+  def drainEvents(): Seq[Stage.Event] = events.drain()
 
   private var roots = List.empty[Path]
 
@@ -124,8 +113,6 @@ object Stage extends Stage(
   final case class Event(fact: String, key: String, bytes: Long,
                          ms: Double, hit: Boolean)
 
-  private val MaxEvents = 4096
-
   private def walk[A](p: Path)(f: java.util.stream.Stream[Path] => A): A = {
     val s = Files.walk(p)
     try f(s) finally s.close()
@@ -139,4 +126,22 @@ object Stage extends Stage(
   private def delete(p: Path): Unit = scala.util.Try(
     walk(p)(_.sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(f => Files.deleteIfExists(f))))
+}
+
+/** A bounded in-memory event log for the bench sidecar: `record` is safe
+  * from any thread, and `drain` hands back the events recorded since the
+  * last drain, oldest first. Past `max` undrained events the oldest are
+  * dropped, so an undrained log stays small. */
+final class EventLog[A](max: Int) {
+  private val events = new java.util.concurrent.ConcurrentLinkedQueue[A]()
+  private val n = new java.util.concurrent.atomic.AtomicInteger()
+
+  def record(e: A): Unit = {
+    events.add(e)
+    if (n.incrementAndGet() > max && events.poll() != null) n.decrementAndGet()
+  }
+
+  def drain(): Seq[A] =
+    Iterator.continually(events.poll()).takeWhile(_ != null)
+      .map { e => n.decrementAndGet(); e }.toSeq
 }

@@ -695,4 +695,79 @@ class StreamingSpec extends SparkTestBase {
       .windowedAggReplay(spark, sfDir).collect().toSeq
     assert(a == b, s"qs23 diverged from qs3: ${a.take(3)} vs ${b.take(3)}")
   }
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary)
+      .map(_.name).toSet
+
+  test("replay runner: after a normal arm and after a drain whose " +
+    "transform throws on a row, no query is left active and no temp " +
+    "view the run created is left") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import graft.streaming.StreamingReplay
+    val before = tempViews()
+    StreamingReplay.windowedAggReplay(spark, sfDir).collect()
+    assert(spark.streams.active.isEmpty, "a replay query is still active")
+    assert(tempViews() == before, s"views left: ${tempViews() -- before}")
+
+    val d = java.nio.file.Files.createTempDirectory("throwing").toString
+    spark.range(5).write.mode("overwrite").parquet(d)
+    val boom = udf((x: Long) =>
+      if (x == 3L) throw new IllegalStateException("planted") else x)
+    val e = intercept[Exception] {
+      StreamingReplay.replay(spark, "qthrow") {
+        spark.readStream.schema("id BIGINT").parquet(d)
+          .select(boom(col("id")).as("id"))
+      }
+    }
+    assert(e.toString.contains("planted") ||
+      Option(e.getCause).exists(_.toString.contains("planted")), s"$e")
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    assert(tempViews() == before, s"views left: ${tempViews() -- before}")
+  }
+
+  test("replay conf scope: shuffle partitions, batch retention, " +
+    "checkpoint checksums and the state store provider get their prior " +
+    "values back, whether they were set or unset before the run") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.minBatchesToRetain",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    try {
+      spark.conf.set(keys(0), "3")
+      spark.conf.set(keys(1), "7")
+      spark.conf.unset(keys(2))
+      spark.conf.unset(keys(3))
+      // the RocksDB arm sets all four keys for its start
+      graft.streaming.StreamingReplay
+        .transformWithStateReplay(spark, sfDir).collect()
+      val after = spark.conf.getAll
+      assert(after.get(keys(0)).contains("3"))
+      assert(after.get(keys(1)).contains("7"))
+      assert(!after.contains(keys(2)), after.get(keys(2)))
+      assert(!after.contains(keys(3)), after.get(keys(3)))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("replay runner: each drained micro-batch is recorded under its " +
+    "query's name with its phase times, for the bench sidecar") {
+    import graft.streaming.StreamingReplay
+    StreamingReplay.drainBatches()
+    StreamingReplay.windowedAggReplay(spark, sfDir).collect()
+    val batches = StreamingReplay.drainBatches()
+    assert(batches.map(_.batchId) == batches.indices.map(_.toLong),
+      s"batches: $batches")
+    assert(batches.forall(_.query.startsWith("qs3_replay_")), s"$batches")
+    // 2 data batches (3 chunks at 2 files per trigger) + the flush batch
+    assert(batches.map(_.inputRows > 0) == Seq(true, true, false),
+      s"batches: $batches")
+    assert(batches.forall(b => b.durationMs.contains("addBatch") &&
+      b.durationMs.contains("queryPlanning")), s"$batches")
+    assert(batches.forall(_.stateCommitMs.size == 1), s"$batches")
+    assert(StreamingReplay.drainBatches().isEmpty)
+  }
 }
