@@ -5,13 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.meos.NativeExpressions
+import graft.meos.NativeExpressions.literalInt
 
 /** Deployment entry point: install the engine's native SQL functions via
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`) — no driver code needed.
-  * UDF-backed codec functions still register per-session through
-  * [[graft.meos.MeosFunctions.register]] (UDFs bind to a session registry,
-  * not the extension function injection point).
+  * The trip codec (WKB/HexWKB encode and decode, WKT print, value-at) is
+  * injected from [[graft.meos.NativeExpressions.codecFunctions]], the same
+  * native builders [[graft.meos.MeosFunctions.register]] binds per session;
+  * the rest of the MEOS surface there (parse, MF-JSON, boxes, the legacy
+  * WKB layout) is still UDF-backed and registers only per session (UDFs
+  * bind to a session registry, not the extension injection point).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -32,33 +36,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "float_dot(a, b) - allocation-free double dot product of float arrays"),
       (exprs: Seq[Expression]) =>
         NativeExpressions.FloatDotExpr(exprs.head, exprs(1))))
-    // native WKB codec legs under their MEOS names — extension sessions
-    // get the codegen'd expressions; the per-session UDF registry
-    // (MeosFunctions.register) remains available for the legacy variants
-    e.injectFunction((
-      FunctionIdentifier("tgeompoint_as_wkb"),
-      info("tgeompoint_as_wkb",
-        "tgeompoint_as_wkb(v) - MobilityDB-layout WKB bytes"),
-      (exprs: Seq[Expression]) =>
-        NativeExpressions.TGeompointAsWkbExpr(exprs.head, hex = false)))
-    e.injectFunction((
-      FunctionIdentifier("tgeompoint_as_hexwkb"),
-      info("tgeompoint_as_hexwkb",
-        "tgeompoint_as_hexwkb(v) - MobilityDB-layout hex WKB"),
-      (exprs: Seq[Expression]) =>
-        NativeExpressions.TGeompointAsWkbExpr(exprs.head, hex = true)))
-    e.injectFunction((
-      FunctionIdentifier("tgeompoint_from_wkb"),
-      info("tgeompoint_from_wkb",
-        "tgeompoint_from_wkb(b) - decode MobilityDB-layout WKB bytes"),
-      (exprs: Seq[Expression]) =>
-        NativeExpressions.TGeompointFromWkbExpr(exprs.head, hex = false)))
-    e.injectFunction((
-      FunctionIdentifier("tgeompoint_from_hexwkb"),
-      info("tgeompoint_from_hexwkb",
-        "tgeompoint_from_hexwkb(s) - decode MobilityDB-layout hex WKB"),
-      (exprs: Seq[Expression]) =>
-        NativeExpressions.TGeompointFromWkbExpr(exprs.head, hex = true)))
+    // the trip codec (WKB/HexWKB encode and decode, WKT print, value-at)
+    // under its MEOS names — the same builders MeosFunctions.register binds
+    NativeExpressions.codecFunctions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name), info(name, usage), build))
+    }
     e.injectFunction((
       FunctionIdentifier("float_l2sq"),
       info("float_l2sq",
@@ -69,41 +51,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL names, so `spark.sql("SELECT shingle_hashes(toks, 13) ...")`
     // works in an extensions-configured session with no Scala imports.
     // Int parameters arrive as foldable literals and are evaluated at
-    // registration (the kernels take them as constructor params) — guard
-    // both properties so SQL like `shingle_hashes(toks, k)` with k a
-    // COLUMN fails with a readable message instead of an NPE deep in eval.
-    def intArg(e: Expression): Int = {
-      if (!e.foldable)
-        throw new IllegalArgumentException(
-          s"parameter '${e.sql}' must be a literal integer " +
-            "(it configures the kernel at plan time and cannot vary per row)")
-      e.eval(null) match {
-        case n: Number => n.intValue()
-        case other =>
-          throw new IllegalArgumentException(
-            s"parameter '${e.sql}' must be a literal integer, " +
-              s"got ${if (other == null) "NULL" else other.toString}")
-      }
-    }
+    // registration (the kernels take them as constructor params); a
+    // column there fails with literalInt's readable message.
     e.injectFunction((
       FunctionIdentifier("minhash_bands"),
       info("minhash_bands",
         "minhash_bands(shingles, bands) - seeded-md5 minhash band keys"),
       (exprs: Seq[Expression]) =>
-        NativeExpressions.MinhashBandsExpr(exprs.head, intArg(exprs(1)))))
+        NativeExpressions.MinhashBandsExpr(exprs.head, literalInt(exprs(1)))))
     e.injectFunction((
       FunctionIdentifier("minhash_shingle_bands"),
       info("minhash_shingle_bands",
         "minhash_shingle_bands(toks, k, bands) - fused k-shingle + minhash bands"),
       (exprs: Seq[Expression]) =>
         NativeExpressions.MinhashShingleBandsExpr(exprs.head,
-          intArg(exprs(1)), intArg(exprs(2)))))
+          literalInt(exprs(1)), literalInt(exprs(2)))))
     e.injectFunction((
       FunctionIdentifier("shingle_hashes"),
       info("shingle_hashes",
         "shingle_hashes(toks, k) - 60-bit md5 key of every k-gram"),
       (exprs: Seq[Expression]) =>
-        NativeExpressions.ShingleHashesExpr(exprs.head, intArg(exprs(1)))))
+        NativeExpressions.ShingleHashesExpr(exprs.head, literalInt(exprs(1)))))
     e.injectFunction((
       FunctionIdentifier("simhash32"),
       info("simhash32",

@@ -6,9 +6,13 @@ import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Column-level API + SQL registration for the MEOS value algebra — the
-  * UDF/UDAF surface of SURVEY.md §2.10. Parse/print/codec functions are
-  * scalar UDFs over the open struct encodings (v1; promotion to codegen'd
-  * Catalyst `Expression`s is the §7.1/PR-4 perf path if BENCH demands).
+  * UDF/UDAF surface of SURVEY.md §2.10, over the open struct encodings.
+  * The trip codec — WKB/HexWKB encode and decode, WKT print and value-at —
+  * runs on native Catalyst expressions only: its column functions are
+  * thin calls into [[NativeExpressions]], and [[register]] binds its SQL
+  * names to the same native builders ([[NativeExpressions.codecFunctions]]).
+  * Parse, MF-JSON, normalize, the boxes, the accessors and the legacy WKB
+  * layout remain scalar UDFs.
   *
   * SQL names mirror the MEOS C entry points the reference binds:
   * `tgeompoint_in` (`meos/src/tinst.rs:24`), `tsequence_out` →
@@ -89,8 +93,6 @@ object MeosFunctions {
     java.time.ZoneId.of(
       org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
 
-  private val printUdf = udf((v: Row, maxdd: Int) =>
-    TGeom.print(valFromRow(v), maxdd, sessionZone))
   // full reference surface: temporal_as_mfjson(temp, with_bbox, variant,
   // precision, srs) — variant bit0 spaced, bit1 pretty (json-c flags;
   // the raw test passes 3, tests/01_hello_world.rs:18)
@@ -98,15 +100,11 @@ object MeosFunctions {
     (v: Row, withBbox: Boolean, variant: Int, precision: Int, srs: String) =>
       TGeom.toMfJson(valFromRow(v), withBbox, precision, variant, srs,
         sessionZone))
-  // default binary codec = MobilityDB-layout extended WKB (MobilityWkb);
-  // the round-1 self-described layout stays reachable as *_legacy
   // MF-JSON parse leg (no reference counterpart — the reference only
   // prints, temp.rs:17-19; this closes the codec matrix)
   private val fromMfJsonUdf = udf((s: String) => TGeom.fromMfJson(s))
-  private val wkbUdf = udf((v: Row) => TGeom.toWkb(valFromRow(v)))
-  private val hexWkbUdf = udf((v: Row) => TGeom.toHexWkb(valFromRow(v)))
-  private val fromWkbUdf = udf((b: Array[Byte]) => TGeom.fromWkb(b))
-  private val fromHexWkbUdf = udf((s: String) => TGeom.fromHexWkb(s))
+  // the default binary codec (MobilityDB-layout extended WKB) is native;
+  // the round-1 self-described layout stays reachable as *_legacy UDFs
   private val wkbLegacyUdf = udf((v: Row) => TGeom.toWkbLegacy(valFromRow(v)))
   private val hexWkbLegacyUdf =
     udf((v: Row) => TGeom.toHexWkbLegacy(valFromRow(v)))
@@ -114,10 +112,6 @@ object MeosFunctions {
     udf((b: Array[Byte]) => TGeom.fromWkbLegacy(b))
   private val fromHexWkbLegacyUdf =
     udf((s: String) => TGeom.fromHexWkbLegacy(s))
-
-  case class XY(x: Double, y: Double)
-  private val valueAtUdf = udf((v: Row, at: java.sql.Timestamp) =>
-    TGeom.valueAt(valFromRow(v), at.toInstant).map(p => XY(p._1, p._2)))
 
   private val tboxInUdf =
     udf((wkt: String) => BoxText.parseTBox(wkt, sessionZone))
@@ -151,22 +145,26 @@ object MeosFunctions {
   def tgeompointSeqSetIn(wkt: Column): Column = parseSetUdf(wkt)
   def tgeompointNormalize(v: Column): Column = normalizeUdf(v)
   def tgeompointOut(v: Column, maxdd: Int = 15): Column =
-    printUdf(v, lit(maxdd))
+    NativeExpressions.tgeompointOut(v, maxdd)
   def tgeompointAsMfJson(v: Column, withBbox: Boolean = true,
                          precision: Int = 6, variant: Int = 0,
                          srs: String = null): Column =
     mfJsonUdf(v, lit(withBbox), lit(variant), lit(precision),
       lit(srs).cast("string"))
   def tgeompointFromMfJson(s: Column): Column = fromMfJsonUdf(s)
-  def tgeompointAsWkb(v: Column): Column = wkbUdf(v)
-  def tgeompointAsHexWkb(v: Column): Column = hexWkbUdf(v)
-  def tgeompointFromWkb(b: Column): Column = fromWkbUdf(b)
-  def tgeompointFromHexWkb(s: Column): Column = fromHexWkbUdf(s)
+  def tgeompointAsWkb(v: Column): Column = NativeExpressions.tgeompointAsWkb(v)
+  def tgeompointAsHexWkb(v: Column): Column =
+    NativeExpressions.tgeompointAsHexWkb(v)
+  def tgeompointFromWkb(b: Column): Column =
+    NativeExpressions.tgeompointFromWkb(b)
+  def tgeompointFromHexWkb(s: Column): Column =
+    NativeExpressions.tgeompointFromHexWkb(s)
   def tgeompointAsWkbLegacy(v: Column): Column = wkbLegacyUdf(v)
   def tgeompointAsHexWkbLegacy(v: Column): Column = hexWkbLegacyUdf(v)
   def tgeompointFromWkbLegacy(b: Column): Column = fromWkbLegacyUdf(b)
   def tgeompointFromHexWkbLegacy(s: Column): Column = fromHexWkbLegacyUdf(s)
-  def tgeompointValueAt(v: Column, at: Column): Column = valueAtUdf(v, at)
+  def tgeompointValueAt(v: Column, at: Column): Column =
+    NativeExpressions.tgeompointValueAt(v, at)
 
   /** Deep value equality (`temporal_eq`, guarded by same-subtype check in
     * the reference, `tinst.rs:53-57`): the struct encoding makes Spark's
@@ -198,8 +196,13 @@ object MeosFunctions {
   def tgeompointStartTs(v: Column): Column = startTsUdf(v)
   def tgeompointNumInstants(v: Column): Column = numInstantsUdf(v)
 
-  /** Register the whole surface for SQL use. */
+  /** Register the whole surface for SQL use: the trip codec's native
+    * builders as session functions, the rest as UDFs. */
   def register(spark: SparkSession): Unit = {
+    NativeExpressions.codecFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "built-in")
+    }
     spark.udf.register("tgeompoint_start_timestamptz", startTsUdf)
     spark.udf.register("tgeompoint_num_instants", numInstantsUdf)
     spark.udf.register("tgeompoint_in", parseUdf)
@@ -208,17 +211,11 @@ object MeosFunctions {
     spark.udf.register("tgeompoint_seq_in", parseSeqUdf)
     spark.udf.register("tgeompoint_seqset_in", parseSetUdf)
     spark.udf.register("tgeompoint_normalize", normalizeUdf)
-    spark.udf.register("tgeompoint_out", printUdf)
     spark.udf.register("tgeompoint_as_mfjson", mfJsonUdf)
-    spark.udf.register("tgeompoint_as_wkb", wkbUdf)
-    spark.udf.register("tgeompoint_as_hexwkb", hexWkbUdf)
-    spark.udf.register("tgeompoint_from_wkb", fromWkbUdf)
-    spark.udf.register("tgeompoint_from_hexwkb", fromHexWkbUdf)
     spark.udf.register("tgeompoint_as_wkb_legacy", wkbLegacyUdf)
     spark.udf.register("tgeompoint_as_hexwkb_legacy", hexWkbLegacyUdf)
     spark.udf.register("tgeompoint_from_wkb_legacy", fromWkbLegacyUdf)
     spark.udf.register("tgeompoint_from_hexwkb_legacy", fromHexWkbLegacyUdf)
-    spark.udf.register("tgeompoint_value_at", valueAtUdf)
     spark.udf.register("tbox_in", tboxInUdf)
     spark.udf.register("tbox_out", tboxOutUdf)
     spark.udf.register("stbox_in", stboxInUdf)

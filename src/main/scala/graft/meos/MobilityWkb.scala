@@ -136,7 +136,18 @@ object MobilityWkb {
     java.util.Arrays.copyOf(buf.array(), buf.position())
   }
 
-  def fromWkb(bytes: Array[Byte]): Val = {
+  /** Decode; a buffer that ends inside the value is a [[TGeom.ParseError]]
+    * (trailing bytes after a complete value are ignored). */
+  def fromWkb(bytes: Array[Byte]): Val =
+    try decode(bytes)
+    catch {
+      case _: java.nio.BufferUnderflowException |
+           _: ArrayIndexOutOfBoundsException =>
+        throw new TGeom.ParseError(
+          s"truncated WKB: the value runs past its ${bytes.length} bytes")
+    }
+
+  private def decode(bytes: Array[Byte]): Val = {
     val order = bytes(0) match {
       case 0x01 => ByteOrder.LITTLE_ENDIAN
       case 0x00 => ByteOrder.BIG_ENDIAN

@@ -188,8 +188,8 @@ object PqBridge {
   * without an encoder round-trip. Top-level for janino visibility (see
   * [[TGeomBridge]]). */
 object TGeomOutBridge {
-  import org.apache.spark.sql.types.{ArrayType, StructType}
-  import org.apache.spark.sql.catalyst.util.ArrayData
+  import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
   /** Ordinal map resolved from the input struct type at plan time. */
   case class Layout(subtype: Int, srid: Int, interp: Int, sequences: Int,
@@ -246,32 +246,233 @@ object TGeomOutBridge {
     UTF8String.fromString(TGeom.print(toVal(row, l), maxdd,
       java.time.ZoneId.of(
         org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)))
+
+  /** The value-at result type: an (x, y) point, null where the temporal
+    * value is undefined. */
+  val pointType: StructType = StructType(Seq(
+    StructField("x", DoubleType, nullable = false),
+    StructField("y", DoubleType, nullable = false)))
+
+  /** [[TGeom.valueAt]] read in place: the instants are visited where they
+    * lie in the row, nothing is converted. Same walk, same arithmetic:
+    * the first sequence that defines a value at `atUs` (µs since the
+    * epoch) answers; Discrete/None match exact instants only, Step holds
+    * the value at or before `atUs`, Linear interpolates between the
+    * bracketing instants, bounds inclusivity decides the ends; a sequence
+    * without instants covers nothing. */
+  def valueAt(row: InternalRow, l: Layout, atUs: Long): InternalRow = {
+    val seqs = row.getArray(l.sequences)
+    var i = 0
+    while (i < seqs.numElements()) {
+      val q = seqs.getStruct(i, l.nSeqFields)
+      val insts = q.getArray(l.seqInstants)
+      val n = insts.numElements()
+      def inst(k: Int): InternalRow = insts.getStruct(k, l.nInstFields)
+      def point(r: InternalRow): InternalRow =
+        new GenericInternalRow(Array[Any](r.getDouble(l.instX),
+          r.getDouble(l.instY)))
+      if (n > 0) q.getInt(l.seqInterp) match {
+        case Temporal.InterpDiscrete | Temporal.InterpNone =>
+          var k = 0
+          while (k < n) {
+            val r = inst(k)
+            if (r.getLong(l.instT) == atUs) return point(r)
+            k += 1
+          }
+        case interp =>
+          val first = inst(0).getLong(l.instT)
+          val last = inst(n - 1).getLong(l.instT)
+          val inLower =
+            if (q.getBoolean(l.seqLo)) atUs >= first else atUs > first
+          val inUpper =
+            if (q.getBoolean(l.seqHi)) atUs <= last else atUs < last
+          if (inLower && inUpper) {
+            var k = 0
+            var a = inst(0)
+            var next = if (n > 1) inst(1) else null
+            while (k < n - 1 && next.getLong(l.instT) <= atUs) {
+              k += 1
+              a = next
+              next = if (k < n - 1) inst(k + 1) else null
+            }
+            val aT = a.getLong(l.instT)
+            if (aT == atUs) return point(a)
+            else if (k < n - 1) {
+              if (interp == Temporal.InterpStep) return point(a)
+              val f = (atUs - aT).toDouble / (next.getLong(l.instT) - aT)
+              val ax = a.getDouble(l.instX)
+              val ay = a.getDouble(l.instY)
+              return new GenericInternalRow(Array[Any](
+                ax + f * (next.getDouble(l.instX) - ax),
+                ay + f * (next.getDouble(l.instY) - ay)))
+            }
+          }
+      }
+      i += 1
+    }
+    null
+  }
 }
 
-/** Executor-side bridge for the native WKB codec expressions: encode
+/** Executor-side bridge for the native WKB codec expressions. Encode
   * reads the temporal-value struct field-by-ordinal via
-  * [[TGeomOutBridge.toVal]] (schema-adaptive, no Row boxing), decode
-  * reuses the per-thread serializer discipline of [[TGeomBridge]].
+  * [[TGeomOutBridge.toVal]] (schema-adaptive, no Row boxing).
+  *
+  * Decode is one pass with no intermediate model: the WKB bytes — or, for
+  * HexWKB, the `UTF8String`'s own bytes, two digits per byte — are read
+  * in order and written straight into an `UnsafeRow` of
+  * [[TGeomBridge.valDataType]] with Spark's `UnsafeRowWriter` /
+  * `UnsafeArrayWriter`. Layout, flags, interpolation, bounds and the PG
+  * epoch follow [[MobilityWkb]] exactly, and hex digits go through
+  * [[TGeom.hexByte]], so a value decodes — or is rejected with a
+  * [[TGeom.ParseError]] — the same way as by [[TGeom.fromHexWkb]].
   * Top-level for janino visibility (see [[TGeomBridge]]). */
 object WkbBridge {
+  import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+  import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
+  import MobilityWkb.Codes
+
   def toWkb(row: InternalRow, l: TGeomOutBridge.Layout): Array[Byte] =
     TGeom.toWkb(TGeomOutBridge.toVal(row, l))
 
   def toHexWkb(row: InternalRow, l: TGeomOutBridge.Layout): UTF8String =
     UTF8String.fromString(TGeom.toHexWkb(TGeomOutBridge.toVal(row, l)))
 
-  private val serializer =
-    ThreadLocal.withInitial(() => {
-      val enc = ExpressionEncoder(Encoders.product[TGeom.Val]
-        .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[TGeom.Val]])
-      enc.createSerializer()
-    })
+  def fromWkb(b: Array[Byte]): InternalRow = decode(new In(b, null, b.length))
 
-  def fromWkb(b: Array[Byte]): InternalRow =
-    serializer.get()(TGeom.fromWkb(b)).copy()
+  def fromHexWkb(s: UTF8String): InternalRow = {
+    val n = s.numBytes
+    TGeom.checkHexLength(n)
+    val in = new In(null, s, n / 2)
+    val row = decode(in)
+    // a complete value may be followed by bytes nobody reads (as in
+    // MobilityWkb.fromWkb); they must still be spelled in hex
+    while (in.pos < in.size) in.u8()
+    row
+  }
 
-  def fromHexWkb(s: UTF8String): InternalRow =
-    serializer.get()(TGeom.fromHexWkb(s.toString)).copy()
+  /** Field ordinals of the decoded struct. */
+  private val L = TGeomOutBridge.layoutOf(TGeomBridge.valDataType)
+  private val NTopFields =
+    TGeomBridge.valDataType.asInstanceOf[org.apache.spark.sql.types.StructType].size
+
+  /** Sequential little/big-endian reader over WKB bytes, or over the hex
+    * digits spelling them (`hex != null`; byte i is digits 2i, 2i+1). */
+  private final class In(bytes: Array[Byte], hex: UTF8String, val size: Int) {
+    var pos = 0
+    var littleEndian = true
+
+    def remaining: Int = size - pos
+
+    def u8(): Int = {
+      if (pos >= size)
+        throw new TGeom.ParseError(
+          s"truncated WKB: the value runs past its $size bytes")
+      val b =
+        if (hex == null) bytes(pos) & 0xff
+        else TGeom.hexByte(hex.getByte(2 * pos) & 0xff,
+          hex.getByte(2 * pos + 1) & 0xff, 2 * pos)
+      pos += 1
+      b
+    }
+
+    private def le(n: Int): Long = {
+      var v = 0L
+      var k = 0
+      while (k < n) { v |= u8().toLong << (8 * k); k += 1 }
+      v
+    }
+
+    private def be(n: Int): Long = {
+      var v = 0L
+      var k = 0
+      while (k < n) { v = (v << 8) | u8(); k += 1 }
+      v
+    }
+
+    def i16(): Int = (if (littleEndian) le(2) else be(2)).toShort.toInt
+    def i32(): Int = (if (littleEndian) le(4) else be(4)).toInt
+    def i64(): Long = if (littleEndian) le(8) else be(8)
+    def f64(): Double = java.lang.Double.longBitsToDouble(i64())
+
+    /** A count of items of at least `minBytes` each must fit in what is
+      * left — checked before any array is sized from it. */
+    def count(minBytes: Int): Int = {
+      val n = i32()
+      if (n < 0 || n.toLong * minBytes > remaining)
+        throw new TGeom.ParseError(
+          s"truncated WKB: count $n at offset ${pos - 4} does not fit in " +
+            s"the $size bytes")
+      n
+    }
+  }
+
+  private def decode(in: In): UnsafeRow = {
+    in.littleEndian = in.u8() match {
+      case 0x01 => true
+      case 0x00 => false
+      case o => throw new TGeom.ParseError(f"bad byte-order marker 0x$o%02x")
+    }
+    val temptype = in.i16()
+    if (temptype != Codes.TGeomPoint)
+      throw new TGeom.ParseError(s"unsupported temptype $temptype")
+    val flags = in.u8()
+    val subtype = flags & Codes.SubtypeMask
+    val hasZ = (flags & Codes.FlagZ) != 0
+    val srid = if ((flags & Codes.FlagSrid) != 0) in.i32() else 0
+    val interp =
+      if (subtype == TGeom.SubInstant) Temporal.InterpNone
+      else (flags & Codes.InterpMask) >> Codes.InterpShift
+    if (subtype < TGeom.SubInstant || subtype > TGeom.SubSequenceSet)
+      throw new TGeom.ParseError(s"bad subtype $subtype")
+    val instBytes = if (hasZ) 32 else 24
+
+    // a 2-D instant takes 40 row bytes, an 8-byte array slot and a null
+    // bit: a bit over twice its 24 WKB bytes. Sized so one sequence never
+    // outgrows the buffer (growing copies it into one twice as large);
+    // many short sequences still may
+    val top = new UnsafeRowWriter(NTopFields, 2 * in.size + in.size / 8 + 256)
+    top.resetRowWriter()
+    top.write(L.subtype, subtype)
+    top.write(L.srid, srid)
+    top.write(L.interp, interp)
+    val seqsAt = top.cursor()
+    val seqs = new UnsafeArrayWriter(top, 8)
+    val seqW = new UnsafeRowWriter(seqs, L.nSeqFields)
+    val insts = new UnsafeArrayWriter(seqW, 8)
+    val instW = new UnsafeRowWriter(insts, L.nInstFields)
+    val nSeq = if (subtype == TGeom.SubSequenceSet) in.count(5) else 1
+    seqs.initialize(nSeq)
+    var k = 0
+    while (k < nSeq) {
+      val seqAt = seqs.cursor()
+      seqW.resetRowWriter()
+      var n = 1
+      var bounds = Codes.LowerInc | Codes.UpperInc
+      if (subtype != TGeom.SubInstant) { n = in.count(instBytes); bounds = in.u8() }
+      val instsAt = seqW.cursor()
+      insts.initialize(n)
+      var j = 0
+      while (j < n) {
+        val instAt = insts.cursor()
+        instW.resetRowWriter()
+        instW.write(L.instX, in.f64())
+        instW.write(L.instY, in.f64())
+        if (hasZ) instW.write(L.instZ, in.f64()) else instW.setNullAt(L.instZ)
+        instW.write(L.instT, in.i64() + MobilityWkb.PgEpochUs)
+        insts.setOffsetAndSizeFromPreviousCursor(j, instAt)
+        j += 1
+      }
+      seqW.setOffsetAndSizeFromPreviousCursor(L.seqInstants, instsAt)
+      seqW.write(L.seqInterp, interp)
+      seqW.write(L.seqLo, (bounds & Codes.LowerInc) != 0)
+      seqW.write(L.seqHi, (bounds & Codes.UpperInc) != 0)
+      seqs.setOffsetAndSizeFromPreviousCursor(k, seqAt)
+      k += 1
+    }
+    top.setOffsetAndSizeFromPreviousCursor(L.sequences, seqsAt)
+    top.getRow
+  }
 }
 
 /** Executor-side bridge for [[NativeExpressions.Simhash32Expr]]: one
@@ -1034,7 +1235,8 @@ object NativeExpressions {
   }
 
   /** MobilityDB-layout WKB decode as a native expression
-    * (`temporal_from_wkb`/`temporal_from_hexwkb`, temp.rs:30-38). */
+    * (`temporal_from_wkb`/`temporal_from_hexwkb`, temp.rs:30-38): one
+    * pass from the input bytes into an `UnsafeRow` ([[WkbBridge]]). */
   case class TGeompointFromWkbExpr(child: Expression, hex: Boolean)
       extends UnaryExpression with ExpectsInputTypes {
     override def dataType: DataType = TGeomBridge.valDataType
@@ -1058,6 +1260,102 @@ object NativeExpressions {
     override protected def withNewChildInternal(newChild: Expression)
         : TGeompointFromWkbExpr = copy(child = newChild)
   }
+
+  /** Value at a timestamp ([[TGeom.valueAt]]) as a native expression:
+    * the instants are read in place from the struct (ordinals resolved
+    * from the input schema at plan time, as in [[TGeompointOutExpr]]), no
+    * Row and no model is built. An (x, y) struct, null where the value is
+    * undefined or an input is null; the timestamp input is implicitly
+    * cast to TIMESTAMP like a UDF argument would be. */
+  case class TGeompointValueAtExpr(left: Expression, right: Expression)
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+      with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+    override def dataType: DataType = TGeomOutBridge.pointType
+    override def inputTypes: Seq[DataType] =
+      Seq(left.dataType, org.apache.spark.sql.types.TimestampType)
+    override def nullable: Boolean = true
+    override def prettyName: String = "tgeompoint_value_at"
+
+    @transient private lazy val layout =
+      TGeomOutBridge.layoutOf(left.dataType)
+
+    override def nullSafeEval(v: Any, at: Any): Any =
+      TGeomOutBridge.valueAt(v.asInstanceOf[InternalRow], layout,
+        at.asInstanceOf[Long])
+
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val layoutRef = ctx.addReferenceObj("valueAtLayout", layout,
+        classOf[TGeomOutBridge.Layout].getName)
+      nullSafeCodeGen(ctx, ev, (v, at) =>
+        s"${ev.value} = graft.meos.TGeomOutBridge.valueAt($v, $layoutRef, " +
+          s"$at);\n${ev.isNull} = ${ev.value} == null;")
+    }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): TGeompointValueAtExpr =
+      copy(left = newLeft, right = newRight)
+  }
+
+  def tgeompointValueAt(v: Column, at: Column): Column = {
+    import org.apache.spark.sql.GraftShims
+    GraftShims.column(TGeompointValueAtExpr(GraftShims.expression(v),
+      GraftShims.expression(at)))
+  }
+
+  /** The Int value of a literal SQL argument that configures an
+    * expression at plan time — a column or a non-integer is rejected with
+    * a readable message instead of an NPE deep in eval. */
+  def literalInt(e: Expression): Int = {
+    if (!e.foldable)
+      throw new IllegalArgumentException(
+        s"parameter '${e.sql}' must be a literal integer " +
+          "(it configures the kernel at plan time and cannot vary per row)")
+    e.eval(null) match {
+      case n: Number => n.intValue()
+      case other =>
+        throw new IllegalArgumentException(
+          s"parameter '${e.sql}' must be a literal integer, " +
+            s"got ${if (other == null) "NULL" else other.toString}")
+    }
+  }
+
+  /** A SQL function entry: (name, usage, builder that checks the
+    * argument count before building). */
+  private def sqlFunction(name: String, usage: String, min: Int, max: Int)(
+      build: Seq[Expression] => Expression)
+      : (String, String, Seq[Expression] => Expression) =
+    (name, s"$name$usage", args => {
+      if (args.size < min || args.size > max)
+        throw new IllegalArgumentException(
+          s"$name takes ${if (min == max) s"$min" else s"$min to $max"} " +
+            s"arguments, got ${args.size}")
+      build(args)
+    })
+
+  /** The trip codec's SQL functions — (name, usage, native builder) —
+    * bound by [[graft.GraftExtensions]] in extension sessions and by
+    * [[MeosFunctions.register]] as per-session functions: one
+    * implementation behind each name. */
+  val codecFunctions: Seq[(String, String, Seq[Expression] => Expression)] =
+    Seq(
+      sqlFunction("tgeompoint_as_wkb", "(v) - MobilityDB-layout WKB bytes",
+        1, 1)(a => TGeompointAsWkbExpr(a.head, hex = false)),
+      sqlFunction("tgeompoint_as_hexwkb", "(v) - MobilityDB-layout hex WKB",
+        1, 1)(a => TGeompointAsWkbExpr(a.head, hex = true)),
+      sqlFunction("tgeompoint_from_wkb",
+        "(b) - decode MobilityDB-layout WKB bytes", 1, 1)(a =>
+        TGeompointFromWkbExpr(a.head, hex = false)),
+      sqlFunction("tgeompoint_from_hexwkb",
+        "(s) - decode MobilityDB-layout hex WKB", 1, 1)(a =>
+        TGeompointFromWkbExpr(a.head, hex = true)),
+      sqlFunction("tgeompoint_out",
+        "(v[, maxdd]) - MEOS WKT text, maxdd (default 15) fraction digits",
+        1, 2)(a =>
+        TGeompointOutExpr(a.head, if (a.size > 1) literalInt(a(1)) else 15)),
+      sqlFunction("tgeompoint_value_at",
+        "(v, t) - (x, y) at timestamp t, null where undefined", 2, 2)(a =>
+        TGeompointValueAtExpr(a.head, a(1))))
 
   def tgeompointAsWkb(v: Column): Column = {
     import org.apache.spark.sql.GraftShims

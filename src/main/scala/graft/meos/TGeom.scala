@@ -1,7 +1,7 @@
 package graft.meos
 
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, LocalDate, LocalDateTime, OffsetDateTime, ZoneId, ZoneOffset}
+import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
 
 /** In-memory model + text/binary codecs for temporal geometry points —
   * the value algebra the reference exposes through MEOS FFI:
@@ -91,23 +91,82 @@ object TGeom {
   }
 
   private val TsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+  private val IsoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+
+  private def pad2(sb: java.lang.StringBuilder, v: Int): Unit =
+    sb.append(('0' + v / 10).toChar).append(('0' + v % 10).toChar)
 
   /** Postgres-style short offset: `+00`, `-05`, `+05:30` (minutes only when
-    * nonzero — matches MEOS goldens `2001-01-01 00:00:00-05`, tbox.rs:138). */
+    * nonzero — matches MEOS goldens `2001-01-01 00:00:00-05`, tbox.rs:138).
+    * Offset seconds (pre-1900 LMT zones) are dropped. */
   private def fmtOffset(o: ZoneOffset): String = {
     val tot = o.getTotalSeconds
-    val sign = if (tot < 0) "-" else "+"
     val a = math.abs(tot)
+    val sb = new java.lang.StringBuilder(6).append(if (tot < 0) '-' else '+')
+    pad2(sb, a / 3600)
     val mm = (a % 3600) / 60
-    f"$sign${a / 3600}%02d" + (if (mm != 0) f":$mm%02d" else "")
+    if (mm != 0) pad2(sb.append(':'), mm)
+    sb.toString
   }
 
-  /** Micros-of-second with trailing zeros stripped; "" when zero. Sub-µs
-    * nanos are truncated first — MEOS resolution is µs, and stripping zeros
-    * from a '000000' fraction would otherwise leave a dangling dot. */
-  private def fmtFrac(t: Instant): String = {
-    val us = t.getNano / 1000
-    if (us == 0) "" else "." + f"$us%06d".reverse.dropWhile(_ == '0').reverse
+  /** Micros-of-second with trailing zeros stripped; nothing when zero.
+    * Sub-µs nanos are truncated first — MEOS resolution is µs, and
+    * stripping zeros from a '000000' fraction would otherwise leave a
+    * dangling dot. */
+  private def appendFrac(sb: java.lang.StringBuilder, t: Instant): Unit = {
+    var us = t.getNano / 1000
+    if (us != 0) {
+      var width = 6 // digits left after stripping, leading zeros included
+      while (us % 10 == 0) { us /= 10; width -= 1 }
+      var len = 1
+      var rest = us / 10
+      while (rest > 0) { len += 1; rest /= 10 }
+      sb.append('.')
+      while (width > len) { sb.append('0'); width -= 1 }
+      sb.append(us)
+    }
+  }
+
+  /** Timestamp printer for one zone, reused across the instants of one
+    * print: the offset text is computed once for a fixed-offset zone and
+    * only when the offset changes otherwise (DST zones), and the date and
+    * time fields are written without a `DateTimeFormatter` for years
+    * 1–9999 (outside that range the formatter's sign/era rules apply). */
+  private final class TsPrinter(zone: ZoneId, sep: Char) {
+    private val rules = zone.getRules
+    private var off: ZoneOffset =
+      if (rules.isFixedOffset) rules.getOffset(Instant.EPOCH) else null
+    private var offText = if (off == null) null else fmtOffset(off)
+
+    def append(sb: java.lang.StringBuilder, t: Instant): Unit = {
+      if (!rules.isFixedOffset) {
+        val o = rules.getOffset(t)
+        if (off == null || o.getTotalSeconds != off.getTotalSeconds) {
+          off = o; offText = fmtOffset(o)
+        }
+      }
+      val ldt = LocalDateTime.ofEpochSecond(t.getEpochSecond, 0, off)
+      val y = ldt.getYear
+      if (y >= 1 && y <= 9999) {
+        sb.append((y / 1000 + '0').toChar)
+        sb.append((y / 100 % 10 + '0').toChar)
+        pad2(sb, y % 100)
+        pad2(sb.append('-'), ldt.getMonthValue)
+        pad2(sb.append('-'), ldt.getDayOfMonth)
+        pad2(sb.append(sep), ldt.getHour)
+        pad2(sb.append(':'), ldt.getMinute)
+        pad2(sb.append(':'), ldt.getSecond)
+      } else
+        sb.append((if (sep == 'T') IsoFmt else TsFmt).format(ldt))
+      appendFrac(sb, t)
+      sb.append(offText)
+    }
+
+    def format(t: Instant): String = {
+      val sb = new java.lang.StringBuilder(32)
+      append(sb, t)
+      sb.toString
+    }
   }
 
   /** MEOS renders timestamptz in the session timezone with a short offset —
@@ -115,19 +174,13 @@ object TGeom {
     * to UTC (`+00`); pass the Spark session timezone to reproduce non-UTC
     * goldens. Sub-second micros printed only when nonzero. */
   def fmtTs(t: Instant): String = fmtTs(t, ZoneOffset.UTC)
-  def fmtTs(t: Instant, zone: ZoneId): String = {
-    val odt = OffsetDateTime.ofInstant(t, zone)
-    TsFmt.format(odt) + fmtFrac(t) + fmtOffset(odt.getOffset)
-  }
-
-  private val IsoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+  def fmtTs(t: Instant, zone: ZoneId): String =
+    new TsPrinter(zone, ' ').format(t)
 
   /** MF-JSON datetimes: ISO 'T' separator, same offset convention. */
   def fmtTsIso(t: Instant): String = fmtTsIso(t, ZoneOffset.UTC)
-  def fmtTsIso(t: Instant, zone: ZoneId): String = {
-    val odt = OffsetDateTime.ofInstant(t, zone)
-    IsoFmt.format(odt) + fmtFrac(t) + fmtOffset(odt.getOffset)
-  }
+  def fmtTsIso(t: Instant, zone: ZoneId): String =
+    new TsPrinter(zone, 'T').format(t)
 
   // ---- float text (MEOS min-digit printing: 1.0 → "1", tbox.rs:132-133) ---
 
@@ -245,24 +298,31 @@ object TGeom {
 
   // ---- WKT print -----------------------------------------------------------
 
-  private def fmtInstant(i: GInst, maxdd: Int, zone: ZoneId): String =
+  private def appendInstant(sb: java.lang.StringBuilder, i: GInst, maxdd: Int,
+                            ts: TsPrinter): Unit = {
     i.z match {
       case Some(zv) =>
-        s"POINT Z (${fmtFloat(i.x, maxdd)} ${fmtFloat(i.y, maxdd)} " +
-          s"${fmtFloat(zv, maxdd)})@" + fmtTs(i.t, zone)
+        sb.append("POINT Z (").append(fmtFloat(i.x, maxdd)).append(' ')
+          .append(fmtFloat(i.y, maxdd)).append(' ')
+          .append(fmtFloat(zv, maxdd))
       case None =>
-        s"POINT(${fmtFloat(i.x, maxdd)} ${fmtFloat(i.y, maxdd)})@" +
-          fmtTs(i.t, zone)
+        sb.append("POINT(").append(fmtFloat(i.x, maxdd)).append(' ')
+          .append(fmtFloat(i.y, maxdd))
     }
+    ts.append(sb.append(")@"), i.t)
+  }
 
-  private def fmtSeqBody(q: GSeq, maxdd: Int, zone: ZoneId): String = {
-    val body = q.instants.map(fmtInstant(_, maxdd, zone)).mkString(", ")
-    if (q.interp == Temporal.InterpDiscrete) s"{$body}"
-    else {
-      val lo = if (q.`lower_inc`) "[" else "("
-      val hi = if (q.`upper_inc`) "]" else ")"
-      s"$lo$body$hi"
+  private def appendSeq(sb: java.lang.StringBuilder, q: GSeq, maxdd: Int,
+                        ts: TsPrinter): Unit = {
+    val discrete = q.interp == Temporal.InterpDiscrete
+    sb.append(if (discrete) '{' else if (q.`lower_inc`) '[' else '(')
+    var first = true
+    q.instants.foreach { i =>
+      if (!first) sb.append(", ")
+      appendInstant(sb, i, maxdd, ts)
+      first = false
     }
+    sb.append(if (discrete) '}' else if (q.`upper_inc`) ']' else ')')
   }
 
   /** Print as MEOS WKT (`tsequence_out(maxdd)`, `tseq.rs:66-72`). The
@@ -272,18 +332,26 @@ object TGeom {
     * `2001-01-01 00:00:00-05`, tbox.rs:138); UTC default. */
   def print(v: Val, maxdd: Int = 15): String = print(v, maxdd, ZoneOffset.UTC)
   def print(v: Val, maxdd: Int, zone: ZoneId): String = {
-    val prefix =
-      (if (v.srid != 0) s"SRID=${v.srid};" else "") +
-        (if (v.interp == Temporal.InterpStep) "Interp=Step;" else "")
-    val body = v.subtype match {
+    val sb = new java.lang.StringBuilder(64)
+    if (v.srid != 0) sb.append("SRID=").append(v.srid).append(';')
+    if (v.interp == Temporal.InterpStep) sb.append("Interp=Step;")
+    val ts = new TsPrinter(zone, ' ')
+    v.subtype match {
       case SubInstant =>
-        fmtInstant(v.sequences.head.instants.head, maxdd, zone)
-      case SubSequence => fmtSeqBody(v.sequences.head, maxdd, zone)
+        appendInstant(sb, v.sequences.head.instants.head, maxdd, ts)
+      case SubSequence => appendSeq(sb, v.sequences.head, maxdd, ts)
       case SubSequenceSet =>
-        v.sequences.map(fmtSeqBody(_, maxdd, zone)).mkString("{", ", ", "}")
+        sb.append('{')
+        var first = true
+        v.sequences.foreach { q =>
+          if (!first) sb.append(", ")
+          appendSeq(sb, q, maxdd, ts)
+          first = false
+        }
+        sb.append('}')
       case o => fail(s"bad subtype $o")
     }
-    prefix + body
+    sb.toString
   }
 
   // ---- MF-JSON (OGC Moving Features JSON; MEOS `temporal_as_mfjson`) ------
@@ -355,8 +423,8 @@ object TGeom {
       Seq(JRaw(fmtFloat(i.x, precision)), JRaw(fmtFloat(i.y, precision))) ++
         i.z.map(zv => JRaw(fmtFloat(zv, precision))))))
 
-  private def datetimesJ(insts: Seq[GInst], zone: ZoneId): J =
-    JArr(insts.map(i => JStrV(fmtTsIso(i.t, zone))))
+  private def datetimesJ(insts: Seq[GInst], ts: TsPrinter): J =
+    JArr(insts.map(i => JStrV(ts.format(i.t))))
 
   /** Emit MF-JSON with the reference's full argument surface
     * (`temporal_as_mfjson(ptr, with_bbox, variant, precision, srs)`,
@@ -368,6 +436,7 @@ object TGeom {
                variant: Int = 0, srs: String = null,
                zone: ZoneId = ZoneOffset.UTC): String = {
     val all = v.sequences.flatMap(_.instants)
+    val ts = new TsPrinter(zone, 'T')
     val fields = Seq.newBuilder[(String, J)]
     fields += "type" -> JStrV("MovingGeomPoint")
     val crsName = Option(srs).orElse(
@@ -385,14 +454,14 @@ object TGeom {
         JArr(Seq(JRaw(fmtFloat(xs.max, precision)),
           JRaw(fmtFloat(ys.max, precision))))))
       fields += "period" -> JObjV(Seq(
-        "begin" -> JStrV(fmtTsIso(all.map(_.t).min, zone)),
-        "end" -> JStrV(fmtTsIso(all.map(_.t).max, zone))))
+        "begin" -> JStrV(ts.format(all.map(_.t).min)),
+        "end" -> JStrV(ts.format(all.map(_.t).max))))
     }
     v.subtype match {
       case SubInstant | SubSequence =>
         val q = v.sequences.head
         fields += "coordinates" -> coordsJ(q.instants, precision)
-        fields += "datetimes" -> datetimesJ(q.instants, zone)
+        fields += "datetimes" -> datetimesJ(q.instants, ts)
         if (v.subtype == SubSequence && v.interp != Temporal.InterpDiscrete) {
           fields += "lower_inc" -> JRaw(q.`lower_inc`.toString)
           fields += "upper_inc" -> JRaw(q.`upper_inc`.toString)
@@ -400,7 +469,7 @@ object TGeom {
       case SubSequenceSet =>
         fields += "sequences" -> JArr(v.sequences.map(q => JObjV(Seq(
           "coordinates" -> coordsJ(q.instants, precision),
-          "datetimes" -> datetimesJ(q.instants, zone),
+          "datetimes" -> datetimesJ(q.instants, ts),
           "lower_inc" -> JRaw(q.`lower_inc`.toString),
           "upper_inc" -> JRaw(q.`upper_inc`.toString)))))
       case _ =>
@@ -590,8 +659,52 @@ object TGeom {
   def toHexWkb(v: Val): String = toHex(toWkb(v))
   def toHexWkbLegacy(v: Val): String = toHex(toWkbLegacy(v))
 
-  private def unhex(hex: String): Array[Byte] =
-    hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+  /** Hex digit values (either case) by character code below 256; -1 for
+    * every other code. */
+  private val HexVal: Array[Byte] = Array.tabulate[Byte](256) { c =>
+    if (c >= '0' && c <= '9') (c - '0').toByte
+    else if (c >= 'A' && c <= 'F') (c - 'A' + 10).toByte
+    else if (c >= 'a' && c <= 'f') (c - 'a' + 10).toByte
+    else -1
+  }
+
+  private def hexDigit(c: Int): Int = if ((c & ~0xff) == 0) HexVal(c) else -1
+
+  /** The byte spelled by the hex digits `hi` `lo`, which sit at character
+    * offsets `at` and `at + 1` of a HexWKB text. Anything but two hex
+    * digits — a sign, a blank, a non-ASCII byte — is a [[ParseError]]
+    * naming the offending offset. Shared by [[fromHexWkb]] and the
+    * native decoder ([[WkbBridge]]), so both reject the same texts. */
+  private[meos] def hexByte(hi: Int, lo: Int, at: Int): Int = {
+    val h = hexDigit(hi)
+    val l = hexDigit(lo)
+    if ((h | l) < 0)
+      if (h < 0) badHexDigit(hi, at) else badHexDigit(lo, at + 1)
+    (h << 4) | l
+  }
+
+  private def badHexDigit(c: Int, at: Int): Nothing = {
+    val shown = if (c > 0x20 && c < 0x7f) s"'${c.toChar}'" else f"0x$c%02X"
+    fail(s"malformed HexWKB: $shown at offset $at is not a hex digit")
+  }
+
+  /** HexWKB spells each byte with two digits: an odd length is a
+    * [[ParseError]] at the unpaired last offset. */
+  private[meos] def checkHexLength(n: Int): Unit =
+    if ((n & 1) != 0)
+      fail(s"malformed HexWKB: odd length $n, offset ${n - 1} has no pair")
+
+  private def unhex(hex: String): Array[Byte] = {
+    val n = hex.length
+    checkHexLength(n)
+    val out = new Array[Byte](n / 2)
+    var i = 0
+    while (i < n) {
+      out(i >> 1) = hexByte(hex.charAt(i), hex.charAt(i + 1), i).toByte
+      i += 2
+    }
+    out
+  }
 
   def fromHexWkb(hex: String): Val = fromWkb(unhex(hex))
   def fromHexWkbLegacy(hex: String): Val = fromWkbLegacy(unhex(hex))
@@ -662,10 +775,10 @@ object TGeom {
     * parameters declare, `meos/src/tseq.rs:57-60`): Linear interpolates
     * between bracketing instants, Step holds the previous value, Discrete
     * matches exact instants only. None outside the (inclusive-respecting)
-    * domain. */
+    * domain; a sequence without instants covers no timestamp. */
   def valueAt(v: Val, at: Instant): Option[(Double, Double)] = {
     val atUs = usOf(at)
-    v.sequences.foreach { q =>
+    v.sequences.iterator.filter(_.instants.nonEmpty).foreach { q =>
       val n = q.instants.size
       val first = usOf(q.instants.head.t)
       val last = usOf(q.instants.last.t)

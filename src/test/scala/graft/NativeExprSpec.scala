@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.meos.{MeosFunctions, NativeExpressions}
+import org.apache.spark.sql.Row
 
-/** The native `tgeompoint_parse` expression: result parity with the UDF
-  * path, constant folding of literal WKT, and whole-stage codegen
-  * participation. */
+import graft.meos.{MeosFunctions, NativeExpressions, TGeom}
+
+/** The native expressions: result parity with an independent reference
+  * (the UDF parse, TGeom's driver-side codec for the trip codec, the
+  * composed built-in forms for the text kernels), constant folding of
+  * literal WKT, and whole-stage codegen participation. */
 class NativeExprSpec extends SparkTestBase {
 
   test("native parse == UDF parse on the six grammars") {
@@ -19,14 +22,18 @@ class NativeExprSpec extends SparkTestBase {
       "{[POINT(1 1)@2000-01-01, POINT(2 2)@2000-01-02], " +
         "[POINT(3 3)@2000-01-03, POINT(3 3)@2000-01-04]}",
       "SRID=4326;Point(-90.06 29.95)@2024-01-01T00:00:00+00").toDF("wkt")
-    val both = wkts.select(
+    val both = wkts.select(col("wkt"),
       MeosFunctions.tgeompointOut(
         NativeExpressions.tgeompointParse(col("wkt"))).as("native"),
       MeosFunctions.tgeompointOut(
         MeosFunctions.tgeompointIn(col("wkt"))).as("viaUdf"))
       .collect()
-    both.foreach(r =>
-      assert(r.getAs[String]("native") == r.getAs[String]("viaUdf")))
+    both.foreach { r =>
+      assert(r.getAs[String]("native") == r.getAs[String]("viaUdf"))
+      // the print leg is native on both sides: pin it to the driver codec
+      assert(r.getAs[String]("native") ==
+        TGeom.print(TGeom.parse(r.getAs[String]("wkt"))))
+    }
   }
 
   test("literal WKT constant-folds at plan time (foldable)") {
@@ -64,6 +71,8 @@ class NativeExprSpec extends SparkTestBase {
     assert(rows.forall(!_.isNullAt(0)))
   }
 
+  // The codec's column API is native only, so its reference leg is
+  // TGeom's driver-side codec on the same value, computed outside Spark.
   test("native WKB encode/decode == UDF legs, and compiles in codegen") {
     import spark.implicits._
     val wkts = Seq(
@@ -73,31 +82,27 @@ class NativeExprSpec extends SparkTestBase {
       "SRID=4326;[POINT Z(1 1 9)@2000-01-01, POINT Z(2 2 8)@2000-01-02]",
       "{[POINT(1 1)@2000-01-01, POINT(2 2)@2000-01-02], " +
         "[POINT(3 3)@2000-01-03]}").toDF("wkt")
-    val v = wkts.select(
+    val v = wkts.select(col("wkt"),
       NativeExpressions.tgeompointParse(col("wkt")).as("v"))
-    val df = v.select(
+    val df = v.select(col("wkt"),
       hex(NativeExpressions.tgeompointAsWkb(col("v"))).as("nat_wkb"),
-      hex(MeosFunctions.tgeompointAsWkb(col("v"))).as("udf_wkb"),
       NativeExpressions.tgeompointAsHexWkb(col("v")).as("nat_hex"),
-      MeosFunctions.tgeompointAsHexWkb(col("v")).as("udf_hex"),
-      MeosFunctions.tgeompointOut(
+      NativeExpressions.tgeompointOut(
         NativeExpressions.tgeompointFromHexWkb(
           NativeExpressions.tgeompointAsHexWkb(col("v")))).as("nat_rt"),
-      MeosFunctions.tgeompointOut(
-        MeosFunctions.tgeompointFromHexWkb(
-          MeosFunctions.tgeompointAsHexWkb(col("v")))).as("udf_rt"),
-      MeosFunctions.tgeompointOut(
+      NativeExpressions.tgeompointOut(
         NativeExpressions.tgeompointFromWkb(
           NativeExpressions.tgeompointAsWkb(col("v")))).as("nat_rt_bin"))
     val rows = noCodegenFallback(df.collect())
     assert(rows.length == 5)
     rows.foreach { r =>
-      assert(r.getAs[String]("nat_wkb").equalsIgnoreCase(
-        r.getAs[String]("udf_wkb")))
-      assert(r.getAs[String]("nat_hex").equalsIgnoreCase(
-        r.getAs[String]("udf_hex")))
-      assert(r.getAs[String]("nat_rt") == r.getAs[String]("udf_rt"))
-      assert(r.getAs[String]("nat_rt_bin") == r.getAs[String]("udf_rt"))
+      val ref = TGeom.parse(r.getAs[String]("wkt"))
+      val refHex = TGeom.toHexWkb(ref)
+      assert(TGeom.toHexWkb(TGeom.fromWkb(TGeom.toWkb(ref))) == refHex)
+      assert(r.getAs[String]("nat_wkb").equalsIgnoreCase(refHex))
+      assert(r.getAs[String]("nat_hex") == refHex)
+      assert(r.getAs[String]("nat_rt") == TGeom.print(ref))
+      assert(r.getAs[String]("nat_rt_bin") == TGeom.print(ref))
     }
   }
 
@@ -110,15 +115,20 @@ class NativeExprSpec extends SparkTestBase {
       .agg(asm(unix_micros(col("ts")), col("event_id"), col("value"),
         col("y")).as("s"))
       .select(Assembly.tpointVal(col("s")).as("trip"))
-      .select(
+      .select(col("trip"),
         MeosFunctions.tgeompointOut(col("trip")).as("wkt"),
+        NativeExpressions.tgeompointAsHexWkb(col("trip")).as("hex"),
         MeosFunctions.tgeompointOut(
           NativeExpressions.tgeompointFromHexWkb(
             NativeExpressions.tgeompointAsHexWkb(col("trip")))).as("rt"))
     val rows = noCodegenFallback(df.collect())
     assert(rows.nonEmpty)
-    rows.foreach(r =>
-      assert(r.getAs[String]("wkt") == r.getAs[String]("rt")))
+    rows.foreach { r =>
+      val ref = TripVals.ofRow(r.getAs[Row]("trip"))
+      assert(r.getAs[String]("wkt") == TGeom.print(ref))
+      assert(r.getAs[String]("hex") == TGeom.toHexWkb(ref))
+      assert(r.getAs[String]("rt") == TGeom.print(ref))
+    }
   }
 
   test("native rhp_bands == composed banding, and compiles in codegen") {
@@ -475,6 +485,7 @@ class NativeExprSpec extends SparkTestBase {
     assert(rows.nonEmpty && rows.forall(!_.isNullAt(0)))
   }
 
+  // reference leg: TGeom's driver-side print of the same value
   test("native print == UDF print on the six grammars AND the z-less " +
     "assembly struct shape; compiles in codegen") {
     import spark.implicits._
@@ -487,13 +498,12 @@ class NativeExprSpec extends SparkTestBase {
       "{[POINT(1 1)@2000-01-01, POINT(2 2)@2000-01-02], " +
         "[POINT(3 3)@2000-01-03, POINT(3 3)@2000-01-04]}",
       "SRID=4326;Point(-90.06 29.95)@2024-01-01T00:00:00+00").toDF("wkt")
-    val both = wkts.select(
+    val both = wkts.select(col("wkt"),
       NativeExpressions.tgeompointOut(
-        MeosFunctions.tgeompointIn(col("wkt"))).as("native"),
-      MeosFunctions.tgeompointOut(
-        MeosFunctions.tgeompointIn(col("wkt"))).as("viaUdf"))
+        MeosFunctions.tgeompointIn(col("wkt"))).as("native"))
     noCodegenFallback(both.collect()).foreach(r =>
-      assert(r.getAs[String]("native") == r.getAs[String]("viaUdf")))
+      assert(r.getAs[String]("native") ==
+        TGeom.print(TGeom.parse(r.getAs[String]("wkt")))))
     // z-less shape: the struct built by the assembly path has no z field
     import graft.meos.Assembly
     val asm = Assembly.tpointAssemble()
@@ -503,11 +513,11 @@ class NativeExprSpec extends SparkTestBase {
       .agg(asm(unix_micros(col("ts")), col("event_id"), col("value"),
         col("y")).as("s"))
       .select(Assembly.tpointVal(col("s")).as("trip"))
-      .select(
-        NativeExpressions.tgeompointOut(col("trip")).as("native"),
-        MeosFunctions.tgeompointOut(col("trip")).as("viaUdf"))
+      .select(col("trip"),
+        NativeExpressions.tgeompointOut(col("trip")).as("native"))
     noCodegenFallback(viaAssembly.collect()).foreach(r =>
-      assert(r.getAs[String]("native") == r.getAs[String]("viaUdf")))
+      assert(r.getAs[String]("native") ==
+        TGeom.print(TripVals.ofRow(r.getAs[Row]("trip")))))
   }
 
   test("native simhash32 == built-in composition on real docs; compiles " +

@@ -1,0 +1,159 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.meos.{Boxes, MeosFunctions, TGeom}
+import graft.sources.{AisCsv, TripSource}
+
+/** Plan pins for the trip codec: the ingest's write plan
+  * ([[Pipelines.aisToFile]]) and the trip lookup (read back through
+  * [[TripSource]], box-overlap join, value-at and WKT print) carry no
+  * `ScalaUDF`, and every bridge they call compiles under janino
+  * (`spark.sql.codegen.fallback=false`, so a compile error fails instead
+  * of falling back to interpretation). Results are checked against TGeom's
+  * driver-side codec on the written trip file. */
+class TripPlanSpec extends SparkTestBase {
+
+  /** An extensions session (the overlap-join rewrite) on the shared
+    * context, with codegen fallback off and broadcast joins off (so the
+    * rewrite, not a broadcast nested loop, plans the join). */
+  private def withExtSession(f: SparkSession => Unit): Unit = {
+    spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+        .config("spark.graft.overlapJoin.bucketWidthSeconds", "3600")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      val prev = s.conf.getOption("spark.sql.codegen.fallback")
+      s.conf.set("spark.sql.codegen.fallback", "false")
+      try f(s)
+      finally prev match {
+        case Some(v) => s.conf.set("spark.sql.codegen.fallback", v)
+        case None => s.conf.unset("spark.sql.codegen.fallback")
+      }
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
+
+  private def udfs(plan: LogicalPlan): Seq[String] =
+    plan.collect { case p => p.expressions.flatMap(_.collect {
+      case u: ScalaUDF => u.toString })
+    }.flatten
+
+  /** Eight vessels, 40 posits each a minute apart, on a diagonal. */
+  private def writeCsv(): String = {
+    val dir = Files.createTempDirectory("ais-plan")
+    val rows = for (v <- 0 until 8; k <- 0 until 40) yield {
+      val ts = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+        .plusMinutes(k + 5L * v).format(
+          java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
+      f"${367000000 + v},$ts,${20 + 0.01 * k + v}%.4f," +
+        f"${-80 + 0.01 * k + v}%.4f,70"
+    }
+    Files.writeString(dir.resolve("a.csv"),
+      ("MMSI,BaseDateTime,LAT,LON,VesselType" +: rows).mkString("\n") + "\n")
+    dir.toString
+  }
+
+  test("aisToFile's write plan has no ScalaUDF and compiles in codegen") {
+    withExtSession { s =>
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          plans.add(qe.analyzed)
+        override def onFailure(f: String, qe: QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      s.listenerManager.register(listener)
+      val out = Files.createTempDirectory("trips-plan").toString + "/out"
+      try Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
+      finally {
+        // listener events are delivered asynchronously
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (plans.isEmpty && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        s.listenerManager.unregister(listener)
+      }
+      assert(!plans.isEmpty, "the write was not observed")
+      plans.forEach(p => assert(udfs(p).isEmpty, p.treeString))
+      val lines = s.read.text(out).collect().map(_.getString(0))
+      assert(lines.length == 8)
+    }
+  }
+
+  test("the trip lookup plan (TripSource, box-overlap join, value-at, " +
+    "WKT print) has no ScalaUDF, compiles in codegen, and matches the " +
+    "driver codec") {
+    withExtSession { s =>
+      val out = Files.createTempDirectory("trips-plan").toString + "/out"
+      Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
+      val trips = TripSource.readJsonLines(s, out)
+      val inst = col("trip.sequences").getItem(0).getField("instants")
+      val boxed = trips.select(col("id"), col("trip"), Boxes.stbox(
+        array_min(transform(inst, _.getField("x"))),
+        array_max(transform(inst, _.getField("x"))),
+        array_min(transform(inst, _.getField("y"))),
+        array_max(transform(inst, _.getField("y"))),
+        element_at(inst, 1).getField("t"),
+        element_at(inst, -1).getField("t")).as("box"))
+      // windows around vessel 2 at minute 20, straddling vessel 3's start
+      val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
+      val ws = Seq((1, -78.0, -77.5, 22.0, 22.5, t0 + 600, t0 + 1800,
+        t0 + 1230), (2, -80.0, -70.0, 20.0, 30.0, t0 + 1200, t0 + 1260,
+        t0 + 1201))
+      val wdf = s.createDataFrame(ws).toDF("wid", "xmin", "xmax", "ymin",
+        "ymax", "tmin", "tmax", "at").select(col("wid"), Boxes.stbox(
+        col("xmin"), col("xmax"), col("ymin"), col("ymax"),
+        timestamp_seconds(col("tmin")), timestamp_seconds(col("tmax")))
+        .as("wbox"), timestamp_seconds(col("at")).as("at"))
+      val joined = wdf.join(boxed, Boxes.stboxOverlaps(col("wbox"),
+        col("box")))
+        .select(col("wid"), col("id"), col("at"),
+          MeosFunctions.tgeompointValueAt(col("trip"), col("at")).as("p"),
+          MeosFunctions.tgeompointOut(col("trip")).as("wkt"))
+      assert(udfs(joined.queryExecution.analyzed).isEmpty,
+        joined.queryExecution.analyzed.treeString)
+      val rows = joined.collect()
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"), plan)
+
+      // reference: TGeom's driver-side codec on the file's HexWKB
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val byId = s.read.text(out).collect().map { r =>
+        val n = mapper.readTree(r.getString(0))
+        n.get("id").asLong -> TGeom.fromHexWkb(n.get("json").asText)
+      }.toMap
+      val want = for {
+        (wid, x0, x1, y0, y1, tmin, tmax, at) <- ws
+        (id, v) <- byId.toSeq
+        is = v.sequences.flatMap(_.instants)
+        if is.map(_.x).min <= x1 && x0 <= is.map(_.x).max &&
+          is.map(_.y).min <= y1 && y0 <= is.map(_.y).max &&
+          is.head.t.getEpochSecond <= tmax && tmin <= is.last.t.getEpochSecond
+      } yield (wid, id) -> (TGeom.valueAt(v, java.time.Instant.ofEpochSecond(
+        at)), TGeom.print(v))
+      assert(want.size >= 2, "the windows should match trips")
+      val got = rows.map(r => (r.getInt(0), r.getLong(1)) ->
+        (Option(r.getAs[Row]("p")).map(p => (p.getDouble(0), p.getDouble(1))),
+          r.getAs[String]("wkt"))).toMap
+      assert(got == want.toMap)
+      assert(got.values.exists(_._1.isDefined))
+    }
+  }
+}

@@ -1,0 +1,145 @@
+#!/usr/bin/env python3
+"""Per-stage profile of each SQL execution in a Spark event log.
+
+    python3 tools/stageprof.py <event log file | event log dir> [--min-ms N]
+
+The log must be uncompressed JSON lines (spark.eventLog.compress=false);
+a rolling log (an `eventlog_v2_<app>` dir) is read part by part, and given
+a directory of logs, the newest one is read. For every SQL execution
+(in start order) it prints the execution's wall time and description, then
+one line per stage that ran for it (skipped stages are not listed):
+
+    stage  tasks  wall_ms  task_ms_sum  task_ms_max  shuf_w_mb  shuf_r_mb  ops
+
+wall_ms is stage submission to completion; task_ms is each task's launch to
+finish; shuf_w_mb / shuf_r_mb are the bytes its tasks wrote to / read from
+the shuffle; ops are the stage's plan operators (from its RDD scopes). Stages map to executions through their jobs'
+`spark.sql.execution.id` property. Executions whose wall time is below
+--min-ms are left out.
+"""
+import argparse
+import json
+import os
+import sys
+from collections import defaultdict
+
+MB = 1024.0 * 1024.0
+
+
+def log_files(path):
+    """The files of one application's log, in order: `path` itself, the
+    `events_<n>_*` parts of a rolling log dir (`eventlog_v2_<app>`), or,
+    for a dir of logs, those of the newest one."""
+    if not os.path.isdir(path):
+        return [path]
+    name = os.path.basename(os.path.normpath(path))
+    if name.startswith("eventlog_v2_"):
+        parts = [f for f in os.listdir(path) if f.startswith("events_")]
+        return [os.path.join(path, f) for f in
+                sorted(parts, key=lambda f: int(f.split("_")[1]))]
+    logs = [os.path.join(path, f) for f in os.listdir(path)
+            if not f.startswith(".")]
+    if not logs:
+        sys.exit(f"stageprof: no event log in {path}")
+    return log_files(max(logs, key=os.path.getmtime))
+
+
+def events(files):
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            yield from f
+
+
+def read(files):
+    execs = {}                      # execution id -> {start, end, desc}
+    stage_exec = {}                 # stage id -> execution id
+    stages = {}                     # stage id -> completed stage info
+    tasks = defaultdict(lambda: {"n": 0, "sum": 0, "max": 0, "w": 0, "r": 0})
+    for line in events(files):
+        try:
+            e = json.loads(line)
+        except ValueError:
+            sys.exit("stageprof: not an uncompressed JSON event log "
+                     "(set spark.eventLog.compress=false)")
+        kind = e.get("Event", "")
+        if kind.endswith("SQLExecutionStart"):
+            execs[e["executionId"]] = {
+                "start": e["time"], "end": None,
+                "desc": e.get("description", "")}
+        elif kind.endswith("SQLExecutionEnd"):
+            if e["executionId"] in execs:
+                execs[e["executionId"]]["end"] = e["time"]
+        elif kind == "SparkListenerJobStart":
+            eid = (e.get("Properties") or {}).get("spark.sql.execution.id")
+            if eid is not None:
+                for sid in e.get("Stage IDs", []):
+                    stage_exec[sid] = int(eid)
+        elif kind == "SparkListenerStageCompleted":
+            info = e["Stage Info"]
+            stages[info["Stage ID"]] = info
+        elif kind == "SparkListenerTaskEnd":
+            ti = e.get("Task Info", {})
+            tm = e.get("Task Metrics") or {}
+            t = tasks[e["Stage ID"]]
+            ms = ti.get("Finish Time", 0) - ti.get("Launch Time", 0)
+            t["n"] += 1
+            t["sum"] += ms
+            t["max"] = max(t["max"], ms)
+            t["w"] += (tm.get("Shuffle Write Metrics") or {}).get(
+                "Shuffle Bytes Written", 0)
+            sr = tm.get("Shuffle Read Metrics") or {}
+            t["r"] += sr.get("Remote Bytes Read", 0) + sr.get(
+                "Local Bytes Read", 0)
+    return execs, stage_exec, stages, tasks
+
+
+def operators(info):
+    """The stage's plan operators, scan first, from its RDDs' scopes (AQE
+    stage names are all the same call site)."""
+    names = []
+    for r in sorted(info.get("RDD Info", []), key=lambda r: r["RDD ID"]):
+        try:
+            n = json.loads(r.get("Scope") or "{}").get("name", "").strip()
+        except ValueError:
+            n = ""
+        if n and n not in names:
+            names.append(n)
+    return " > ".join(names)
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[1])
+    ap.add_argument("log")
+    ap.add_argument("--min-ms", type=float, default=0.0)
+    a = ap.parse_args()
+    files = log_files(a.log)
+    execs, stage_exec, stages, tasks = read(files)
+    by_exec = defaultdict(list)
+    for sid, info in stages.items():
+        if sid in stage_exec:
+            by_exec[stage_exec[sid]].append(info)
+    print(f"# {', '.join(files)}")
+    for eid in sorted(execs, key=lambda k: execs[k]["start"]):
+        x = execs[eid]
+        wall = (x["end"] - x["start"]) if x["end"] is not None else float("nan")
+        if wall < a.min_ms:
+            continue
+        desc = " ".join(x["desc"].split())[:100]
+        print(f"\nexecution {eid}  wall_ms {wall:.0f}  {desc}")
+        rows = sorted(by_exec.get(eid, []), key=lambda s: s["Stage ID"])
+        if not rows:
+            print("  (no stages ran)")
+            continue
+        print(f"  {'stage':>5} {'tasks':>6} {'wall_ms':>8} {'task_ms_sum':>11} "
+              f"{'task_ms_max':>11} {'shuf_w_mb':>9} {'shuf_r_mb':>9}  ops")
+        for s in rows:
+            t = tasks[s["Stage ID"]]
+            sw = (s.get("Completion Time") or 0) - (s.get("Submission Time") or 0)
+            name = operators(s) or s.get("Stage Name", "")
+            print(f"  {s['Stage ID']:>5} {t['n']:>6} {sw:>8} {t['sum']:>11} "
+                  f"{t['max']:>11} {t['w'] / MB:>9.2f} {t['r'] / MB:>9.2f}  "
+                  f"{name}")
+
+
+if __name__ == "__main__":
+    main()
