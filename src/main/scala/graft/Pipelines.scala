@@ -13,16 +13,20 @@ import graft.sources.TripSink
 object Pipelines {
 
   /** scan → project → group-by-vessel → assemble (dedupe/monotonic inside
-    * the UDAF) → HAVING min-trip-size → per-vessel trip struct with
+    * the aggregate) → HAVING min-trip-size → per-vessel trip struct with
     * vessel-type last-value (A7: deterministic `max_by`) —
     * the shared core of both reference pipelines.
     *
-    * Assembly goes through the salted two-phase path (SkewSpec-proven
-    * equal to single-phase): the reference's "mega-vessel" case — one MMSI
-    * carrying a huge share of the posits — spreads over `salts` reducers
-    * in phase 1 instead of concentrating one reducer's heap; phase 2
-    * linearly merges the pre-sorted partials. The vessel-type last-value
-    * is a plain `max_by` aggregate (map-side combinable, skew-immune).
+    * One scan, one aggregation, like the reference's single pass per
+    * vessel (`04_to_file.rs:88-114`: one map of instants, one of vessel
+    * types). Assembly goes through the salted two-phase path
+    * (property-checked equal to single-phase): the reference's
+    * "mega-vessel" case — one MMSI carrying a huge share of the posits —
+    * spreads over `salts` reducers in phase 1 instead of concentrating one
+    * reducer's heap; phase 2 merges the salt groups' runs. The vessel type
+    * rides in the same buffer as the carried last value,
+    * `max_by(vt, struct(t, seq))`. A posit without an MMSI belongs to no
+    * vessel and is dropped.
     *
     * Input: canonical posit frame (mmsi, t, lat, lon, vt) from
     * [[graft.sources.AisCsv]] or any equivalent projection.
@@ -32,16 +36,14 @@ object Pipelines {
     // content-derived tiebreak: stable across runs and partitionings
     // (unlike monotonically_increasing_id); rows identical in content sort
     // identically, so any winner is the same row
-    val withTie = posits.withColumn("seq",
+    val withTie = posits.where(col("mmsi").isNotNull).withColumn("seq",
       xxhash64(col("t"), col("lon"), col("lat"), col("vt")))
-    val trips = Assembly.tpointAssembleSalted(withTie,
+    Assembly.tpointAssembleSalted(withTie,
       col("mmsi"), unix_micros(col("t")), col("seq"),
-      col("lon"), col("lat"), salts = salts, maxSize = maxTripSize)
-    val vtLast = withTie.groupBy("mmsi")
-      .agg(max_by(col("vt"), struct(col("t"), col("seq"))).as("vt"))
-    trips.join(vtLast, trips("k") === vtLast("mmsi"))
+      col("lon"), col("lat"), salts = salts, maxSize = maxTripSize,
+      last = Some(col("vt")))
       .where(col("s.n") >= minTripSize)
-      .select(col("mmsi"), col("vt"), col("s"),
+      .select(col("k").as("mmsi"), col("last").as("vt"), col("s"),
         Assembly.tpointVal(col("s")).as("trip"))
   }
 

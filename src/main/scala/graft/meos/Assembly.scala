@@ -1,8 +1,13 @@
 package graft.meos
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Trajectory assembly — the engine's flagship aggregate (SURVEY.md A6).
   *
@@ -14,9 +19,15 @@ import org.apache.spark.sql.functions._
   * (b) skipping consecutive duplicate timestamps (`ais_to_db.rs:181-184`),
   * optionally truncating at `max_trip_size` (`ais_to_db.rs:190-193`).
   *
-  * Spark-first re-expression: a typed `Aggregator` whose buffer is a bag of
-  * posits, merged associatively across partial (map-side) aggregation, with
-  * sort + duplicate-timestamp dedupe + truncation applied once at `finish`.
+  * Spark-first re-expression, in two forms over one kernel
+  * ([[Runs.compact]]: sort by (t, tie) → keep the smallest tie per t →
+  * cap):
+  *  - single-phase: a typed `Aggregator` per key whose buffer is a bag of
+  *    posits, with the kernel applied at `finish` ([[tfloatAssemble]],
+  *    [[tpointAssemble]]);
+  *  - salted two-phase, the skew-immune path: a pair of
+  *    `TypedImperativeAggregate`s over primitive-column buffers
+  *    ([[tfloatAssembleSalted]], [[tpointAssembleSalted]]).
   * Distribution semantics:
   *  - reduce/merge are order-insensitive (shuffle order never changes the
   *    result); determinism comes from sorting by (t, tie) where `tie` is a
@@ -49,29 +60,19 @@ object Assembly {
     // crowd out distinct ones that belong in the final earliest-maxSize
     private def trim(b: FBuf): Unit =
       if (maxSize > 0 && b.ps.length > 2 * maxSize) {
-        val sorted = b.ps.sortBy(p => (p.t, p.tie))
-        val out = Vector.newBuilder[FPosit]
-        var lastT = Long.MinValue
-        var kept = 0
-        val it = sorted.iterator
-        while (it.hasNext && kept < maxSize) {
-          val p = it.next()
-          if (p.t != lastT) { out += p; lastT = p.t; kept += 1 }
-        }
-        b.ps = out.result()
+        val r = run(b.ps)
+        b.ps = Vector.tabulate(r.n)(i => FPosit(r.t(i), r.tie(i), r.v(0)(i)))
       }
     def finish(b: FBuf): FSeq = {
-      val sorted = b.ps.sortBy(p => (p.t, p.tie))
-      val out = Vector.newBuilder[FPosit]
-      var lastT = Long.MinValue
-      var kept = 0
-      val it = sorted.iterator
-      while (it.hasNext && (maxSize <= 0 || kept < maxSize)) {
-        val p = it.next()
-        if (p.t != lastT) { out += p; lastT = p.t; kept += 1 }
-      }
-      val r = out.result()
-      FSeq(r.map(_.t).toArray, r.map(_.v).toArray, r.length.toLong)
+      val r = run(b.ps)
+      FSeq(java.util.Arrays.copyOf(r.t, r.n),
+        java.util.Arrays.copyOf(r.v(0), r.n), r.n.toLong)
+    }
+    private def run(ps: Vector[FPosit]): Runs = {
+      val r = new Runs(1)
+      ps.foreach { p => val i = r.add(p.t, p.tie); r.v(0)(i) = p.v }
+      r.compact(maxSize)
+      r
     }
     def bufferEncoder: Encoder[FBuf] = Encoders.product[FBuf]
     def outputEncoder: Encoder[FSeq] = Encoders.product[FSeq]
@@ -95,30 +96,25 @@ object Assembly {
     // see TFloatAssembler.trim: dedupe-then-cap, matching finish
     private def trim(b: PBuf): Unit =
       if (maxSize > 0 && b.ps.length > 2 * maxSize) {
-        val sorted = b.ps.sortBy(p => (p.t, p.tie))
-        val out = Vector.newBuilder[PPosit]
-        var lastT = Long.MinValue
-        var kept = 0
-        val it = sorted.iterator
-        while (it.hasNext && kept < maxSize) {
-          val p = it.next()
-          if (p.t != lastT) { out += p; lastT = p.t; kept += 1 }
-        }
-        b.ps = out.result()
+        val r = run(b.ps)
+        b.ps = Vector.tabulate(r.n)(i =>
+          PPosit(r.t(i), r.tie(i), r.v(0)(i), r.v(1)(i)))
       }
     def finish(b: PBuf): PSeq = {
-      val sorted = b.ps.sortBy(p => (p.t, p.tie))
-      val out = Vector.newBuilder[PPosit]
-      var lastT = Long.MinValue
-      var kept = 0
-      val it = sorted.iterator
-      while (it.hasNext && (maxSize <= 0 || kept < maxSize)) {
-        val p = it.next()
-        if (p.t != lastT) { out += p; lastT = p.t; kept += 1 }
+      val r = run(b.ps)
+      PSeq(java.util.Arrays.copyOf(r.t, r.n),
+        java.util.Arrays.copyOf(r.v(0), r.n),
+        java.util.Arrays.copyOf(r.v(1), r.n), r.n.toLong)
+    }
+    private def run(ps: Vector[PPosit]): Runs = {
+      val r = new Runs(2)
+      ps.foreach { p =>
+        val i = r.add(p.t, p.tie)
+        r.v(0)(i) = p.x
+        r.v(1)(i) = p.y
       }
-      val r = out.result()
-      PSeq(r.map(_.t).toArray, r.map(_.x).toArray, r.map(_.y).toArray,
-        r.length.toLong)
+      r.compact(maxSize)
+      r
     }
     def bufferEncoder: Encoder[PBuf] = Encoders.product[PBuf]
     def outputEncoder: Encoder[PSeq] = Encoders.product[PSeq]
@@ -129,70 +125,18 @@ object Assembly {
 
   // ---- skew path: salted two-phase assembly -------------------------------
 
-  /** Phase-1 output of the salted path: a partial trip that RETAINS the
-    * tiebreaker array, so phase 2 can resolve duplicate timestamps across
-    * salt groups exactly like single-phase assembly (smallest tie wins). */
-  case class FTSeq(t: Array[Long], tie: Array[Long], v: Array[Double],
-                   n: Long)
-  case class PTSeq(t: Array[Long], tie: Array[Long], x: Array[Double],
-                   y: Array[Double], n: Long)
-
-  class TFloatPartialAssembler(maxSize: Int)
-      extends Aggregator[FPosit, FBuf, FTSeq] {
-    private val inner = new TFloatAssembler(maxSize)
-    def zero: FBuf = inner.zero
-    def reduce(b: FBuf, p: FPosit): FBuf = inner.reduce(b, p)
-    def merge(a: FBuf, b: FBuf): FBuf = inner.merge(a, b)
-    def finish(b: FBuf): FTSeq = {
-      val sorted = b.ps.sortBy(p => (p.t, p.tie))
-      val out = Vector.newBuilder[FPosit]
-      var lastT = Long.MinValue
-      var kept = 0
-      val it = sorted.iterator
-      while (it.hasNext && (maxSize <= 0 || kept < maxSize)) {
-        val p = it.next()
-        if (p.t != lastT) { out += p; lastT = p.t; kept += 1 }
-      }
-      val r = out.result()
-      FTSeq(r.map(_.t).toArray, r.map(_.tie).toArray, r.map(_.v).toArray,
-        r.length.toLong)
-    }
-    def bufferEncoder: Encoder[FBuf] = Encoders.product[FBuf]
-    def outputEncoder: Encoder[FTSeq] = Encoders.product[FTSeq]
-  }
-
-  class TPointPartialAssembler(maxSize: Int)
-      extends Aggregator[PPosit, PBuf, PTSeq] {
-    private val inner = new TPointAssembler(maxSize)
-    def zero: PBuf = inner.zero
-    def reduce(b: PBuf, p: PPosit): PBuf = inner.reduce(b, p)
-    def merge(a: PBuf, b: PBuf): PBuf = inner.merge(a, b)
-    def finish(b: PBuf): PTSeq = {
-      val sorted = b.ps.sortBy(p => (p.t, p.tie))
-      val out = Vector.newBuilder[PPosit]
-      var lastT = Long.MinValue
-      var kept = 0
-      val it = sorted.iterator
-      while (it.hasNext && (maxSize <= 0 || kept < maxSize)) {
-        val p = it.next()
-        if (p.t != lastT) { out += p; lastT = p.t; kept += 1 }
-      }
-      val r = out.result()
-      PTSeq(r.map(_.t).toArray, r.map(_.tie).toArray, r.map(_.x).toArray,
-        r.map(_.y).toArray, r.length.toLong)
-    }
-    def bufferEncoder: Encoder[PBuf] = Encoders.product[PBuf]
-    def outputEncoder: Encoder[PTSeq] = Encoders.product[PTSeq]
-  }
-
   /** Two-phase assembly for skewed entities (SURVEY.md §7.3: mega-vessels).
     * Phase 1 groups by (key, salt) — spreading one hot key over `salts`
-    * reducers — and assembles partial trips; phase 2 linearly merges the
-    * pre-sorted partials per key (no re-sort — the per-posit sort work
-    * happened distributed in phase 1). Identical output to single-phase
-    * assembly on EVERY input (spec-checked, duplicate timestamps included:
-    * the partials carry the tiebreaker, and cross-salt dup-ts collisions
-    * keep the smallest tie exactly like the single-phase dedupe).
+    * reducers — and turns each group's posits into a run: sorted by
+    * (t, tie), one posit per timestamp, the tiebreakers kept. Phase 2
+    * merges a key's runs into its trip. Both phases are one pair of
+    * `TypedImperativeAggregate`s ([[AssembleRun]], [[MergeRuns]]) over one
+    * buffer of primitive columns ([[Runs]]), and one kernel
+    * ([[Runs.compact]]: sort → smallest tie per t → cap) does the
+    * assembly in both. Identical output to single-phase assembly on EVERY
+    * input (property-checked, duplicate timestamps included: a timestamp
+    * present in several salt groups keeps the smallest tie, exactly like
+    * the single-phase dedupe).
     *
     * Mirrors the reference's own batching escape hatch (`batch_size`
     * chunking, `ais_to_db.rs:176`) — the chunk id is the salt.
@@ -201,133 +145,376 @@ object Assembly {
     * earliest `maxSize` distinct-ts posits (a superset of the global
     * earliest `maxSize`), and the phase-2 merge re-caps — so per-task peak
     * memory is O(maxSize), never O(hot-key history).
+    *
+    * `last` (an INT or BIGINT column, points only), when given, adds a
+    * column `last`: that column's value on the posit with the greatest
+    * (t, tie) — `max_by(last, struct(t, tie))` carried through both
+    * phases in the same buffer, so a per-key last-value (the AIS vessel
+    * type) costs no second aggregation. Null inputs read as the
+    * single-phase assembler reads them: t and tie 0, values 0.0; in the
+    * (t, tie) order of `last` a null sorts first, as in `max_by`.
     */
-  def tfloatAssembleSalted(df: org.apache.spark.sql.DataFrame,
-                           key: Column, t: Column, tie: Column, v: Column,
-                           salts: Int = 16, maxSize: Int = 0)
-      : org.apache.spark.sql.DataFrame = {
-    val part = udaf(new TFloatPartialAssembler(maxSize))
-    val merge = udaf(new SeqMerge.TieMergeAggregator(maxSize))
-    df.groupBy(key.as("k"), pmod(tie, lit(salts)).as("salt"))
-      .agg(part(t, tie, v).as("p"))
+  def tfloatAssembleSalted(df: DataFrame, key: Column, t: Column,
+                           tie: Column, v: Column, salts: Int = 16,
+                           maxSize: Int = 0): DataFrame =
+    assembleSalted(df, key, t, tie, Seq("v" -> v), None, salts, maxSize)
+
+  /** 2-D (tgeompoint) variant of [[tfloatAssembleSalted]]; it also takes
+    * the carried `last` column. */
+  def tpointAssembleSalted(df: DataFrame, key: Column, t: Column,
+                           tie: Column, x: Column, y: Column,
+                           salts: Int = 16, maxSize: Int = 0,
+                           last: Option[Column] = None): DataFrame =
+    assembleSalted(df, key, t, tie, Seq("x" -> x, "y" -> y), last, salts,
+      maxSize)
+
+  private def assembleSalted(df: DataFrame, key: Column, t: Column,
+                             tie: Column, values: Seq[(String, Column)],
+                             last: Option[Column], salts: Int, maxSize: Int)
+      : DataFrame = {
+    import org.apache.spark.sql.GraftShims.{column, expression}
+    val lastType = last.map(c => df.select(c).schema.head.dataType)
+    val inputs = Seq(t.cast(LongType), tie.cast(LongType)) ++
+      values.map(_._2.cast(DoubleType)) ++ last
+    val run = AssembleRun(inputs.map(expression), values.size, lastType,
+      maxSize)
+    val trips = df.groupBy(key.as("k"), pmod(tie, lit(salts)).as("salt"))
+      .agg(column(run.toAggregateExpression()).as("p"))
       .groupBy(col("k"))
-      .agg(merge(col("p.t"), col("p.tie"), col("p.v"), col("p.n")).as("s"))
+      .agg(column(MergeRuns(expression(col("p")), values.map(_._1),
+        lastType, maxSize).toAggregateExpression()).as("s"))
+    if (last.isEmpty) trips
+    else trips.select(col("k"), col("s").dropFields("last").as("s"),
+      col("s.last").as("last"))
   }
 
-  /** 2-D (tgeompoint) variant of [[tfloatAssembleSalted]]. */
-  def tpointAssembleSalted(df: org.apache.spark.sql.DataFrame,
-                           key: Column, t: Column, tie: Column,
-                           x: Column, y: Column,
-                           salts: Int = 16, maxSize: Int = 0)
-      : org.apache.spark.sql.DataFrame = {
-    val part = udaf(new TPointPartialAssembler(maxSize))
-    val merge = udaf(new SeqMerge.PointTieMergeAggregator(maxSize))
-    df.groupBy(key.as("k"), pmod(tie, lit(salts)).as("salt"))
-      .agg(part(t, tie, x, y).as("p"))
-      .groupBy(col("k"))
-      .agg(merge(col("p.t"), col("p.tie"), col("p.x"), col("p.y"),
-        col("p.n")).as("s"))
+  /** The assembly buffer: growable primitive columns — timestamp,
+    * tiebreaker, one or two values — plus the carried last value. Null
+    * flags are kept only for the last value's order and value. */
+  final class Runs(nValues: Int) {
+    var n = 0
+    var t = new Array[Long](4)
+    var tie = new Array[Long](4)
+    var v: Array[Array[Double]] = Array.fill(nValues)(new Array[Double](4))
+    /** [0, n) is already a run: ascending t, one posit per t. */
+    var isRun = true
+    var hasLast = false
+    var lastTSet, lastTieSet, lastSet = false
+    var lastT, lastTie, lastV = 0L
+
+    private def reserve(m: Int): Unit = if (m > t.length) {
+      val cap = math.max(m, 2 * t.length)
+      t = java.util.Arrays.copyOf(t, cap)
+      tie = java.util.Arrays.copyOf(tie, cap)
+      v = v.map(java.util.Arrays.copyOf(_, cap))
+    }
+
+    /** Appends a posit's (t, tie) and returns its index; the caller then
+      * sets its values `v(k)(index)`. */
+    def add(pt: Long, ptie: Long): Int = {
+      reserve(n + 1)
+      if (n > 0 && pt <= t(n - 1)) isRun = false
+      t(n) = pt
+      tie(n) = ptie
+      n += 1
+      n - 1
+    }
+
+    /** Keeps the candidate if its (t, tie) — nulls first — is greater;
+      * on equal (t, tie) a set value beats null, then the larger value. */
+    def offerLast(tSet: Boolean, pt: Long, tieSet: Boolean, ptie: Long,
+                  set: Boolean, pv: Long): Unit = {
+      var c = if (!hasLast) 1 else java.lang.Boolean.compare(tSet, lastTSet)
+      if (c == 0) c = java.lang.Long.compare(pt, lastT)
+      if (c == 0) c = java.lang.Boolean.compare(tieSet, lastTieSet)
+      if (c == 0) c = java.lang.Long.compare(ptie, lastTie)
+      if (c == 0) c = java.lang.Boolean.compare(set, lastSet)
+      if (c == 0) c = java.lang.Long.compare(pv, lastV)
+      if (c > 0) {
+        hasLast = true
+        lastTSet = tSet; lastT = pt; lastTieSet = tieSet; lastTie = ptie
+        lastSet = set; lastV = pv
+      }
+    }
+
+    def append(o: Runs): Unit = {
+      if (o.n > 0) {
+        reserve(n + o.n)
+        isRun = isRun && o.isRun && (n == 0 || o.t(0) > t(n - 1))
+        System.arraycopy(o.t, 0, t, n, o.n)
+        System.arraycopy(o.tie, 0, tie, n, o.n)
+        var k = 0
+        while (k < nValues) {
+          System.arraycopy(o.v(k), 0, v(k), n, o.n)
+          k += 1
+        }
+        n += o.n
+      }
+      if (o.hasLast)
+        offerLast(o.lastTSet, o.lastT, o.lastTieSet, o.lastTie, o.lastSet,
+          o.lastV)
+    }
+
+    /** (t, tie, values) order of posits `i` and `j`: values decide only
+      * between posits equal in (t, tie), so the kept posit never depends
+      * on the order rows arrive in. */
+    private def less(i: Int, j: Int): Boolean =
+      if (t(i) != t(j)) t(i) < t(j)
+      else if (tie(i) != tie(j)) tie(i) < tie(j)
+      else {
+        var k = 0
+        var c = 0
+        while (c == 0 && k < nValues) {
+          c = java.lang.Double.compare(v(k)(i), v(k)(j))
+          k += 1
+        }
+        c < 0
+      }
+
+    /** Indices of [0, n) in [[less]] order: a stable bottom-up merge of
+      * the natural ascending runs, so input made of a few sorted runs
+      * (phase 2's partial trips; mostly ordered posits) costs a few
+      * linear passes. */
+    private def order(): Array[Int] = {
+      var src = Array.range(0, n)
+      var dst = new Array[Int](n)
+      val starts = new Array[Int](n + 1)
+      var runs = 0
+      var i = 0
+      while (i < n) {
+        starts(runs) = i
+        runs += 1
+        i += 1
+        while (i < n && !less(i, i - 1)) i += 1
+      }
+      starts(runs) = n
+      while (runs > 1) {
+        var r = 0
+        var w = 0
+        while (r < runs) {
+          val lo = starts(r)
+          val mid = starts(math.min(r + 1, runs))
+          val hi = starts(math.min(r + 2, runs))
+          var a = lo
+          var b = mid
+          var o = lo
+          while (o < hi) {
+            if (b >= hi || (a < mid && !less(src(b), src(a)))) {
+              dst(o) = src(a); a += 1
+            } else { dst(o) = src(b); b += 1 }
+            o += 1
+          }
+          starts(w) = lo
+          w += 1
+          r += 2
+        }
+        starts(w) = n
+        runs = w
+        val tmp = src; src = dst; dst = tmp
+      }
+      src
+    }
+
+    /** The assembly kernel: sort by (t, tie), keep the smallest tie per
+      * t, keep the earliest `cap` timestamps (all when `cap <= 0`). */
+    def compact(cap: Int): Unit =
+      if (!isRun) {
+        val ord = order()
+        val m = if (cap > 0) math.min(cap, n) else n
+        val nt = new Array[Long](m)
+        val ntie = new Array[Long](m)
+        val nv = Array.fill(nValues)(new Array[Double](m))
+        var kept = 0
+        var i = 0
+        while (i < n && kept < m) {
+          val j = ord(i)
+          if (kept == 0 || t(j) != nt(kept - 1)) {
+            nt(kept) = t(j)
+            ntie(kept) = tie(j)
+            var k = 0
+            while (k < nValues) { nv(k)(kept) = v(k)(j); k += 1 }
+            kept += 1
+          }
+          i += 1
+        }
+        t = nt; tie = ntie; v = nv; n = kept; isRun = true
+      } else if (cap > 0 && n > cap) n = cap
+
+    def toBytes: Array[Byte] = {
+      val out = new Array[Byte](Runs.Header + 8 * n * (2 + nValues))
+      val base = Platform.BYTE_ARRAY_OFFSET
+      Platform.putInt(out, base, n)
+      Platform.putByte(out, base + 4, ((if (isRun) 1 else 0) |
+        (if (hasLast) 2 else 0) | (if (lastTSet) 4 else 0) |
+        (if (lastTieSet) 8 else 0) | (if (lastSet) 16 else 0)).toByte)
+      Platform.putLong(out, base + 5, lastT)
+      Platform.putLong(out, base + 13, lastTie)
+      Platform.putLong(out, base + 21, lastV)
+      var off = base + Runs.Header
+      def put(a: AnyRef, at: Long): Unit = {
+        Platform.copyMemory(a, at, out, off, 8L * n)
+        off += 8 * n
+      }
+      put(t, Platform.LONG_ARRAY_OFFSET)
+      put(tie, Platform.LONG_ARRAY_OFFSET)
+      v.foreach(put(_, Platform.DOUBLE_ARRAY_OFFSET))
+      out
+    }
+
+    /** Appends a buffer serialized by [[toBytes]]. */
+    def appendBytes(b: Array[Byte]): Unit = {
+      val base = Platform.BYTE_ARRAY_OFFSET
+      val m = Platform.getInt(b, base)
+      val flags = Platform.getByte(b, base + 4)
+      if (m > 0) {
+        reserve(n + m)
+        var off = base + Runs.Header
+        def get(a: AnyRef, at: Long): Unit = {
+          Platform.copyMemory(b, off, a, at + 8L * n, 8L * m)
+          off += 8 * m
+        }
+        val first = Platform.getLong(b, off)
+        isRun = isRun && (flags & 1) != 0 && (n == 0 || first > t(n - 1))
+        get(t, Platform.LONG_ARRAY_OFFSET)
+        get(tie, Platform.LONG_ARRAY_OFFSET)
+        v.foreach(get(_, Platform.DOUBLE_ARRAY_OFFSET))
+        n += m
+      }
+      if ((flags & 2) != 0)
+        offerLast((flags & 4) != 0, Platform.getLong(b, base + 5),
+          (flags & 8) != 0, Platform.getLong(b, base + 13),
+          (flags & 16) != 0, Platform.getLong(b, base + 21))
+    }
   }
 
-  // ---- merging assembled sequences (phase-2 / rollup aggregate) -----------
+  object Runs {
+    /** n, flags, last t, last tie, last value. */
+    private val Header = 4 + 1 + 3 * 8
+  }
 
-  object SeqMerge {
-    case class MBufT(var t: Vector[Long], var tie: Vector[Long],
-                     var v: Vector[Double])
-    case class MBufP(var t: Vector[Long], var tie: Vector[Long],
-                     var x: Vector[Double], var y: Vector[Double])
+  /** What both phases share: the [[Runs]] buffer, its byte form, merging
+    * two buffers, and the cap applied whenever a buffer doubles past it. */
+  sealed trait RunsAggregate extends TypedImperativeAggregate[Runs] {
+    def nValues: Int
+    def maxSize: Int
 
-    /** Tie-aware k-way merge of pre-sorted partial trips: runs are merged
-      * by timestamp; a timestamp present in several runs keeps the posit
-      * with the smallest tiebreaker — exactly the single-phase dedupe rule,
-      * making the two-phase path equal to single-phase on every input.
-      * Associative and commutative, so map-side combine is safe. */
-    class TieMergeAggregator(maxSize: Int)
-        extends Aggregator[FTSeq, MBufT, FSeq] {
-      def zero: MBufT = MBufT(Vector.empty, Vector.empty, Vector.empty)
-      private def mergeInto(b: MBufT, t2: Array[Long], tie2: Array[Long],
-                            v2: Array[Double]): MBufT = {
-        val nt = Vector.newBuilder[Long]
-        val ntie = Vector.newBuilder[Long]
-        val nv = Vector.newBuilder[Double]
-        var i = 0; var j = 0
-        while (i < b.t.length || j < t2.length) {
-          if (j >= t2.length || (i < b.t.length && b.t(i) < t2(j))) {
-            nt += b.t(i); ntie += b.tie(i); nv += b.v(i); i += 1
-          } else if (i >= b.t.length || t2(j) < b.t(i)) {
-            nt += t2(j); ntie += tie2(j); nv += v2(j); j += 1
-          } else { // duplicate timestamp across runs: smallest tie wins
-            if (b.tie(i) <= tie2(j)) {
-              nt += b.t(i); ntie += b.tie(i); nv += b.v(i)
-            } else { nt += t2(j); ntie += tie2(j); nv += v2(j) }
-            i += 1; j += 1
-          }
-        }
-        b.t = nt.result(); b.tie = ntie.result(); b.v = nv.result()
-        capped(b)
-      }
-      private def capped(b: MBufT): MBufT = {
-        if (maxSize > 0 && b.t.length > maxSize) {
-          b.t = b.t.take(maxSize); b.tie = b.tie.take(maxSize)
-          b.v = b.v.take(maxSize)
-        }
-        b
-      }
-      def reduce(b: MBufT, s: FTSeq): MBufT = mergeInto(b, s.t, s.tie, s.v)
-      def merge(a: MBufT, b: MBufT): MBufT =
-        mergeInto(a, b.t.toArray, b.tie.toArray, b.v.toArray)
-      def finish(b: MBufT): FSeq =
-        FSeq(b.t.toArray, b.v.toArray, b.t.length.toLong)
-      def bufferEncoder: Encoder[MBufT] = Encoders.product[MBufT]
-      def outputEncoder: Encoder[FSeq] = Encoders.product[FSeq]
+    override def createAggregationBuffer(): Runs = new Runs(nValues)
+
+    protected def capped(b: Runs): Runs = {
+      if (maxSize > 0 && b.n > 2 * maxSize) b.compact(maxSize)
+      b
     }
 
-    /** 2-D variant of [[TieMergeAggregator]]. */
-    class PointTieMergeAggregator(maxSize: Int)
-        extends Aggregator[PTSeq, MBufP, PSeq] {
-      def zero: MBufP =
-        MBufP(Vector.empty, Vector.empty, Vector.empty, Vector.empty)
-      private def mergeInto(b: MBufP, t2: Array[Long], tie2: Array[Long],
-                            x2: Array[Double], y2: Array[Double]): MBufP = {
-        val nt = Vector.newBuilder[Long]
-        val ntie = Vector.newBuilder[Long]
-        val nx = Vector.newBuilder[Double]
-        val ny = Vector.newBuilder[Double]
-        var i = 0; var j = 0
-        while (i < b.t.length || j < t2.length) {
-          if (j >= t2.length || (i < b.t.length && b.t(i) < t2(j))) {
-            nt += b.t(i); ntie += b.tie(i); nx += b.x(i); ny += b.y(i)
-            i += 1
-          } else if (i >= b.t.length || t2(j) < b.t(i)) {
-            nt += t2(j); ntie += tie2(j); nx += x2(j); ny += y2(j)
-            j += 1
-          } else {
-            if (b.tie(i) <= tie2(j)) {
-              nt += b.t(i); ntie += b.tie(i); nx += b.x(i); ny += b.y(i)
-            } else { nt += t2(j); ntie += tie2(j); nx += x2(j); ny += y2(j) }
-            i += 1; j += 1
-          }
-        }
-        b.t = nt.result(); b.tie = ntie.result()
-        b.x = nx.result(); b.y = ny.result()
-        capped(b)
-      }
-      private def capped(b: MBufP): MBufP = {
-        if (maxSize > 0 && b.t.length > maxSize) {
-          b.t = b.t.take(maxSize); b.tie = b.tie.take(maxSize)
-          b.x = b.x.take(maxSize); b.y = b.y.take(maxSize)
-        }
-        b
-      }
-      def reduce(b: MBufP, s: PTSeq): MBufP =
-        mergeInto(b, s.t, s.tie, s.x, s.y)
-      def merge(a: MBufP, b: MBufP): MBufP =
-        mergeInto(a, b.t.toArray, b.tie.toArray, b.x.toArray, b.y.toArray)
-      def finish(b: MBufP): PSeq =
-        PSeq(b.t.toArray, b.x.toArray, b.y.toArray, b.t.length.toLong)
-      def bufferEncoder: Encoder[MBufP] = Encoders.product[MBufP]
-      def outputEncoder: Encoder[PSeq] = Encoders.product[PSeq]
+    override def merge(b: Runs, o: Runs): Runs = { b.append(o); capped(b) }
+
+    override def serialize(b: Runs): Array[Byte] = {
+      b.compact(maxSize)
+      b.toBytes
     }
+
+    override def deserialize(bytes: Array[Byte]): Runs = {
+      val b = createAggregationBuffer()
+      b.appendBytes(bytes)
+      b
+    }
+  }
+
+  /** Phase 1: posits (t, tie, `nValues` values[, carried]) → one run, as
+    * [[Runs]] bytes. */
+  case class AssembleRun(children: Seq[Expression], nValues: Int,
+                         lastType: Option[DataType], maxSize: Int,
+                         mutableAggBufferOffset: Int = 0,
+                         inputAggBufferOffset: Int = 0)
+      extends RunsAggregate {
+    lastType.foreach(dt => require(dt == IntegerType || dt == LongType,
+      s"the carried last value must be an INT or BIGINT column, got " +
+        dt.simpleString))
+
+    override def nullable: Boolean = false
+    override def dataType: DataType = BinaryType
+    override def prettyName: String = "assemble_run"
+
+    /** The inputs of one row in one generated projection: no boxing. */
+    @transient private lazy val inputs = UnsafeProjection.create(children)
+    private val lastAt = 2 + nValues
+    private val lastInt = lastType.contains(IntegerType)
+
+    override def update(b: Runs, row: InternalRow): Runs = {
+      val r = inputs(row)
+      val tSet = !r.isNullAt(0)
+      val tieSet = !r.isNullAt(1)
+      val pt = if (tSet) r.getLong(0) else 0L
+      val ptie = if (tieSet) r.getLong(1) else 0L
+      val i = b.add(pt, ptie)
+      var k = 0
+      while (k < nValues) {
+        b.v(k)(i) = if (r.isNullAt(2 + k)) 0.0 else r.getDouble(2 + k)
+        k += 1
+      }
+      if (lastType.isDefined) {
+        val set = !r.isNullAt(lastAt)
+        val pv =
+          if (!set) 0L else if (lastInt) r.getInt(lastAt) else r.getLong(lastAt)
+        b.offerLast(tSet, pt, tieSet, ptie, set, pv)
+      }
+      capped(b)
+    }
+
+    override def eval(b: Runs): Any = serialize(b)
+
+    override def withNewMutableAggBufferOffset(o: Int): AssembleRun =
+      copy(mutableAggBufferOffset = o)
+    override def withNewInputAggBufferOffset(o: Int): AssembleRun =
+      copy(inputAggBufferOffset = o)
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): AssembleRun = copy(children = c)
+  }
+
+  /** Phase 2: a key's runs ([[AssembleRun]] bytes) → its trip: a struct of
+    * `t` and one array per value name, `n`, and `last` when carried. */
+  case class MergeRuns(child: Expression, valueNames: Seq[String],
+                       lastType: Option[DataType], maxSize: Int,
+                       mutableAggBufferOffset: Int = 0,
+                       inputAggBufferOffset: Int = 0)
+      extends RunsAggregate {
+    override def nValues: Int = valueNames.size
+    override def children: Seq[Expression] = Seq(child)
+    override def nullable: Boolean = true
+    override def prettyName: String = "merge_runs"
+
+    override def dataType: DataType = StructType(
+      (StructField("t", ArrayType(LongType, containsNull = false)) +:
+        valueNames.map(StructField(_, ArrayType(DoubleType,
+          containsNull = false)))) ++
+        Seq(StructField("n", LongType, nullable = false)) ++
+        lastType.map(StructField("last", _)))
+
+    override def update(b: Runs, row: InternalRow): Runs = {
+      b.appendBytes(child.eval(row).asInstanceOf[Array[Byte]])
+      capped(b)
+    }
+
+    override def eval(b: Runs): Any = {
+      b.compact(maxSize)
+      val n = b.n
+      val fields = Seq(UnsafeArrayData.fromPrimitiveArray(b.t,
+        Platform.LONG_ARRAY_OFFSET, n, 8)) ++
+        b.v.map(UnsafeArrayData.fromPrimitiveArray(_,
+          Platform.DOUBLE_ARRAY_OFFSET, n, 8)) ++
+        Seq(n.toLong) ++
+        lastType.map(dt =>
+          if (!b.hasLast || !b.lastSet) null
+          else if (dt == IntegerType) Int.box(b.lastV.toInt)
+          else Long.box(b.lastV))
+      new GenericInternalRow(fields.toArray[Any])
+    }
+
+    override def withNewMutableAggBufferOffset(o: Int): MergeRuns =
+      copy(mutableAggBufferOffset = o)
+    override def withNewInputAggBufferOffset(o: Int): MergeRuns =
+      copy(inputAggBufferOffset = o)
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): MergeRuns = copy(child = c.head)
   }
 
   // ---- lifting raw assembled arrays to Temporal structs -------------------
@@ -344,24 +531,12 @@ object Assembly {
     * temporal-value shape ([[TGeom.Val]]): a linear, closed-bounds
     * sequence — exactly `TSeq::make`'s construction defaults
     * (`meos/src/tseq.rs:57-60`). The result feeds every
-    * [[MeosFunctions]] codec (WKT/MF-JSON/WKB). */
+    * [[MeosFunctions]] codec (WKT/MF-JSON/WKB). One native expression
+    * ([[NativeExpressions.TGeompointValExpr]]), so the sink's projection
+    * stays compiled. */
   def tpointVal(pseq: Column, srid: Int = Temporal.DefaultSrid): Column = {
-    val instants = zip_with(
-      zip_with(pseq.getField("t"), pseq.getField("x"),
-        (t, x) => struct(t.as("t"), x.as("x"))),
-      pseq.getField("y"),
-      (tx, y) => struct(
-        timestamp_micros(tx.getField("t")).as("t"),
-        tx.getField("x").as("x"), y.as("y")))
-    struct(
-      lit(TGeom.SubSequence).as("subtype"),
-      lit(srid).as("srid"),
-      lit(Temporal.InterpLinear).as("interp"),
-      array(struct(
-        instants.as("instants"),
-        lit(Temporal.InterpLinear).as("interp"),
-        lit(true).as("lower_inc"),
-        lit(true).as("upper_inc"))).as("sequences"))
+    import org.apache.spark.sql.GraftShims.{column, expression}
+    column(NativeExpressions.TGeompointValExpr(expression(pseq), srid))
   }
 
   /** Lift a `PSeq` column (from tpointAssemble) to a tgeompoint sequence

@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
 import org.apache.spark.sql.{Column, Encoders, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Executor-side bridge for [[NativeExpressions.TGeompointParseExpr]]:
-  * parse text → Catalyst InternalRow of the temporal-value struct.
+/** Executor-side bridges that build the temporal-value struct as a
+  * Catalyst InternalRow: parse text ([[NativeExpressions.TGeompointParseExpr]])
+  * and lift an assembled point trip ([[NativeExpressions.TGeompointValExpr]]).
   *
   * MUST stay a top-level object: Scala only emits Java-visible static
   * forwarders (`graft.meos.TGeomBridge.parseToRow(...)`) for top-level
@@ -22,6 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * races (the `.copy()` happens only after the projection).
   */
 object TGeomBridge {
+  import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
+  import org.apache.spark.sql.types.{BooleanType, StructField, StructType, TimestampType}
+
   private def enc: ExpressionEncoder[TGeom.Val] =
     ExpressionEncoder(Encoders.product[TGeom.Val]
       .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[TGeom.Val]])
@@ -31,6 +35,88 @@ object TGeomBridge {
 
   def parseToRow(wkt: UTF8String): InternalRow =
     serializer.get()(TGeom.parse(wkt.toString)).copy()
+
+  /** The type of [[pointVal]]'s value: [[TGeom.Val]]'s fields, z-less. */
+  val pointValType: StructType = StructType(Seq(
+    StructField("subtype", IntegerType, nullable = false),
+    StructField("srid", IntegerType, nullable = false),
+    StructField("interp", IntegerType, nullable = false),
+    StructField("sequences", ArrayType(StructType(Seq(
+      StructField("instants", ArrayType(StructType(Seq(
+        StructField("t", TimestampType),
+        StructField("x", DoubleType),
+        StructField("y", DoubleType))), containsNull = false)),
+      StructField("interp", IntegerType, nullable = false),
+      StructField("lower_inc", BooleanType, nullable = false),
+      StructField("upper_inc", BooleanType, nullable = false))),
+      containsNull = false), nullable = false)))
+
+  /** Ordinals of `t`, `x`, `y` in the assembled struct. */
+  def pointValOrdinals(dt: DataType): Array[Int] = {
+    val st = dt.asInstanceOf[StructType]
+    Array(st.fieldIndex("t"), st.fieldIndex("x"), st.fieldIndex("y"))
+  }
+
+  /** [[NativeExpressions.TGeompointValExpr]]: an assembled point trip's
+    * `t`/`x`/`y` arrays (at ordinals `ord`) → a linear, closed-bounds
+    * sequence, written straight into an `UnsafeRow` with
+    * `UnsafeRowWriter`. The same value, type and nullability as the
+    * composed form it replaced (two nested `zip_with`s under a `struct`):
+    * arrays of unequal length pad with null fields, and a null input or
+    * array gives null instants. */
+  def pointVal(pseq: InternalRow, ord: Array[Int], srid: Int)
+      : InternalRow = {
+    def array(i: Int) =
+      if (pseq == null || pseq.isNullAt(ord(i))) null
+      else pseq.getArray(ord(i))
+    val ts = array(0)
+    val xs = array(1)
+    val ys = array(2)
+    val n = if (ts == null || xs == null || ys == null) -1
+      else math.max(ts.numElements(), math.max(xs.numElements(),
+        ys.numElements()))
+    val top = new UnsafeRowWriter(4, 128 + 48 * math.max(n, 0))
+    top.resetRowWriter()
+    top.write(0, TGeom.SubSequence)
+    top.write(1, srid)
+    top.write(2, Temporal.InterpLinear)
+    val seqsAt = top.cursor()
+    val seqs = new UnsafeArrayWriter(top, 8)
+    seqs.initialize(1)
+    val seqAt = seqs.cursor()
+    val seqW = new UnsafeRowWriter(seqs, 4)
+    seqW.resetRowWriter()
+    if (n < 0) seqW.setNullAt(0)
+    else {
+      val instsAt = seqW.cursor()
+      val insts = new UnsafeArrayWriter(seqW, 8)
+      insts.initialize(n)
+      val instW = new UnsafeRowWriter(insts, 3)
+      var i = 0
+      while (i < n) {
+        val instAt = insts.cursor()
+        instW.resetRowWriter()
+        if (i < ts.numElements() && !ts.isNullAt(i))
+          instW.write(0, ts.getLong(i))
+        else instW.setNullAt(0)
+        if (i < xs.numElements() && !xs.isNullAt(i))
+          instW.write(1, xs.getDouble(i))
+        else instW.setNullAt(1)
+        if (i < ys.numElements() && !ys.isNullAt(i))
+          instW.write(2, ys.getDouble(i))
+        else instW.setNullAt(2)
+        insts.setOffsetAndSizeFromPreviousCursor(i, instAt)
+        i += 1
+      }
+      seqW.setOffsetAndSizeFromPreviousCursor(0, instsAt)
+    }
+    seqW.write(1, Temporal.InterpLinear)
+    seqW.write(2, true)
+    seqW.write(3, true)
+    seqs.setOffsetAndSizeFromPreviousCursor(0, seqAt)
+    top.setOffsetAndSizeFromPreviousCursor(3, seqsAt)
+    top.getRow
+  }
 }
 
 /** Executor-side bridge for [[NativeExpressions.FloatDotExpr]]: tight loop
@@ -314,9 +400,14 @@ object TGeomOutBridge {
   }
 }
 
-/** Executor-side bridge for the native WKB codec expressions. Encode
-  * reads the temporal-value struct field-by-ordinal via
-  * [[TGeomOutBridge.toVal]] (schema-adaptive, no Row boxing).
+/** Executor-side bridge for the native WKB codec expressions.
+  *
+  * Encode reads the temporal-value struct field-by-ordinal (a
+  * [[TGeomOutBridge.Layout]], so the canonical and the z-less assembly
+  * shapes both encode) and writes the WKB bytes — or, for HexWKB, their
+  * uppercase hex digits — straight into one `byte[]`: no model, no
+  * `ByteBuffer`, no `String`. Byte for byte the layout of
+  * [[MobilityWkb.toWkb]] (little-endian).
   *
   * Decode is one pass with no intermediate model: the WKB bytes — or, for
   * HexWKB, the `UTF8String`'s own bytes, two digits per byte — are read
@@ -333,10 +424,111 @@ object WkbBridge {
   import MobilityWkb.Codes
 
   def toWkb(row: InternalRow, l: TGeomOutBridge.Layout): Array[Byte] =
-    TGeom.toWkb(TGeomOutBridge.toVal(row, l))
+    encode(row, l, hex = false)
 
   def toHexWkb(row: InternalRow, l: TGeomOutBridge.Layout): UTF8String =
-    UTF8String.fromString(TGeom.toHexWkb(TGeomOutBridge.toVal(row, l)))
+    UTF8String.fromBytes(encode(row, l, hex = true))
+
+  private val HexDigits = "0123456789ABCDEF".getBytes("US-ASCII")
+
+  /** Little-endian writer of WKB bytes, or of the hex digits spelling
+    * them (two per byte). */
+  private final class Out(size: Int, hex: Boolean) {
+    val bytes = new Array[Byte](if (hex) 2 * size else size)
+    private var pos = 0
+
+    def u8(b: Int): Unit =
+      if (hex) {
+        bytes(pos) = HexDigits((b >> 4) & 0xf)
+        bytes(pos + 1) = HexDigits(b & 0xf)
+        pos += 2
+      } else {
+        bytes(pos) = b.toByte
+        pos += 1
+      }
+
+    def i16(v: Int): Unit = { u8(v & 0xff); u8((v >> 8) & 0xff) }
+    def i32(v: Int): Unit = { i16(v & 0xffff); i16(v >>> 16) }
+    def i64(v: Long): Unit = { i32(v.toInt); i32((v >>> 32).toInt) }
+    def f64(d: Double): Unit = i64(java.lang.Double.doubleToRawLongBits(d))
+  }
+
+  private def encode(row: InternalRow, l: TGeomOutBridge.Layout,
+                     hex: Boolean): Array[Byte] = {
+    val subtype = row.getInt(l.subtype)
+    val srid = row.getInt(l.srid)
+    val seqs = row.getArray(l.sequences)
+    val nSeq = seqs.numElements()
+    def seq(k: Int): InternalRow = seqs.getStruct(k, l.nSeqFields)
+    def instants(k: Int) = seq(k).getArray(l.seqInstants)
+    // Z when any instant of the value carries one, as MobilityWkb.toWkb
+    var hasZ = false
+    if (l.instZ >= 0) {
+      var k = 0
+      while (!hasZ && k < nSeq) {
+        val is = instants(k)
+        var j = 0
+        while (!hasZ && j < is.numElements()) {
+          hasZ = !is.getStruct(j, l.nInstFields).isNullAt(l.instZ)
+          j += 1
+        }
+        k += 1
+      }
+    }
+    val instBytes = if (hasZ) 32 else 24
+    def seqBytes(k: Int): Int = 5 + instants(k).numElements() * instBytes
+    if ((subtype == TGeom.SubInstant || subtype == TGeom.SubSequence) &&
+        (nSeq == 0 || subtype == TGeom.SubInstant &&
+          instants(0).numElements() == 0))
+      throw new NoSuchElementException(
+        s"a subtype $subtype value without its instant or sequence")
+    val payload = subtype match {
+      case TGeom.SubInstant => instBytes
+      case TGeom.SubSequence => seqBytes(0)
+      case TGeom.SubSequenceSet =>
+        var b = 4
+        var k = 0
+        while (k < nSeq) { b += seqBytes(k); k += 1 }
+        b
+      case o => throw new TGeom.ParseError(s"bad subtype $o")
+    }
+    val out = new Out(4 + (if (srid != 0) 4 else 0) + payload, hex)
+    out.u8(0x01)
+    out.i16(Codes.TGeomPoint)
+    val interp =
+      if (subtype == TGeom.SubInstant) Temporal.InterpNone
+      else row.getInt(l.interp)
+    out.u8((subtype & Codes.SubtypeMask) |
+      ((interp << Codes.InterpShift) & Codes.InterpMask) |
+      (if (hasZ) Codes.FlagZ else 0) | (if (srid != 0) Codes.FlagSrid else 0))
+    if (srid != 0) out.i32(srid)
+    def inst(r: InternalRow): Unit = {
+      out.f64(r.getDouble(l.instX))
+      out.f64(r.getDouble(l.instY))
+      if (hasZ)
+        out.f64(if (r.isNullAt(l.instZ)) 0.0 else r.getDouble(l.instZ))
+      out.i64(r.getLong(l.instT) - MobilityWkb.PgEpochUs)
+    }
+    def sequence(k: Int): Unit = {
+      val q = seq(k)
+      val is = q.getArray(l.seqInstants)
+      val n = is.numElements()
+      out.i32(n)
+      out.u8((if (q.getBoolean(l.seqLo)) Codes.LowerInc else 0) |
+        (if (q.getBoolean(l.seqHi)) Codes.UpperInc else 0))
+      var j = 0
+      while (j < n) { inst(is.getStruct(j, l.nInstFields)); j += 1 }
+    }
+    subtype match {
+      case TGeom.SubInstant => inst(instants(0).getStruct(0, l.nInstFields))
+      case TGeom.SubSequence => sequence(0)
+      case _ =>
+        out.i32(nSeq)
+        var k = 0
+        while (k < nSeq) { sequence(k); k += 1 }
+    }
+    out.bytes
+  }
 
   def fromWkb(b: Array[Byte]): InternalRow = decode(new In(b, null, b.length))
 
@@ -1202,6 +1394,40 @@ object NativeExpressions {
   def tgeompointOut(v: Column, maxdd: Int = 15): Column = {
     import org.apache.spark.sql.GraftShims
     GraftShims.column(TGeompointOutExpr(GraftShims.expression(v), maxdd))
+  }
+
+  /** An assembled point trip (`t`/`x`/`y` arrays, e.g. a `PSeq`) as a
+    * linear, closed-bounds temporal sequence ([[Assembly.tpointVal]]):
+    * one pass into an `UnsafeRow` ([[TGeomBridge.pointVal]]). Never null,
+    * like the `struct` it replaced. */
+  case class TGeompointValExpr(child: Expression, srid: Int)
+      extends UnaryExpression {
+    override def dataType: DataType = TGeomBridge.pointValType
+    override def nullable: Boolean = false
+    override def prettyName: String = "tgeompoint_val"
+
+    @transient private lazy val ordinals =
+      TGeomBridge.pointValOrdinals(child.dataType)
+
+    override def eval(input: InternalRow): Any =
+      TGeomBridge.pointVal(child.eval(input).asInstanceOf[InternalRow],
+        ordinals, srid)
+
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, FalseLiteral}
+      val c = child.genCode(ctx)
+      val ordRef = ctx.addReferenceObj("pointValOrdinals", ordinals, "int[]")
+      ev.copy(code = code"""
+        ${c.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} =
+          graft.meos.TGeomBridge.pointVal(${c.isNull} ? null : ${c.value},
+            $ordRef, $srid);""", isNull = FalseLiteral)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression)
+        : TGeompointValExpr = copy(child = newChild)
   }
 
   /** MobilityDB-layout WKB encode as a native expression

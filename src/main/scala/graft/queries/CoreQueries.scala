@@ -363,9 +363,9 @@ object CoreQueries {
         .orderBy("user_id", "chunk")
     }),
 
-    // q12 — A5/A6: trajectory assembly via the typed Aggregator, through
-    // the salted two-phase path (phase 1: (key, salt) partials; phase 2:
-    // tie-aware linear merge) — one mega-entity's history never
+    // q12 — A5/A6: trajectory assembly through the salted two-phase path
+    // (phase 1: (key, salt) runs that keep their ties; phase 2: the runs
+    // merged, smallest tie per timestamp) — one mega-entity's history never
     // concentrates in a single reducer's heap, and the output is proven
     // equal to single-phase assembly in SkewSpec
     "q12_trip_assembly" -> ((s, dir) => {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.meos.{MeosFunctions, TGeom}
@@ -59,6 +60,69 @@ class PipelineSpec extends SparkTestBase {
     // WKT print of the decoded trip is the ingest-form literal
     val wkt = TGeom.print(decoded)
     assert(wkt.startsWith("SRID=4326;[POINT(-90.06 29.95)@2024-01-01 00:00:00+00"))
+  }
+
+  private def csvDir(rows: String*): String = {
+    val dir = Files.createTempDirectory("ais")
+    Files.writeString(dir.resolve("a.csv"),
+      ("MMSI,BaseDateTime,LAT,LON,VesselType" +: rows).mkString("\n") + "\n")
+    dir.toString
+  }
+
+  test("vt is the type on the posit with the greatest (t, seq) when a " +
+    "vessel's type changes during the day") {
+    // the last timestamp appears twice with different types and positions
+    val posits = AisCsv.read(spark, csvDir(
+      "367000001,2024-01-01T00:00:00,29.95,-90.06,10",
+      "367000001,2024-01-01T00:01:00,29.96,-90.05,30",
+      "367000001,2024-01-01T00:02:00,29.97,-90.04,60",
+      "367000001,2024-01-01T00:02:00,29.98,-90.03,80"))
+    val seqs = posits.select(col("t"), col("lon"), col("vt"),
+        xxhash64(col("t"), col("lon"), col("lat"), col("vt")).as("seq"))
+      .where(col("vt") >= 60).collect()
+      .map(r => (r.getAs[Long]("seq"), r.getAs[Int]("vt"),
+        r.getAs[Double]("lon")))
+      .sortBy(_._1)
+    assert(seqs.length == 2)
+    val trips = Pipelines.assembleTrips(posits).collect()
+    assert(trips.length == 1)
+    // the type comes from the larger seq, the kept posit from the smaller
+    assert(trips(0).getAs[Int]("vt") == seqs(1)._2)
+    val s = trips(0).getAs[Row]("s")
+    assert(s.getAs[Long]("n") == 3L)
+    assert(s.getAs[scala.collection.Seq[Double]]("x").last == seqs(0)._3)
+  }
+
+  test("a null VesselType on the last posit gives vt 0") {
+    val trips = Pipelines.assembleTrips(AisCsv.read(spark, csvDir(
+      "367000001,2024-01-01T00:00:00,29.95,-90.06,70",
+      "367000001,2024-01-01T00:01:00,29.96,-90.05,"))).collect()
+    assert(trips.map(_.getAs[Int]("vt")).toSeq == Seq(0))
+  }
+
+  test("null t, LAT, LON and MMSI inputs: epoch 0, coordinate 0.0, the " +
+    "row's vessel dropped") {
+    def trip(rows: String*): Seq[(Long, Int, Seq[Long], Seq[Double],
+                                  Seq[Double])] =
+      Pipelines.assembleTrips(AisCsv.read(spark, csvDir(rows: _*)))
+        .orderBy("mmsi").collect().toSeq.map { r =>
+          val s = r.getAs[Row]("s")
+          (r.getAs[Long]("mmsi"), r.getAs[Int]("vt"),
+            s.getAs[scala.collection.Seq[Long]]("t").toSeq,
+            s.getAs[scala.collection.Seq[Double]]("x").toSeq,
+            s.getAs[scala.collection.Seq[Double]]("y").toSeq)
+        }
+    val t0 = 1704067200000000L
+    val first = "1,2024-01-01T00:00:00,1.0,2.0,70"
+    assert(trip(first, "1,2024-01-01T00:01:00,,2.0,70") ==
+      Seq((1L, 70, Seq(t0, t0 + 60000000L), Seq(2.0, 2.0), Seq(1.0, 0.0))))
+    assert(trip(first, "1,2024-01-01T00:01:00,1.0,,70") ==
+      Seq((1L, 70, Seq(t0, t0 + 60000000L), Seq(2.0, 0.0), Seq(1.0, 1.0))))
+    // a null t sorts as epoch 0 in the trip and loses the vessel type
+    assert(trip(first, "1,,3.0,4.0,30") ==
+      Seq((1L, 70, Seq(0L, t0), Seq(4.0, 2.0), Seq(3.0, 1.0))))
+    assert(trip(first, ",2024-01-01T00:01:00,1.0,2.0,30") ==
+      Seq((1L, 70, Seq(t0), Seq(2.0), Seq(1.0))))
   }
 
   test("aisToFile with MF-JSON payload") {

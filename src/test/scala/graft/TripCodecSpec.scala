@@ -14,7 +14,7 @@ import graft.meos.TGeom.Val
 
 /** The trip codec's native leg against TGeom's driver-side codec, on
   * generated values ([[TripVals.genVal]], fixed seeds): HexWKB and WKB
-  * decode, value-at and WKT print, each run with interpreted
+  * encode and decode, value-at and WKT print, each run with interpreted
   * (`NO_CODEGEN`) and generated (`CODEGEN_ONLY`) expression evaluation;
   * malformed HexWKB; and the formatter-free timestamp printer against the
   * `DateTimeFormatter` one it replaced. */
@@ -71,6 +71,80 @@ class TripCodecSpec extends SparkTestBase {
           assert(viaHex(i) == vals(i), s"$mode hex #$i ${hexes(i)}")
           assert(viaBin(i) == vals(i), s"$mode wkb #$i ${hexes(i)}")
         }
+      }
+    }
+  }
+
+  test("HexWKB/WKB encode: native == TGeom.toHexWkb/toWkb on generated " +
+    "values (property, interpreted and codegen)") {
+    val vals = sample(TripVals.genVal)
+    val df = spark.createDataset(spark.sparkContext.parallelize(
+      vals.zipWithIndex, 2))(Encoders.tuple(valEncoder, Encoders.scalaInt))
+      .toDF("v", "i")
+    Modes.foreach { mode =>
+      inMode(mode) {
+        val got = df.orderBy("i").select(
+          NativeExpressions.tgeompointAsHexWkb(col("v")),
+          NativeExpressions.tgeompointAsWkb(col("v"))).collect()
+        vals.indices.foreach { i =>
+          val hex = TGeom.toHexWkb(vals(i))
+          assert(got(i).getString(0) == hex, s"$mode hex #$i ${vals(i)}")
+          assert(got(i).getAs[Array[Byte]](1).sameElements(
+            TGeom.toWkb(vals(i))), s"$mode wkb #$i $hex")
+        }
+      }
+    }
+  }
+
+  /** `Assembly.tpointVal`'s former composed form: the reference for the
+    * native expression. */
+  private def composedTpointVal(pseq: org.apache.spark.sql.Column,
+                                srid: Int) = {
+    val instants = zip_with(
+      zip_with(pseq.getField("t"), pseq.getField("x"),
+        (t, x) => struct(t.as("t"), x.as("x"))),
+      pseq.getField("y"),
+      (tx, y) => struct(
+        timestamp_micros(tx.getField("t")).as("t"),
+        tx.getField("x").as("x"), y.as("y")))
+    struct(
+      lit(TGeom.SubSequence).as("subtype"),
+      lit(srid).as("srid"),
+      lit(Temporal.InterpLinear).as("interp"),
+      array(struct(
+        instants.as("instants"),
+        lit(Temporal.InterpLinear).as("interp"),
+        lit(true).as("lower_inc"),
+        lit(true).as("upper_inc"))).as("sequences"))
+  }
+
+  test("tpointVal: native == the composed zip_with form, type and " +
+    "nullability included, on unequal lengths and nulls (interpreted and " +
+    "codegen)") {
+    def arr[A](g: Gen[A]): Gen[Seq[Any]] = Gen.frequency(
+      1 -> Gen.const(null),
+      8 -> Gen.choose(0, 5).flatMap(n => Gen.listOfN(n,
+        Gen.frequency(5 -> g.map(a => a: Any), 1 -> Gen.const(null)))))
+    val gen = for {
+      nul <- Gen.frequency(1 -> true, 9 -> false)
+      t <- arr(TripVals.genUs)
+      x <- arr(Gen.choose(-180.0, 180.0))
+      y <- arr(Gen.choose(-90.0, 90.0))
+    } yield if (nul) null else Row(t, x, y, 3L)
+    val pseq = StructType(Seq(StructField("t", ArrayType(LongType)),
+      StructField("x", ArrayType(DoubleType)),
+      StructField("y", ArrayType(DoubleType)),
+      StructField("n", LongType)))
+    val df = frame(sample(gen).zipWithIndex.map { case (r, i) => Row(i, r) },
+      StructType(Seq(StructField("i", IntegerType), StructField("s", pseq))))
+    Modes.foreach { mode =>
+      inMode(mode) {
+        val want = df.orderBy("i").select(composedTpointVal(col("s"), 4326))
+        val got = df.orderBy("i").select(
+          graft.meos.Assembly.tpointVal(col("s"), 4326))
+        assert(got.schema.head.copy(name = "") == want.schema.head.copy(
+          name = ""))
+        assert(got.collect().toSeq == want.collect().toSeq, mode)
       }
     }
   }

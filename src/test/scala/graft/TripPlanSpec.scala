@@ -5,7 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{ScalaAggregator, SortAggregateExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -20,6 +23,8 @@ import graft.sources.{AisCsv, TripSource}
   * of falling back to interpretation). Results are checked against TGeom's
   * driver-side codec on the written trip file. */
 class TripPlanSpec extends SparkTestBase {
+
+  private object aqe extends AdaptiveSparkPlanHelper
 
   /** An extensions session (the overlap-join rewrite) on the shared
     * context, with codegen fallback off and broadcast joins off (so the
@@ -70,29 +75,56 @@ class TripPlanSpec extends SparkTestBase {
     dir.toString
   }
 
+  /** The executions of `aisToFile` on [[writeCsv]]'s file in `s`, after
+    * checking it wrote the eight trips. */
+  private def aisToFileExecutions(s: SparkSession): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    val out = Files.createTempDirectory("trips-plan").toString + "/out"
+    try Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
+    finally {
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (qes.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      s.listenerManager.unregister(listener)
+    }
+    assert(!qes.isEmpty, "the write was not observed")
+    assert(s.read.text(out).count() == 8)
+    qes.toArray(Array.empty[QueryExecution]).toSeq
+  }
+
   test("aisToFile's write plan has no ScalaUDF and compiles in codegen") {
     withExtSession { s =>
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-          plans.add(qe.analyzed)
-        override def onFailure(f: String, qe: QueryExecution,
-                               e: Exception): Unit = ()
+      aisToFileExecutions(s).map(_.analyzed).foreach(p =>
+        assert(udfs(p).isEmpty, p.treeString))
+    }
+  }
+
+  test("aisToFile's executed plan scans the CSV once, with no join, no " +
+    "sort aggregate and no ScalaAggregator") {
+    withExtSession { s =>
+      val qes = aisToFileExecutions(s)
+      assert(qes.size == 1, "one action writes the trips")
+      val plan = qes.head.executedPlan
+      val nodes = aqe.collect(plan) { case p => p }
+      val scans = nodes.collect {
+        case f: FileSourceScanExec if f.relation.fileFormat.toString == "CSV" =>
+          f
       }
-      s.listenerManager.register(listener)
-      val out = Files.createTempDirectory("trips-plan").toString + "/out"
-      try Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
-      finally {
-        // listener events are delivered asynchronously
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (plans.isEmpty && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        s.listenerManager.unregister(listener)
-      }
-      assert(!plans.isEmpty, "the write was not observed")
-      plans.forEach(p => assert(udfs(p).isEmpty, p.treeString))
-      val lines = s.read.text(out).collect().map(_.getString(0))
-      assert(lines.length == 8)
+      assert(scans.size == 1, plan.treeString)
+      assert(!nodes.exists {
+        case _: BaseJoinExec | _: SortAggregateExec => true
+        case _ => false
+      }, plan.treeString)
+      assert(!nodes.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[ScalaAggregator[_, _, _]]))), plan.treeString)
     }
   }
 
