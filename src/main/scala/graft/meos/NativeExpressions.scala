@@ -1,5 +1,6 @@
 package graft.meos
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
@@ -530,9 +531,11 @@ object WkbBridge {
     out.bytes
   }
 
-  def fromWkb(b: Array[Byte]): InternalRow = decode(new In(b, null, b.length))
+  def fromWkb(b: Array[Byte]): InternalRow =
+    memoized(hex = false, UTF8String.fromBytes(b))(
+      decode(new In(b, null, b.length)))
 
-  def fromHexWkb(s: UTF8String): InternalRow = {
+  def fromHexWkb(s: UTF8String): InternalRow = memoized(hex = true, s) {
     val n = s.numBytes
     TGeom.checkHexLength(n)
     val in = new In(null, s, n / 2)
@@ -541,6 +544,43 @@ object WkbBridge {
     // MobilityWkb.fromWkb); they must still be spelled in hex
     while (in.pos < in.size) in.u8()
     row
+  }
+
+  /** The last value a task thread decoded, with a copy of its input. */
+  private final class Memo(var task: TaskContext) {
+    var hex = false
+    var key: UTF8String = _
+    var row: UnsafeRow = _
+  }
+  private val memo = new ThreadLocal[Memo]
+
+  /** Decodes `key`, or returns the row this task thread decoded last when
+    * its input bytes are equal. Catalyst re-derives a projected decode
+    * inside the null checks it infers below the projection, so one trip
+    * would otherwise be decoded once per check. A task-completion listener
+    * drops the entry, so no decoded row outlives its task; without a
+    * `TaskContext` (driver-side evaluation) nothing is kept. */
+  private def memoized(hex: Boolean, key: UTF8String)(
+      decode: => UnsafeRow): InternalRow = {
+    val tc = TaskContext.get()
+    if (tc == null) return decode
+    var m = memo.get()
+    if (m == null || (m.task ne tc)) {
+      val fresh = new Memo(tc)
+      tc.addTaskCompletionListener[Unit] { _ =>
+        fresh.task = null; fresh.key = null; fresh.row = null
+      }
+      memo.set(fresh)
+      m = fresh
+    }
+    if (m.hex == hex && m.key == key) m.row
+    else {
+      val row = decode
+      m.hex = hex
+      m.key = key.clone()
+      m.row = row
+      row
+    }
   }
 
   /** Field ordinals of the decoded struct. */

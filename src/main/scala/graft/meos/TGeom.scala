@@ -187,6 +187,18 @@ object TGeom {
   def fmtFloat(v: Double, maxdd: Int = 15): String = {
     if (v.isNaN) return "NaN"
     if (v.isInfinite) return if (v > 0) "inf" else "-inf"
+    // BigDecimal(v) starts from Double.toString's digits: when they have no
+    // exponent and need no rounding at maxdd, only the zeros go
+    val d = java.lang.Double.toString(v)
+    if (d.indexOf('E') < 0) {
+      val dot = d.indexOf('.')
+      var end = d.length
+      while (d.charAt(end - 1) == '0') end -= 1
+      if (end - dot - 1 <= maxdd) {
+        val s = d.substring(0, if (end == dot + 1) dot else end)
+        return if (s == "-0") "0" else s
+      }
+    }
     val bd = BigDecimal(v).setScale(maxdd, BigDecimal.RoundingMode.HALF_EVEN)
     val s = bd.underlying.stripTrailingZeros.toPlainString
     if (s == "-0") "0" else s

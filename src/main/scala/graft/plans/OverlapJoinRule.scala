@@ -1,10 +1,15 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Auto-rewrite of box-overlap theta joins (SURVEY §4.2's "range-join
   * rule", the optimizer-rule leg of J2 — `overlaps_tbox_tbox`,
@@ -20,18 +25,36 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *
   * Any such pair IS an interval overlap of the derived intervals
   * [l.tmin, l.tmax] × [r.tmin, r.tmax], whatever the columns are named.
-  * The rewrite explodes each side into fixed-width time buckets covering
-  * its interval and equi-joins on the bucket id, keeping every other
-  * conjunct (including the time pair itself) as the exact post-join
-  * predicate — so the rewrite is output-identical, it only changes HOW
-  * candidates meet: a shuffle on ints instead of |L|×|R|.
+  * The rewrite explodes each side into fixed-width time buckets and
+  * equi-joins on the bucket id, keeping every other conjunct (including
+  * the time pair itself) as the exact post-join predicate — so the
+  * rewrite is output-identical, it only changes HOW candidates meet: a
+  * shuffle on ints instead of |L|×|R|. Interval bounds are
+  * `least/greatest`-normalized per side first, which keeps even
+  * degenerate (lo > hi) rows correct. Each qualifying pair meets in
+  * exactly ONE bucket, so the rewrite needs NO dedup and preserves
+  * duplicate input rows faithfully. It has two forms:
   *
-  * Each qualifying pair meets in exactly ONE bucket — the one containing
-  * `greatest(l.lo, r.lo)` (both intervals contain the larger of the two
-  * lower bounds) — enforced with a canonical-bucket predicate, so the
-  * rewrite needs NO dedup and preserves duplicate input rows faithfully.
-  * Interval bounds are `least/greatest`-normalized per side first, which
-  * keeps even degenerate (lo > hi) rows correct.
+  *  - *anchored*: when one side is a `LocalRelation` (a literal probe set,
+  *    e.g. a handful of windows from `createDataFrame`), its normalized
+  *    lower bounds are evaluated at plan time and the earliest, L, becomes
+  *    a plan constant ([[AnchorLiteral]]). Each wide-side row goes to the
+  *    ONE bucket
+  *    `bucket(greatest(lo, L))`; each probe row is exploded over
+  *    `[bucket(L), bucket(hi)]`. An overlapping pair meets there because
+  *    `greatest(wide.lo, L)` lies in `[L, probe.hi]` whenever the two
+  *    intervals overlap. The wide side is shuffled once per row instead of
+  *    once per bucket it spans;
+  *  - *symmetric*: otherwise each side is exploded over every bucket its
+  *    interval covers, and a canonical-bucket predicate keeps the pair
+  *    only in the bucket containing `greatest(l.lo, r.lo)` (both
+  *    intervals contain the larger of the two lower bounds).
+  *
+  * The anchored form is chosen when the probe side's replicated rows,
+  * counted exactly at plan time, take no more bytes than the other
+  * side's `stats.sizeInBytes`; otherwise (a probe that spans far more
+  * buckets than the wide side is worth, or no literal side) the
+  * symmetric form runs. Neither form broadcasts anything.
   *
   * Guards:
   *  - inner/cross joins only (a null or dropped bucket row can never have
@@ -42,6 +65,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *  - skips when either side's estimated size fits the broadcast
   *    threshold — a broadcast nested-loop over a small build side is
   *    already acceptable, and the rewrite would force a shuffle;
+  *  - the anchored form only for a deterministic, non-streaming
+  *    `LocalRelation` probe side with at least one non-null bound, whose
+  *    per-row bucket ranges each fit in an array;
   *  - `spark.graft.overlapJoin.enabled` (default true) switches it off,
   *    `spark.graft.overlapJoin.bucketWidthSeconds` (default 604800 = 7
   *    days, q15's width) sets the bucket size — data-dependent width
@@ -109,41 +135,107 @@ object OverlapJoinRule extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
+  /** One side of the join with its `least/greatest`-normalized interval. */
+  private final case class Side(plan: LogicalPlan, lo: Expression,
+                                hi: Expression)
+
   private def rewrite(j: Join, l: LogicalPlan, r: LogicalPlan,
                       cond: Expression, widthUs: Long): LogicalPlan = {
-    val conjuncts = splitConjuncts(cond)
-    val pairs = timePairs(conjuncts, l, r)
+    val pairs = timePairs(splitConjuncts(cond), l, r)
     // first opposite-direction pair: l.lo <= r.hi with r.lo <= l.hi
     val (lLo, rHi, _) = pairs.find(_._3).get
-    val (lHi2, rLo2, _) = pairs.find(!_._3).get
-    val (lHi, rLo) = (lHi2, rLo2)
+    val (lHi, rLo, _) = pairs.find(!_._3).get
+    val sl = Side(l, Least(Seq(lLo, lHi)), Greatest(Seq(lLo, lHi)))
+    val sr = Side(r, Least(Seq(rLo, rHi)), Greatest(Seq(rLo, rHi)))
 
     val w = Literal(widthUs, LongType)
     def bucketOf(e: Expression): Expression =
       IntegralDivide(UnixMicros(e), w)
-    // per-side normalized interval -> covered bucket range (Sequence is
-    // TimeZoneAwareExpression: without an explicit timeZoneId it reports
-    // unresolved even over longs)
-    def bucketSeq(lo: Expression, hi: Expression): Expression =
-      new Sequence(
-        bucketOf(Least(Seq(lo, hi))), bucketOf(Greatest(Seq(lo, hi))),
-        None, Some(conf.sessionLocalTimeZone))
 
-    def exploded(side: LogicalPlan, lo: Expression, hi: Expression,
-                 name: String): (LogicalPlan, Attribute) = {
+    // the anchored form's probe side and its earliest lower bound, if a
+    // literal side makes it the cheaper copy
+    val anchor = Seq(sr -> l, sl -> r).iterator.flatMap {
+      case (probe, wide) => anchorOf(probe, wide, bucketOf).map(probe -> _)
+    }.nextOption()
+
+    // the bucket range each row of a side is exploded over
+    def range(s: Side): (Expression, Expression) = anchor match {
+      case None => (bucketOf(s.lo), bucketOf(s.hi))
+      case Some((probe, at)) if probe eq s => (bucketOf(at), bucketOf(s.hi))
+      case Some((_, at)) =>
+        val b = bucketOf(Greatest(Seq(s.lo, at)))
+        (b, b)
+    }
+    // Sequence is TimeZoneAwareExpression: without an explicit timeZoneId
+    // it reports unresolved even over longs
+    def exploded(s: Side, name: String): (LogicalPlan, Attribute) = {
       val attr = AttributeReference(name, LongType, nullable = false)()
-      (Generate(Explode(bucketSeq(lo, hi)), Nil, outer = false, None,
-        Seq(attr), side), attr)
+      val (from, to) = range(s)
+      (Generate(Explode(new Sequence(from, to, None,
+        Some(conf.sessionLocalTimeZone))), Nil, outer = false, None,
+        Seq(attr), s.plan), attr)
     }
 
-    val (genL, bL) = exploded(l, lLo, lHi, "__graft_bucket_l")
-    val (genR, bR) = exploded(r, rLo, rHi, "__graft_bucket_r")
+    val (genL, bL) = exploded(sl, "__graft_bucket_l")
+    val (genR, bR) = exploded(sr, "__graft_bucket_r")
+    // symmetric form: each qualifying pair meets in every bucket both
+    // intervals cover, and is kept in the one holding the larger of the
+    // two interval starts; the anchored form's wide row has one bucket
+    val keys =
+      if (anchor.isDefined) EqualTo(bL, bR)
+      else And(EqualTo(bL, bR),
+        EqualTo(bL, bucketOf(Greatest(Seq(sl.lo, sr.lo)))))
+    Project(j.output, Join(genL, genR, Inner, Some(And(keys, cond)), j.hint))
+  }
 
-    // each qualifying pair meets exactly once: in the bucket holding the
-    // larger of the two (normalized) interval starts
-    val canonical = EqualTo(bL,
-      bucketOf(Greatest(Seq(Least(Seq(lLo, lHi)), Least(Seq(rLo, rHi))))))
-    val newCond = And(And(EqualTo(bL, bR), canonical), cond)
-    Project(j.output, Join(genL, genR, Inner, Some(newCond), j.hint))
+  /** The anchor L of the anchored form — the earliest normalized lower
+    * bound of `probe`, as a timestamp constant — when `probe` is a
+    * `LocalRelation` and its rows replicated over `[bucket(L),
+    * bucket(hi)]` take no more bytes than `wide`'s estimate. The bounds
+    * and bucket ids are evaluated here with the same expressions the plan
+    * runs, so the plan-time count matches the rows the plan explodes. */
+  private def anchorOf(probe: Side, wide: LogicalPlan,
+                       bucketOf: Expression => Expression)
+      : Option[Expression] = probe.plan match {
+    case rel: LocalRelation if !rel.isStreaming &&
+        probe.lo.deterministic && probe.hi.deterministic =>
+      def eval(e: Expression): Seq[Any] = {
+        val bound = BindReferences.bindReference(e, rel.output)
+        rel.data.map(bound.eval(_))
+      }
+      val los = eval(probe.lo).collect { case t: Long => t }
+      if (los.isEmpty) None
+      else {
+        val at = AnchorLiteral(los.min)
+        val first = bucketOf(at).eval().asInstanceOf[Long]
+        val rows = eval(bucketOf(probe.hi)).collect {
+          case b: Long => b - first + 1
+        }
+        val perRow = EstimationUtils.getSizePerRow(rel.output) + 8
+        val fits = rows.forall(_ <= ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+        Option.when(fits &&
+          BigInt(rows.sum) * perRow <= wide.stats.sizeInBytes)(at)
+      }
+    case _ => None
+  }
+}
+
+/** The anchored form's L: a timestamp constant that generated code reads
+  * from its references instead of inlining. L changes with every probe
+  * set, and an inlined value would make each query compile its stages
+  * anew instead of reusing the classes generated for the last one. Not
+  * foldable, so constant folding leaves it (and the bucket ids computed
+  * from it) in place. */
+private[plans] final case class AnchorLiteral(value: Long)
+    extends LeafExpression {
+  override def dataType: DataType = TimestampType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("anchor", java.lang.Long.valueOf(value))
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();",
+      isNull = FalseLiteral)
   }
 }

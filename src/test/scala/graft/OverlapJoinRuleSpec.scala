@@ -1,10 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Explode, Sequence}
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.functions.{col, timestamp_micros}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** The injected optimizer rule turns the SQL spelling of a box-overlap
   * theta join (J2's conjunction pattern) into the bucketed equi-join —
-  * no nested-loop/cartesian — with output identical to the naive plan. */
+  * no nested-loop/cartesian — with output identical to the naive plan,
+  * in its anchored form (a literal probe side) and its symmetric form. */
 class OverlapJoinRuleSpec extends SparkTestBase {
 
   private def withExtSession(f: SparkSession => Unit): Unit = {
@@ -94,6 +101,148 @@ class OverlapJoinRuleSpec extends SparkTestBase {
       val got = rows.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         .sorted
       assert(got == Seq((1L, 2L), (1L, 2L)))
+    }
+  }
+
+  private val WidthKey = "spark.graft.overlapJoin.bucketWidthSeconds"
+  private val EnabledKey = "spark.graft.overlapJoin.enabled"
+
+  /** For each bucket explode of the rewrite in `df`'s optimized plan,
+    * whether it puts every row in one bucket (the anchored form's wide
+    * side). */
+  private def bucketExplodes(df: DataFrame): Seq[Boolean] =
+    df.queryExecution.optimizedPlan.collect {
+      case g: Generate
+          if g.generatorOutput.exists(_.name.startsWith("__graft_bucket_")) =>
+        g.generator match {
+          case Explode(q: Sequence) => q.start.semanticEquals(q.stop)
+          case other => fail(s"unexpected bucket generator $other")
+        }
+    }
+
+  private def anchored(df: DataFrame): Boolean =
+    bucketExplodes(df).contains(true)
+
+  private val IvSchema = StructType(Seq(StructField("id", IntegerType),
+    StructField("lo", LongType), StructField("hi", LongType)))
+
+  /** (id, lo µs, hi µs) rows as an interval frame: a `LocalRelation` after
+    * optimization when `literal`, an RDD scan otherwise. */
+  private def intervals(s: SparkSession, rows: Seq[Row],
+                        literal: Boolean): DataFrame = {
+    val raw =
+      if (literal) s.createDataFrame(rows.asJava, IvSchema)
+      else s.createDataFrame(s.sparkContext.parallelize(rows, 2), IvSchema)
+    raw.select(col("id"), timestamp_micros(col("lo")).as("lo"),
+      timestamp_micros(col("hi")).as("hi"))
+  }
+
+  private def overlapJoin(a: DataFrame, b: DataFrame): DataFrame =
+    a.join(b, a("lo") <= b("hi") && b("lo") <= a("hi"))
+      .select(a("id"), b("id"), a("lo"), a("hi"), b("lo"), b("hi"))
+
+  /** The join's rows with the rule on, and with it off (the nested loop),
+    * as sorted multisets; `check` sees the rewritten frame first. */
+  private def bothWays(s: SparkSession, q: () => DataFrame)(
+      check: DataFrame => Unit): (Seq[String], Seq[String]) = {
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val on = q()
+    check(on)
+    val fast = rows(on)
+    s.conf.set(EnabledKey, "false")
+    try {
+      val off = q()
+      assert(bucketExplodes(off).isEmpty)
+      (fast, rows(off))
+    } finally s.conf.set(EnabledKey, "true")
+  }
+
+  test("a literal probe side whose replicated rows outweigh the wide side " +
+    "keeps the symmetric form; without its far row it is anchored") {
+    withExtSession { s =>
+      s.conf.set(WidthKey, 3600L)
+      val H = 3600L * 1000000L
+      val t0 = 1700000000L * 1000000L
+      // four wide rows of 3 hours each, from a range: a small size estimate
+      val wide = s.range(0, 4).select(col("id").cast("int").as("id"),
+        timestamp_micros(col("id") * 2 * H + t0).as("lo"),
+        timestamp_micros(col("id") * 2 * H + t0 + 3 * H).as("hi"))
+      val near = Row(1, t0 + H, t0 + H + 60000000L)
+      // a window ~24 years earlier: anchoring at it would replicate every
+      // window over ~200k hour buckets
+      val far = Row(2, 946684800L * 1000000L, 946684800L * 1000000L + H)
+      for ((probe, wantAnchored) <- Seq(Seq(near, far) -> false,
+                                        Seq(near) -> true)) {
+        val (fast, naive) = bothWays(s, () =>
+          overlapJoin(intervals(s, probe, literal = true), wide)) { df =>
+          assert(bucketExplodes(df).size == 2, df.queryExecution.optimizedPlan)
+          assert(anchored(df) == wantAnchored,
+            df.queryExecution.optimizedPlan)
+        }
+        assert(fast == naive)
+        assert(fast.size == 1, fast)
+      }
+    }
+  }
+
+  test("property: the rewrite equals the nested-loop join in both forms " +
+    "(degenerate, point, null, duplicate, pre-1970 and bucket-edge " +
+    "bounds)") {
+    withExtSession { s =>
+      s.conf.set(WidthKey, 3600L)
+      val H = 3600L * 1000000L
+      val rnd = new scala.util.Random(20240601)
+      // pre-1970 (IntegralDivide truncates toward zero there), the epoch
+      // and 2024
+      val bases = Seq(-3 * H - H / 2, -H, 0L, 1704067200L * 1000000L)
+      def t(base: Long): Long = rnd.nextInt(4) match {
+        case 0 => base + (rnd.nextInt(9) - 4) * H + (rnd.nextInt(3) - 1)
+        case _ => base + (rnd.nextDouble() * 8 * H).toLong - 4 * H
+      }
+      def bound(v: Long): Any = if (rnd.nextInt(10) == 0) null else v
+      def table(n: Int, id0: Int): Seq[Row] = {
+        val out = Seq.newBuilder[Row]
+        var prev: Row = null
+        (0 until n).foreach { k =>
+          val row =
+            if (prev != null && rnd.nextInt(6) == 0) prev // a duplicate
+            else {
+              val lo = t(bases(rnd.nextInt(bases.size)))
+              val hi = rnd.nextInt(6) match {
+                case 0 => lo // a point
+                case 1 => lo - (rnd.nextDouble() * 2 * H).toLong // lo > hi
+                case _ => lo + (rnd.nextDouble() * 3 * H).toLong
+              }
+              Row(id0 + k, bound(lo), bound(hi))
+            }
+          out += row
+          prev = row
+        }
+        out.result()
+      }
+      val deadline = System.nanoTime() + 90L * 1000000000L
+      var cases, anchoredCases = 0
+      while (cases < 24 && System.nanoTime() < deadline) {
+        val literal = cases % 3 != 2
+        val probeLeft = cases % 2 == 0
+        val probe = table(1 + rnd.nextInt(6), 1000)
+        val wide = table(5 + rnd.nextInt(30), 0)
+        def q(): DataFrame = {
+          val p = intervals(s, probe, literal)
+          val w = intervals(s, wide, literal = false)
+          if (probeLeft) overlapJoin(p, w) else overlapJoin(w, p)
+        }
+        val canAnchor = literal && probe.exists(r =>
+          !r.isNullAt(1) || !r.isNullAt(2))
+        val (fast, naive) = bothWays(s, () => q()) { df =>
+          assert(bucketExplodes(df).size == 2, df.queryExecution.optimizedPlan)
+          assert(anchored(df) == canAnchor, df.queryExecution.optimizedPlan)
+        }
+        assert(fast == naive, s"case $cases: probe $probe wide $wide")
+        if (canAnchor) anchoredCases += 1
+        cases += 1
+      }
+      assert(cases >= 6 && anchoredCases >= 3, s"$cases cases ran")
     }
   }
 }

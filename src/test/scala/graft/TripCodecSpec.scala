@@ -75,6 +75,47 @@ class TripCodecSpec extends SparkTestBase {
     }
   }
 
+  test("HexWKB/WKB decode through the per-task memo: adjacent " +
+    "equal-length payloads and a repeated one keep their own values " +
+    "(interpreted and codegen)") {
+    val vs = Seq("[POINT(1 1)@2000-01-01, POINT(2 2)@2000-01-02]",
+      "[POINT(3 1)@2000-01-01, POINT(2 5)@2000-01-02]",
+      "POINT(7 8)@2001-01-01").map(TGeom.parse)
+    val hs = vs.map(TGeom.toHexWkb)
+    assert(hs(0).length == hs(1).length && hs(0) != hs(1))
+    val order = Seq(0, 1, 1, 0, 2, 2, 0)
+    // one partition, so the rows meet the same task thread in this order
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      order.zipWithIndex.map { case (k, i) => Row(i, hs(k)) }, 1),
+      StructType(Seq(StructField("i", IntegerType),
+        StructField("hex", StringType))))
+    Modes.foreach { mode =>
+      inMode(mode) {
+        // each decode runs twice per row: in the filter and the projection
+        def decoded(c: org.apache.spark.sql.Column): Seq[Val] =
+          df.where(c.getField("srid") >= 0).orderBy("i").select(c.as("v"))
+            .select(col("v.*")).as(valEncoder).collect().toSeq
+        val viaHex = decoded(NativeExpressions.tgeompointFromHexWkb(col("hex")))
+        val viaBin =
+          decoded(NativeExpressions.tgeompointFromWkb(unhex(col("hex"))))
+        assert(viaHex == order.map(vs), mode)
+        assert(viaBin == order.map(vs), mode)
+      }
+    }
+    // equal input bytes give the same row inside a task, a fresh one on
+    // the driver (no TaskContext)
+    val h0 = hs(0)
+    val inTask = spark.sparkContext.parallelize(Seq(h0), 1).map { h =>
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(h)
+      graft.meos.WkbBridge.fromHexWkb(u) eq
+        graft.meos.WkbBridge.fromHexWkb(u.clone())
+    }.collect()
+    assert(inTask.sameElements(Seq(true)))
+    val u = org.apache.spark.unsafe.types.UTF8String.fromString(h0)
+    assert(graft.meos.WkbBridge.fromHexWkb(u) ne
+      graft.meos.WkbBridge.fromHexWkb(u))
+  }
+
   test("HexWKB/WKB encode: native == TGeom.toHexWkb/toWkb on generated " +
     "values (property, interpreted and codegen)") {
     val vals = sample(TripVals.genVal)
@@ -265,6 +306,35 @@ class TripCodecSpec extends SparkTestBase {
     }
     for (z <- zones; v <- sample(TripVals.genVal, 100))
       assert(TGeom.print(v, 15, z) == refPrint(v, z), s"$z")
+  }
+
+  /** `TGeom.fmtFloat`'s `BigDecimal` path, the reference for its fast
+    * path. */
+  private def refFloat(v: Double, maxdd: Int): String = {
+    if (v.isNaN) return "NaN"
+    if (v.isInfinite) return if (v > 0) "inf" else "-inf"
+    val s = BigDecimal(v).setScale(maxdd, BigDecimal.RoundingMode.HALF_EVEN)
+      .underlying.stripTrailingZeros.toPlainString
+    if (s == "-0") "0" else s
+  }
+
+  test("fmtFloat is byte-identical to the BigDecimal path at every " +
+    "maxdd 0-17 (generated coordinates and edge values)") {
+    val coords = sample(TripVals.genVal).flatMap(_.sequences)
+      .flatMap(_.instants).flatMap(i => Seq(i.x, i.y) ++ i.z)
+    val rnd = new scala.util.Random(17)
+    val scaled = (1 to 400).map(_ =>
+      (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(30) - 8))
+    val edges = Seq(0.0, -0.0, Double.MinPositiveValue,
+      -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL / 3,
+      java.lang.Double.MIN_NORMAL, 1e-7, -1e-7, 1e-3, 9.999999e-4, 1e7,
+      9999999.999999998, 1e21, -1e21, 0.1 + 0.2, 1.0 / 3,
+      0.12345678901234568, 1.2345678901234567, 0.1234567890123456,
+      -0.9999999999999999, 2.5, 0.5, 1.5, 0.05, 123456.0, 1e16, 1e15 + 0.5,
+      Double.MaxValue, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    for (v <- coords ++ scaled ++ edges; maxdd <- 0 to 17)
+      assert(TGeom.fmtFloat(v, maxdd) == refFloat(v, maxdd), s"$v $maxdd")
   }
 
   // ---- malformed HexWKB ----------------------------------------------------

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{ScalaAggregator, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -148,22 +150,39 @@ class TripPlanSpec extends SparkTestBase {
       val ws = Seq((1, -78.0, -77.5, 22.0, 22.5, t0 + 600, t0 + 1800,
         t0 + 1230), (2, -80.0, -70.0, 20.0, 30.0, t0 + 1200, t0 + 1260,
         t0 + 1201))
-      val wdf = s.createDataFrame(ws).toDF("wid", "xmin", "xmax", "ymin",
-        "ymax", "tmin", "tmax", "at").select(col("wid"), Boxes.stbox(
-        col("xmin"), col("xmax"), col("ymin"), col("ymax"),
-        timestamp_seconds(col("tmin")), timestamp_seconds(col("tmax")))
-        .as("wbox"), timestamp_seconds(col("at")).as("at"))
-      val joined = wdf.join(boxed, Boxes.stboxOverlaps(col("wbox"),
-        col("box")))
-        .select(col("wid"), col("id"), col("at"),
-          MeosFunctions.tgeompointValueAt(col("trip"), col("at")).as("p"),
-          MeosFunctions.tgeompointOut(col("trip")).as("wkt"))
+      def lookup(ws: Seq[(Int, Double, Double, Double, Double, Long, Long,
+                          Long)]) = {
+        val wdf = s.createDataFrame(ws).toDF("wid", "xmin", "xmax", "ymin",
+          "ymax", "tmin", "tmax", "at").select(col("wid"), Boxes.stbox(
+          col("xmin"), col("xmax"), col("ymin"), col("ymax"),
+          timestamp_seconds(col("tmin")), timestamp_seconds(col("tmax")))
+          .as("wbox"), timestamp_seconds(col("at")).as("at"))
+        wdf.join(boxed, Boxes.stboxOverlaps(col("wbox"), col("box")))
+          .select(col("wid"), col("id"), col("at"),
+            MeosFunctions.tgeompointValueAt(col("trip"), col("at")).as("p"),
+            MeosFunctions.tgeompointOut(col("trip")).as("wkt"))
+      }
+      val joined = lookup(ws)
       assert(udfs(joined.queryExecution.analyzed).isEmpty,
         joined.queryExecution.analyzed.treeString)
       val rows = joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
         !plan.contains("CartesianProduct"), plan)
+      // the literal windows anchor the join: each trip is shuffled once,
+      // not once per hour bucket it spans (vessels 5-7 span two)
+      val tripShuffles = aqe.collect(joined.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "trip") =>
+          e.metrics("shuffleRecordsWritten").value
+      }
+      assert(tripShuffles == Seq(8L), plan)
+      // the anchor changes with the windows but is not inlined into the
+      // generated code: windows five minutes later compile nothing new
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(lookup(ws.map { case (w, x0, x1, y0, y1, t1, t2, at) =>
+        (w, x0, x1, y0, y1, t1 + 300, t2 + 300, at + 300) }).collect()
+        .nonEmpty)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles)
 
       // reference: TGeom's driver-side codec on the file's HexWKB
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -16,7 +16,10 @@ parent's IQR (absolute and as a share of its median), how many pairs the
 change won, and how much worse the change's median is than the parent's,
 as a share of the parent's median, beside the metric's bound ("OVER" when
 it exceeds it). A positive worse-by is a regression whichever way the
-metric points. BENCHMARK.json is only read: by default the CHANGE
+metric points. A last column says whether a gain on that metric would be
+accepted: the change wins at least 9/10 of the pairs (a tie counts for
+neither side) and its median is better than the parent's by more than the
+parent's IQR. BENCHMARK.json is only read: by default the CHANGE
 checkout's, or the file given with --bench. --out writes every run's
 result as JSON.
 """
@@ -56,6 +59,13 @@ def iqr(xs):
     return q[2] - q[0]
 
 
+def gain_holds(wins, pairs, better_by, parent_iqr):
+    """A claimed gain is accepted when the change wins at least 9 of every
+    10 pairs and its median beats the parent's by more than the parent's
+    IQR (`better_by` in the metric's unit, positive when better)."""
+    return pairs > 0 and 10 * wins >= 9 * pairs and better_by > parent_iqr
+
+
 def report(spec, runs):
     pairs = [(a, b) for a, b in zip(runs["parent"], runs["change"])
              if a is not None and b is not None]
@@ -70,7 +80,7 @@ def report(spec, runs):
         return
     print(f"\n{'metric':<18} {'parent':>11} {'change':>11} "
           f"{'parent IQR':>11} {'IQR/med':>8} {'wins':>6} "
-          f"{'worse-by':>9} {'bound':>6}")
+          f"{'worse-by':>9} {'bound':>6}  gain")
     for m in spec["end_to_end"]:
         name, higher = m["name"], m["better"] == "higher"
         a = [p[0]["metrics"][name]["value"] for p in pairs]
@@ -78,12 +88,14 @@ def report(spec, runs):
         ma, mb = statistics.median(a), statistics.median(b)
         spread = iqr(a)
         wins = sum((y > x) if higher else (y < x) for x, y in zip(a, b))
-        worse = ((ma - mb) if higher else (mb - ma)) / ma if ma else 0.0
-        flag = "  OVER" if worse > m["bound"] else ""
+        better = (mb - ma) if higher else (ma - mb)
+        worse = -better / ma if ma else 0.0
+        flag = "  OVER" if worse > m["bound"] else "      "
+        gain = gain_holds(wins, len(pairs), better, spread)
         print(f"{name:<18} {ma:>11.4g} {mb:>11.4g} {spread:>11.4g} "
               f"{(spread / ma if ma else 0.0):>8.3f} "
               f"{wins:>3}/{len(pairs):<2} {worse:>+9.3f} "
-              f"{m['bound']:>6}{flag}")
+              f"{m['bound']:>6}{flag}  {'holds' if gain else 'no'}")
 
 
 def main():
