@@ -38,23 +38,30 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   *  - *anchored*: when one side is a `LocalRelation` (a literal probe set,
   *    e.g. a handful of windows from `createDataFrame`), its normalized
   *    lower bounds are evaluated at plan time and the earliest, L, becomes
-  *    a plan constant ([[AnchorLiteral]]). Each wide-side row goes to the
-  *    ONE bucket
-  *    `bucket(greatest(lo, L))`; each probe row is exploded over
-  *    `[bucket(L), bucket(hi)]`. An overlapping pair meets there because
-  *    `greatest(wide.lo, L)` lies in `[L, probe.hi]` whenever the two
-  *    intervals overlap. The wide side is shuffled once per row instead of
-  *    once per bucket it spans;
+  *    a plan constant ([[AnchorLiteral]]). Wide-side rows that end before
+  *    L are dropped (no probe row reaches them); each other wide row goes
+  *    to the ONE bucket `bucket(greatest(lo, L))`, and each probe row is
+  *    exploded over `[bucket(L), bucket(hi)]`. An overlapping pair meets
+  *    there because `greatest(wide.lo, L)` lies in `[L, probe.hi]`
+  *    whenever the two intervals overlap. The wide side is shuffled once
+  *    per row instead of once per bucket it spans;
   *  - *symmetric*: otherwise each side is exploded over every bucket its
   *    interval covers, and a canonical-bucket predicate keeps the pair
   *    only in the bucket containing `greatest(l.lo, r.lo)` (both
   *    intervals contain the larger of the two lower bounds).
   *
-  * The anchored form is chosen when the probe side's replicated rows,
-  * counted exactly at plan time, take no more bytes than the other
-  * side's `stats.sizeInBytes`; otherwise (a probe that spans far more
-  * buckets than the wide side is worth, or no literal side) the
-  * symmetric form runs. Neither form broadcasts anything.
+  * What the anchored form saves is the wide rows' span in buckets, which
+  * is unknown at plan time (it would take a scan of the wide side). What
+  * it costs is the probe's span: every probe row is copied from bucket(L)
+  * on, so one early probe row makes every later one long. That cost is
+  * counted exactly at plan time, and the anchored form is taken only when
+  * the replicated probe rows take no more bytes than the wide side's
+  * `stats.sizeInBytes`. The symmetric form ships every wide row with a
+  * bound at least once, and the anchored form ships each wide row it
+  * keeps exactly once, so the anchored form's shuffle is at most the
+  * symmetric form's plus the wide side's size. Otherwise (a probe spread
+  * over far more buckets than the wide side weighs, or no literal side)
+  * the symmetric form runs. Neither form broadcasts anything.
   *
   * Guards:
   *  - inner/cross joins only (a null or dropped bucket row can never have
@@ -158,22 +165,26 @@ object OverlapJoinRule extends Rule[LogicalPlan] {
       case (probe, wide) => anchorOf(probe, wide, bucketOf).map(probe -> _)
     }.nextOption()
 
-    // the bucket range each row of a side is exploded over
-    def range(s: Side): (Expression, Expression) = anchor match {
-      case None => (bucketOf(s.lo), bucketOf(s.hi))
-      case Some((probe, at)) if probe eq s => (bucketOf(at), bucketOf(s.hi))
+    // the rows of a side and the bucket range each is exploded over. The
+    // anchored form drops wide rows that end before L: every probe row
+    // starts at or after L, so they match nothing, and in bucket(L) they
+    // would meet every probe row
+    def range(s: Side): (LogicalPlan, Expression, Expression) = anchor match {
+      case None => (s.plan, bucketOf(s.lo), bucketOf(s.hi))
+      case Some((probe, at)) if probe eq s =>
+        (s.plan, bucketOf(at), bucketOf(s.hi))
       case Some((_, at)) =>
         val b = bucketOf(Greatest(Seq(s.lo, at)))
-        (b, b)
+        (Filter(GreaterThanOrEqual(s.hi, at), s.plan), b, b)
     }
     // Sequence is TimeZoneAwareExpression: without an explicit timeZoneId
     // it reports unresolved even over longs
     def exploded(s: Side, name: String): (LogicalPlan, Attribute) = {
       val attr = AttributeReference(name, LongType, nullable = false)()
-      val (from, to) = range(s)
+      val (rows, from, to) = range(s)
       (Generate(Explode(new Sequence(from, to, None,
         Some(conf.sessionLocalTimeZone))), Nil, outer = false, None,
-        Seq(attr), s.plan), attr)
+        Seq(attr), rows), attr)
     }
 
     val (genL, bL) = exploded(sl, "__graft_bucket_l")

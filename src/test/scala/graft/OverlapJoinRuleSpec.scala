@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Explode, Sequence}
 import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, timestamp_micros}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -13,6 +15,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * no nested-loop/cartesian — with output identical to the naive plan,
   * in its anchored form (a literal probe side) and its symmetric form. */
 class OverlapJoinRuleSpec extends SparkTestBase {
+
+  private object aqe extends AdaptiveSparkPlanHelper
 
   private def withExtSession(f: SparkSession => Unit): Unit = {
     spark // force the shared session/context up first
@@ -182,6 +186,41 @@ class OverlapJoinRuleSpec extends SparkTestBase {
         assert(fast == naive)
         assert(fast.size == 1, fast)
       }
+    }
+  }
+
+  test("the anchored form ships no wide row that ends before the probe's " +
+    "earliest start, nor one without bounds") {
+    withExtSession { s =>
+      s.conf.set(WidthKey, 3600L)
+      val H = 3600L * 1000000L
+      val t0 = 1700000000L * 1000000L
+      // a long history: 300 one-hour rows ending at least an hour before
+      // the first window, and 5 with no bounds ...
+      val history = (0 until 300).map(k =>
+        Row(k, t0 - (k + 3) * H, t0 - (k + 2) * H))
+      val unbounded = (300 until 305).map(k => Row(k, null, null))
+      // ... then one row straddling the first window's start, one ending
+      // exactly there, one inside the windows and one after them
+      val recent = Seq(Row(400, t0 - 5 * H, t0 + H / 2), Row(401, t0 - H, t0),
+        Row(402, t0 + 2 * H, t0 + 2 * H), Row(403, t0 + 9 * H, t0 + 10 * H))
+      val windows = Seq(Row(1000, t0, t0 + H), Row(1001, t0 + 2 * H, t0 + 3 * H))
+      def q(): DataFrame = overlapJoin(intervals(s, windows, literal = true),
+        intervals(s, history ++ unbounded ++ recent, literal = false))
+      val (fast, naive) = bothWays(s, () => q()) { df =>
+        assert(anchored(df), df.queryExecution.optimizedPlan)
+      }
+      assert(fast == naive)
+      assert(fast.size == 3, fast)
+      val df = q()
+      df.collect()
+      val shipped = aqe.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.output.exists(_.name == "__graft_bucket_r") =>
+          e.metrics("shuffleRecordsWritten").value
+      }
+      assert(shipped == Seq(recent.size.toLong),
+        df.queryExecution.executedPlan)
     }
   }
 
