@@ -2,21 +2,18 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
-import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType, TimestampType}
 
 /** Auto-rewrite of box-overlap theta joins (SURVEY §4.2's "range-join
-  * rule", the optimizer-rule leg of J2 — `overlaps_tbox_tbox`,
-  * `/root/reference/meos/src/tbox.rs:104-106`) into the bucketed
-  * equi-join shape of [[graft.meos.Boxes.tboxOverlapJoinBucketed]], so the
-  * SQL spelling of an interval-overlap join gets the same scalable plan as
-  * the API path instead of a BroadcastNestedLoopJoin / cartesian product.
+  * rule", the optimizer-rule leg of J2 — `overlaps_tbox_tbox`, the
+  * reference's `meos/src/tbox.rs:104-106`), so the SQL spelling of an
+  * interval-overlap join gets a scalable plan instead of a
+  * BroadcastNestedLoopJoin / cartesian product.
   *
   * Pattern: an inner join whose condition carries a pair of
   * opposite-direction `<=` conjuncts over timestamps from opposite sides —
@@ -25,61 +22,42 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   *
   * Any such pair IS an interval overlap of the derived intervals
   * [l.tmin, l.tmax] × [r.tmin, r.tmax], whatever the columns are named.
-  * The rewrite explodes each side into fixed-width time buckets and
-  * equi-joins on the bucket id, keeping every other conjunct (including
-  * the time pair itself) as the exact post-join predicate — so the
-  * rewrite is output-identical, it only changes HOW candidates meet: a
-  * shuffle on ints instead of |L|×|R|. Interval bounds are
-  * `least/greatest`-normalized per side first, which keeps even
-  * degenerate (lo > hi) rows correct. Each qualifying pair meets in
-  * exactly ONE bucket, so the rewrite needs NO dedup and preserves
-  * duplicate input rows faithfully. It has two forms:
+  * Interval bounds are `least/greatest`-normalized per side first, which
+  * keeps even degenerate (lo > hi) rows correct. Both forms only choose
+  * which pairs meet; the original condition stays the exact post-filter,
+  * so the rewrite is output-identical, duplicates included. Neither form
+  * broadcasts anything.
   *
-  *  - *anchored*: when one side is a `LocalRelation` (a literal probe set,
-  *    e.g. a handful of windows from `createDataFrame`), its normalized
-  *    lower bounds are evaluated at plan time and the earliest, L, becomes
-  *    a plan constant ([[AnchorLiteral]]). Wide-side rows that end before
-  *    L are dropped (no probe row reaches them); each other wide row goes
-  *    to the ONE bucket `bucket(greatest(lo, L))`, and each probe row is
-  *    exploded over `[bucket(L), bucket(hi)]`. An overlapping pair meets
-  *    there because `greatest(wide.lo, L)` lies in `[L, probe.hi]`
-  *    whenever the two intervals overlap. The wide side is shuffled once
-  *    per row instead of once per bucket it spans;
-  *  - *symmetric*: otherwise each side is exploded over every bucket its
-  *    interval covers, and a canonical-bucket predicate keeps the pair
-  *    only in the bucket containing `greatest(l.lo, r.lo)` (both
-  *    intervals contain the larger of the two lower bounds).
-  *
-  * What the anchored form saves is the wide rows' span in buckets, which
-  * is unknown at plan time (it would take a scan of the wide side). What
-  * it costs is the probe's span: every probe row is copied from bucket(L)
-  * on, so one early probe row makes every later one long. That cost is
-  * counted exactly at plan time, and the anchored form is taken only when
-  * the replicated probe rows take no more bytes than the wide side's
-  * `stats.sizeInBytes`. The symmetric form ships every wide row with a
-  * bound at least once, and the anchored form ships each wide row it
-  * keeps exactly once, so the anchored form's shuffle is at most the
-  * symmetric form's plus the wide side's size. Otherwise (a probe spread
-  * over far more buckets than the wide side weighs, or no literal side)
-  * the symmetric form runs. Neither form broadcasts anything.
+  *  - *in-stage*: when one side (the right one if both qualify) is a
+  *    deterministic, non-streaming `LocalRelation` (a literal probe set,
+  *    e.g. windows from `createDataFrame`), whatever its size or time
+  *    spread, its rows' bounds are evaluated at plan time with the
+  *    expressions the plan runs, rows with no bound are dropped, and the
+  *    rest, sorted by lower bound, go into one [[ProbeCandidates]]
+  *    expression. The join becomes a `Generate(Inline(candidates))` over
+  *    the wide side: each wide row meets the probe rows whose interval
+  *    reaches its own, in the wide side's scan stage. Nothing is
+  *    shuffled, and the probe rows travel with the plan;
+  *  - *symmetric*: otherwise each side is exploded over every fixed-width
+  *    time bucket its interval covers, the two sides equi-join on the
+  *    bucket id, and a canonical-bucket predicate keeps the pair only in
+  *    the bucket containing `greatest(l.lo, r.lo)` (both intervals
+  *    contain the larger of the two lower bounds), so it needs no dedup.
+  *    Each row is shuffled once per bucket it spans.
   *
   * Guards:
-  *  - inner/cross joins only (a null or dropped bucket row can never have
-  *    satisfied the original condition — safe to lose under inner
-  *    semantics);
+  *  - inner/cross joins only (a dropped row can never have satisfied the
+  *    original condition — safe to lose under inner semantics);
   *  - skips joins that already have a cross-side equi conjunct (hash join
   *    already applies; also makes the rule a no-op on its own output);
   *  - skips when either side's estimated size fits the broadcast
   *    threshold — a broadcast nested-loop over a small build side is
-  *    already acceptable, and the rewrite would force a shuffle;
-  *  - the anchored form only for a deterministic, non-streaming
-  *    `LocalRelation` probe side with at least one non-null bound, whose
-  *    per-row bucket ranges each fit in an array;
+  *    already acceptable;
   *  - `spark.graft.overlapJoin.enabled` (default true) switches it off,
   *    `spark.graft.overlapJoin.bucketWidthSeconds` (default 604800 = 7
-  *    days, q15's width) sets the bucket size — data-dependent width
-  *    selection belongs to the API path, an optimizer rule must stay
-  *    side-effect free.
+  *    days, q15's width) sets the symmetric form's bucket size —
+  *    data-dependent width selection belongs to the API path, an
+  *    optimizer rule must stay side-effect free.
   */
 object OverlapJoinRule extends Rule[LogicalPlan] {
 
@@ -155,98 +133,118 @@ object OverlapJoinRule extends Rule[LogicalPlan] {
     val sl = Side(l, Least(Seq(lLo, lHi)), Greatest(Seq(lLo, lHi)))
     val sr = Side(r, Least(Seq(rLo, rHi)), Greatest(Seq(rLo, rHi)))
 
-    val w = Literal(widthUs, LongType)
-    def bucketOf(e: Expression): Expression =
-      IntegralDivide(UnixMicros(e), w)
-
-    // the anchored form's probe side and its earliest lower bound, if a
-    // literal side makes it the cheaper copy
-    val anchor = Seq(sr -> l, sl -> r).iterator.flatMap {
-      case (probe, wide) => anchorOf(probe, wide, bucketOf).map(probe -> _)
-    }.nextOption()
-
-    // the rows of a side and the bucket range each is exploded over. The
-    // anchored form drops wide rows that end before L: every probe row
-    // starts at or after L, so they match nothing, and in bucket(L) they
-    // would meet every probe row
-    def range(s: Side): (LogicalPlan, Expression, Expression) = anchor match {
-      case None => (s.plan, bucketOf(s.lo), bucketOf(s.hi))
-      case Some((probe, at)) if probe eq s =>
-        (s.plan, bucketOf(at), bucketOf(s.hi))
-      case Some((_, at)) =>
-        val b = bucketOf(Greatest(Seq(s.lo, at)))
-        (Filter(GreaterThanOrEqual(s.hi, at), s.plan), b, b)
+    val inStage = Seq(sr -> sl, sl -> sr).collectFirst {
+      case (probe @ Side(rel: LocalRelation, lo, hi), wide) if
+          !rel.isStreaming && lo.deterministic && hi.deterministic =>
+        Filter(cond, Generate(Inline(candidates(rel, probe, wide)), Nil,
+          outer = false, None, rel.output, wide.plan))
     }
-    // Sequence is TimeZoneAwareExpression: without an explicit timeZoneId
-    // it reports unresolved even over longs
-    def exploded(s: Side, name: String): (LogicalPlan, Attribute) = {
-      val attr = AttributeReference(name, LongType, nullable = false)()
-      val (rows, from, to) = range(s)
-      (Generate(Explode(new Sequence(from, to, None,
-        Some(conf.sessionLocalTimeZone))), Nil, outer = false, None,
-        Seq(attr), rows), attr)
-    }
-
-    val (genL, bL) = exploded(sl, "__graft_bucket_l")
-    val (genR, bR) = exploded(sr, "__graft_bucket_r")
-    // symmetric form: each qualifying pair meets in every bucket both
-    // intervals cover, and is kept in the one holding the larger of the
-    // two interval starts; the anchored form's wide row has one bucket
-    val keys =
-      if (anchor.isDefined) EqualTo(bL, bR)
-      else And(EqualTo(bL, bR),
+    Project(j.output, inStage.getOrElse {
+      val w = Literal(widthUs, LongType)
+      def bucketOf(e: Expression): Expression =
+        IntegralDivide(UnixMicros(e), w)
+      // Sequence is TimeZoneAwareExpression: without an explicit
+      // timeZoneId it reports unresolved even over longs
+      def exploded(s: Side, name: String): (LogicalPlan, Attribute) = {
+        val attr = AttributeReference(name, LongType, nullable = false)()
+        (Generate(Explode(new Sequence(bucketOf(s.lo), bucketOf(s.hi), None,
+          Some(conf.sessionLocalTimeZone))), Nil, outer = false, None,
+          Seq(attr), s.plan), attr)
+      }
+      val (genL, bL) = exploded(sl, "__graft_bucket_l")
+      val (genR, bR) = exploded(sr, "__graft_bucket_r")
+      // each qualifying pair meets in every bucket both intervals cover,
+      // and is kept in the one holding the larger of the two starts
+      val keys = And(EqualTo(bL, bR),
         EqualTo(bL, bucketOf(Greatest(Seq(sl.lo, sr.lo)))))
-    Project(j.output, Join(genL, genR, Inner, Some(And(keys, cond)), j.hint))
+      Join(genL, genR, Inner, Some(And(keys, cond)), j.hint)
+    })
   }
 
-  /** The anchor L of the anchored form — the earliest normalized lower
-    * bound of `probe`, as a timestamp constant — when `probe` is a
-    * `LocalRelation` and its rows replicated over `[bucket(L),
-    * bucket(hi)]` take no more bytes than `wide`'s estimate. The bounds
-    * and bucket ids are evaluated here with the same expressions the plan
-    * runs, so the plan-time count matches the rows the plan explodes. */
-  private def anchorOf(probe: Side, wide: LogicalPlan,
-                       bucketOf: Expression => Expression)
-      : Option[Expression] = probe.plan match {
-    case rel: LocalRelation if !rel.isStreaming &&
-        probe.lo.deterministic && probe.hi.deterministic =>
-      def eval(e: Expression): Seq[Any] = {
-        val bound = BindReferences.bindReference(e, rel.output)
-        rel.data.map(bound.eval(_))
-      }
-      val los = eval(probe.lo).collect { case t: Long => t }
-      if (los.isEmpty) None
-      else {
-        val at = AnchorLiteral(los.min)
-        val first = bucketOf(at).eval().asInstanceOf[Long]
-        val rows = eval(bucketOf(probe.hi)).collect {
-          case b: Long => b - first + 1
-        }
-        val perRow = EstimationUtils.getSizePerRow(rel.output) + 8
-        val fits = rows.forall(_ <= ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
-        Option.when(fits &&
-          BigInt(rows.sum) * perRow <= wide.stats.sizeInBytes)(at)
-      }
-    case _ => None
+  /** The in-stage form's candidates for `wide`'s rows from `probe`, whose
+    * plan is the literal `rel`. The bounds are evaluated here with the
+    * same expressions the plan runs, so a dropped row is one the plan
+    * could not match. */
+  private def candidates(rel: LocalRelation, probe: Side,
+                         wide: Side): ProbeCandidates = {
+    def eval(e: Expression): InternalRow => Any =
+      BindReferences.bindReference(e, rel.output).eval(_)
+    val (lo, hi) = (eval(probe.lo), eval(probe.hi))
+    // least/greatest are null only when both bounds are
+    val kept = rel.data.flatMap(row => (lo(row), hi(row)) match {
+      case (a: Long, b: Long) => Some((a, b, row))
+      case _ => None
+    }).sortBy(_._1)
+    ProbeCandidates(wide.lo, wide.hi, kept, rel.schema)
   }
 }
 
-/** The anchored form's L: a timestamp constant that generated code reads
-  * from its references instead of inlining. L changes with every probe
-  * set, and an inlined value would make each query compile its stages
-  * anew instead of reusing the classes generated for the last one. Not
-  * foldable, so constant folding leaves it (and the bucket ids computed
-  * from it) in place. */
-private[plans] final case class AnchorLiteral(value: Long)
-    extends LeafExpression {
-  override def dataType: DataType = TimestampType
-  override def nullable: Boolean = false
-  override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = value
+/** The in-stage form's candidate set: the probe rows, sorted by lower
+  * bound, whose `[lo, hi]` overlaps the wide row's. The sorted rows form
+  * an implicit balanced tree (a range's middle row is its root) whose
+  * nodes hold the largest upper bound below them, so a wide row with k
+  * candidates among n rows costs O((k + 1) log n). The rows are a plan
+  * constant that generated code reads from its references instead of
+  * inlining, so a new probe set compiles no new class. */
+private[graft] final case class ProbeCandidates(
+    lo: Expression, hi: Expression, probe: Seq[(Long, Long, InternalRow)],
+    schema: StructType) extends BinaryExpression {
+  override def left: Expression = lo
+  override def right: Expression = hi
+  override def dataType: DataType = ArrayType(schema, containsNull = false)
+  override def toString: String =
+    s"probe_candidates($lo, $hi, ${probe.size} rows)"
+
+  private lazy val rows = probe.map(_._3).toArray[Any]
+  private lazy val los = probe.map(_._1).toArray
+  private lazy val his = probe.map(_._2).toArray
+  /** `reach(m)`: the largest upper bound of the range whose root is m. */
+  private lazy val reach = {
+    val r = new Array[Long](his.length)
+    def build(a: Int, b: Int): Long = if (a >= b) Long.MinValue else {
+      val m = (a + b) >>> 1
+      r(m) = math.max(his(m), math.max(build(a, m), build(m + 1, b)))
+      r(m)
+    }
+    build(0, his.length)
+    r
+  }
+
+  /** Calls `hit` on each row overlapping `[l, h]`, in lower-bound order,
+    * and returns the number of tree nodes the search looked at. */
+  private[graft] def search(l: Long, h: Long)(hit: Int => Unit): Int = {
+    var seen = 0
+    def visit(a: Int, b: Int): Unit = if (a < b) {
+      val m = (a + b) >>> 1
+      seen += 1
+      if (reach(m) >= l) {
+        visit(a, m)
+        if (los(m) <= h) {
+          if (his(m) >= l) hit(m)
+          visit(m + 1, b)
+        }
+      }
+    }
+    visit(0, los.length)
+    seen
+  }
+
+  def candidates(l: Long, h: Long): ArrayData = {
+    val out = Array.newBuilder[Any]
+    search(l, h)(out += rows(_))
+    new GenericArrayData(out.result())
+  }
+
+  override protected def nullSafeEval(l: Any, h: Any): Any =
+    candidates(l.asInstanceOf[Long], h.asInstanceOf[Long])
+
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("anchor", java.lang.Long.valueOf(value))
-    ev.copy(code = code"final long ${ev.value} = $ref.longValue();",
-      isNull = FalseLiteral)
+    val ref = ctx.addReferenceObj("probe", this)
+    defineCodeGen(ctx, ev, (l, h) => s"$ref.candidates($l, $h)")
   }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): ProbeCandidates =
+    copy(lo = newLeft, hi = newRight)
 }

@@ -10,7 +10,7 @@ package graft
 class EmptyInputSpec extends SparkTestBase {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val dir = tempDir("graft_empty").toString
     // events is stored as timestamp[ns]; read it the way Tables does (as
     // nanos-long) so the empty copy keeps a `ts div 1000`-compatible type
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

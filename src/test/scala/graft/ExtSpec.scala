@@ -375,7 +375,7 @@ class ExtSpec extends SparkTestBase {
     def run() = Dedup.connectedComponents(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaLocal = run()
-    val dir = java.nio.file.Files.createTempDirectory("ccchk").toString
+    val dir = tempDir("ccchk").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val viaReliable = run()

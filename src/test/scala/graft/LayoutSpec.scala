@@ -55,7 +55,7 @@ class LayoutSpec extends SparkTestBase {
     "cannot (multi-dimensional data skipping)") {
     val ev = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "value")
-    val tmp = java.nio.file.Files.createTempDirectory("zorder").toString
+    val tmp = tempDir("zorder").toString
     val zPath = s"$tmp/z"
     val linPath = s"$tmp/lin"
     Layout.writeZOrder(ev, "value", "user_id", zPath, files = 64, bits = 8)

@@ -19,7 +19,7 @@ class MaterializeSpec extends SparkTestBase {
 
   test("cut uses a reliable checkpoint once a dir is configured") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = SparkTestBase.contextDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val df = (1 to 100).toDF("x")
     val cut = Materialize.cut(df, eager = true)

@@ -3,17 +3,22 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Explode, Sequence}
-import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Explode, Inline, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
+import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, timestamp_micros}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
+import graft.plans.ProbeCandidates
+
 /** The injected optimizer rule turns the SQL spelling of a box-overlap
-  * theta join (J2's conjunction pattern) into the bucketed equi-join —
-  * no nested-loop/cartesian — with output identical to the naive plan,
-  * in its anchored form (a literal probe side) and its symmetric form. */
+  * theta join (J2's conjunction pattern) into a plan with no
+  * nested-loop/cartesian join, with output identical to the naive plan,
+  * in its in-stage form (a literal probe side joined inside the wide
+  * side's stage) and its symmetric form (the bucketed equi-join). */
 class OverlapJoinRuleSpec extends SparkTestBase {
 
   private object aqe extends AdaptiveSparkPlanHelper
@@ -85,9 +90,10 @@ class OverlapJoinRuleSpec extends SparkTestBase {
   test("rule keeps duplicate rows faithfully (no dedup distortion)") {
     withExtSession { s =>
       import s.implicits._
-      // two identical left rows must each pair with the match — and a
-      // multi-bucket-overlap pair must appear exactly once (canonical
-      // bucket), matching inner-join multiset semantics
+      // two identical left rows must each pair with the match, and a pair
+      // overlapping over several buckets must appear exactly once,
+      // matching inner-join multiset semantics (both sides are literal,
+      // so this is the in-stage form)
       Seq((1L, "2024-01-01 00:00:00", "2024-03-01 00:00:00"),
           (1L, "2024-01-01 00:00:00", "2024-03-01 00:00:00"),
           (2L, "2024-01-15 00:00:00", "2024-02-15 00:00:00"))
@@ -101,7 +107,9 @@ class OverlapJoinRuleSpec extends SparkTestBase {
           |ON a.tmin <= b.tmax AND b.tmin <= a.tmax AND a.id < b.id
           |""".stripMargin)
       val plan = rows.queryExecution.executedPlan.toString
-      assert(plan.contains("Generate explode"), s"rule did not fire:\n$plan")
+      assert(plan.contains("Generate") &&
+        !plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"), s"rule did not fire:\n$plan")
       val got = rows.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         .sorted
       assert(got == Seq((1L, 2L), (1L, 2L)))
@@ -111,21 +119,21 @@ class OverlapJoinRuleSpec extends SparkTestBase {
   private val WidthKey = "spark.graft.overlapJoin.bucketWidthSeconds"
   private val EnabledKey = "spark.graft.overlapJoin.enabled"
 
-  /** For each bucket explode of the rewrite in `df`'s optimized plan,
-    * whether it puts every row in one bucket (the anchored form's wide
-    * side). */
-  private def bucketExplodes(df: DataFrame): Seq[Boolean] =
+  /** The bucket explodes of the symmetric form in `df`'s optimized plan. */
+  private def bucketExplodes(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
-      case g: Generate
+      case g @ Generate(_: Explode, _, _, _, _, _)
           if g.generatorOutput.exists(_.name.startsWith("__graft_bucket_")) =>
-        g.generator match {
-          case Explode(q: Sequence) => q.start.semanticEquals(q.stop)
-          case other => fail(s"unexpected bucket generator $other")
-        }
-    }
+        g
+    }.size
 
-  private def anchored(df: DataFrame): Boolean =
-    bucketExplodes(df).contains(true)
+  /** Whether `df`'s optimized plan is the in-stage form: the probe rows
+    * inlined over the wide side, with no join and no bucket explode left. */
+  private def inStage(df: DataFrame): Boolean = {
+    val p = df.queryExecution.optimizedPlan
+    p.collect { case _: Join => () }.isEmpty && bucketExplodes(df) == 0 &&
+      p.collect { case Generate(_: Inline, _, _, _, _, _) => () }.size == 1
+  }
 
   private val IvSchema = StructType(Seq(StructField("id", IntegerType),
     StructField("lo", LongType), StructField("hi", LongType)))
@@ -156,32 +164,31 @@ class OverlapJoinRuleSpec extends SparkTestBase {
     s.conf.set(EnabledKey, "false")
     try {
       val off = q()
-      assert(bucketExplodes(off).isEmpty)
+      assert(bucketExplodes(off) == 0 && !inStage(off))
       (fast, rows(off))
     } finally s.conf.set(EnabledKey, "true")
   }
 
-  test("a literal probe side whose replicated rows outweigh the wide side " +
-    "keeps the symmetric form; without its far row it is anchored") {
+  private val H = 3600L * 1000000L
+  private val t0 = 1700000000L * 1000000L
+
+  /** `n` wide rows of 3 hours each, two hours apart, from a range. */
+  private def rangeRows(s: SparkSession, n: Int): DataFrame =
+    s.range(0, n).select(col("id").cast("int").as("id"),
+      timestamp_micros(col("id") * 2 * H + t0).as("lo"),
+      timestamp_micros(col("id") * 2 * H + t0 + 3 * H).as("hi"))
+
+  test("a far literal window runs in-stage: the form does not follow the " +
+    "probe's time spread") {
     withExtSession { s =>
       s.conf.set(WidthKey, 3600L)
-      val H = 3600L * 1000000L
-      val t0 = 1700000000L * 1000000L
-      // four wide rows of 3 hours each, from a range: a small size estimate
-      val wide = s.range(0, 4).select(col("id").cast("int").as("id"),
-        timestamp_micros(col("id") * 2 * H + t0).as("lo"),
-        timestamp_micros(col("id") * 2 * H + t0 + 3 * H).as("hi"))
       val near = Row(1, t0 + H, t0 + H + 60000000L)
-      // a window ~24 years earlier: anchoring at it would replicate every
-      // window over ~200k hour buckets
+      // a window ~24 years earlier, ~200k hour buckets before the rest
       val far = Row(2, 946684800L * 1000000L, 946684800L * 1000000L + H)
-      for ((probe, wantAnchored) <- Seq(Seq(near, far) -> false,
-                                        Seq(near) -> true)) {
+      for (probe <- Seq(Seq(near, far), Seq(near))) {
         val (fast, naive) = bothWays(s, () =>
-          overlapJoin(intervals(s, probe, literal = true), wide)) { df =>
-          assert(bucketExplodes(df).size == 2, df.queryExecution.optimizedPlan)
-          assert(anchored(df) == wantAnchored,
-            df.queryExecution.optimizedPlan)
+          overlapJoin(intervals(s, probe, literal = true), rangeRows(s, 40))) {
+          df => assert(inStage(df), df.queryExecution.optimizedPlan)
         }
         assert(fast == naive)
         assert(fast.size == 1, fast)
@@ -189,47 +196,91 @@ class OverlapJoinRuleSpec extends SparkTestBase {
     }
   }
 
-  test("the anchored form ships no wide row that ends before the probe's " +
-    "earliest start, nor one without bounds") {
+  test("a long early window among many short ones: the candidate search " +
+    "visits O((k + 1) log n) rows, and a heavier probe still runs in-stage") {
+    // one window over the whole period, then 2,000 one-microsecond ones an
+    // hour apart: a running maximum of the ends would reach every late
+    // wide row and leave it to walk every window that starts before it
+    val n = 2001
+    val probe = Row(0, t0, t0 + n * H) +:
+      (1 until n).map(k => Row(k, t0 + k * H, t0 + k * H + 1))
+    val pc = ProbeCandidates(Literal(0L), Literal(0L), probe.map { r =>
+      (r.getLong(1), r.getLong(2), InternalRow(r.getInt(0)))
+    }, IvSchema)
+    val depth = 32 - Integer.numberOfLeadingZeros(n)
+    val rnd = new scala.util.Random(7)
+    val late = t0 + (n - 11) * H
+    val queries = Seq((late, late), (late - H / 2, late + H / 2),
+      (t0 - H, t0 - 1), (t0 + (n + 1) * H, t0 + (n + 2) * H)) ++
+      Seq.fill(200) {
+        val l = t0 + (rnd.nextDouble() * (n + 2) * H).toLong - H
+        (l, l + (rnd.nextDouble() * 4 * H).toLong)
+      }
+    for ((l, h) <- queries) {
+      val hits = Seq.newBuilder[Int]
+      val seen = pc.search(l, h)(hits += _)
+      val want = probe.indices.filter(i =>
+        probe(i).getLong(1) <= h && probe(i).getLong(2) >= l)
+      assert(hits.result() == want, (l, h))
+      assert(seen <= 1 + 2 * (want.size + 2) * depth,
+        s"[$l, $h]: $seen nodes for ${want.size} of $n rows")
+    }
+    // the same windows, far heavier than a 4-row wide side, run in-stage
     withExtSession { s =>
       s.conf.set(WidthKey, 3600L)
-      val H = 3600L * 1000000L
-      val t0 = 1700000000L * 1000000L
+      val (fast, naive) = bothWays(s, () =>
+        overlapJoin(intervals(s, probe, literal = true), rangeRows(s, 4))) {
+        df => assert(inStage(df), df.queryExecution.optimizedPlan)
+      }
+      assert(fast == naive)
+      // the long window meets all 4 wide rows, the short ones 15 pairs
+      assert(fast.size == 4 + 15, fast)
+    }
+  }
+
+  test("a literal probe over a long history runs in the wide side's " +
+    "stage: no exchange, and only overlapping rows become candidates") {
+    withExtSession { s =>
+      s.conf.set(WidthKey, 3600L)
       // a long history: 300 one-hour rows ending at least an hour before
       // the first window, and 5 with no bounds ...
       val history = (0 until 300).map(k =>
         Row(k, t0 - (k + 3) * H, t0 - (k + 2) * H))
       val unbounded = (300 until 305).map(k => Row(k, null, null))
       // ... then one row straddling the first window's start, one ending
-      // exactly there, one inside the windows and one after them
+      // exactly there, one inside the windows and one after the short ones
       val recent = Seq(Row(400, t0 - 5 * H, t0 + H / 2), Row(401, t0 - H, t0),
         Row(402, t0 + 2 * H, t0 + 2 * H), Row(403, t0 + 9 * H, t0 + 10 * H))
-      val windows = Seq(Row(1000, t0, t0 + H), Row(1001, t0 + 2 * H, t0 + 3 * H))
+      // two short windows and a long one: the row after the short ones'
+      // ends meets only the long one
+      val windows = Seq(Row(1000, t0, t0 + H),
+        Row(1001, t0 + 2 * H, t0 + 3 * H), Row(1002, t0, t0 + 12 * H))
       def q(): DataFrame = overlapJoin(intervals(s, windows, literal = true),
         intervals(s, history ++ unbounded ++ recent, literal = false))
       val (fast, naive) = bothWays(s, () => q()) { df =>
-        assert(anchored(df), df.queryExecution.optimizedPlan)
+        assert(inStage(df), df.queryExecution.optimizedPlan)
       }
       assert(fast == naive)
-      assert(fast.size == 3, fast)
+      assert(fast.size == 7, fast)
       val df = q()
       df.collect()
-      val shipped = aqe.collect(df.queryExecution.executedPlan) {
-        case e: ShuffleExchangeExec
-            if e.output.exists(_.name == "__graft_bucket_r") =>
-          e.metrics("shuffleRecordsWritten").value
+      val plan = df.queryExecution.executedPlan
+      assert(aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+        plan)
+      val candidates = aqe.collect(plan) {
+        case g: GenerateExec => g.metrics("numOutputRows").value
       }
-      assert(shipped == Seq(recent.size.toLong),
-        df.queryExecution.executedPlan)
+      assert(candidates == Seq(fast.size.toLong), plan)
     }
   }
 
   test("property: the rewrite equals the nested-loop join in both forms " +
     "(degenerate, point, null, duplicate, pre-1970 and bucket-edge " +
     "bounds)") {
+    // literal probe sides run the in-stage form, computed ones the
+    // symmetric form; the cases alternate interpreted and generated code
     withExtSession { s =>
       s.conf.set(WidthKey, 3600L)
-      val H = 3600L * 1000000L
       val rnd = new scala.util.Random(20240601)
       // pre-1970 (IntegralDivide truncates toward zero there), the epoch
       // and 2024
@@ -260,28 +311,44 @@ class OverlapJoinRuleSpec extends SparkTestBase {
         out.result()
       }
       val deadline = System.nanoTime() + 90L * 1000000000L
-      var cases, anchoredCases = 0
+      var cases = 0
+      // what the in-stage cases covered, per evaluation mode
+      val covered = scala.collection.mutable.Set.empty[(String, String)]
       while (cases < 24 && System.nanoTime() < deadline) {
         val literal = cases % 3 != 2
         val probeLeft = cases % 2 == 0
-        val probe = table(1 + rnd.nextInt(6), 1000)
+        val mode = Modes(cases / 2 % 2)
+        val probe = {
+          val rows = table(1 + rnd.nextInt(6), 1000)
+          if (cases % 5 == 0) rows :+ rows.head else rows
+        }
         val wide = table(5 + rnd.nextInt(30), 0)
         def q(): DataFrame = {
           val p = intervals(s, probe, literal)
           val w = intervals(s, wide, literal = false)
           if (probeLeft) overlapJoin(p, w) else overlapJoin(w, p)
         }
-        val canAnchor = literal && probe.exists(r =>
-          !r.isNullAt(1) || !r.isNullAt(2))
-        val (fast, naive) = bothWays(s, () => q()) { df =>
-          assert(bucketExplodes(df).size == 2, df.queryExecution.optimizedPlan)
-          assert(anchored(df) == canAnchor, df.queryExecution.optimizedPlan)
+        val (fast, naive) = inMode(mode, s) {
+          bothWays(s, () => q()) { df =>
+            assert(inStage(df) == literal, df.queryExecution.optimizedPlan)
+            assert(bucketExplodes(df) == (if (literal) 0 else 2),
+              df.queryExecution.optimizedPlan)
+          }
         }
-        assert(fast == naive, s"case $cases: probe $probe wide $wide")
-        if (canAnchor) anchoredCases += 1
+        assert(fast == naive, s"case $cases ($mode): probe $probe wide $wide")
+        if (literal) {
+          def has(f: (Long, Long) => Boolean) = probe.exists(r =>
+            !r.isNullAt(1) && !r.isNullAt(2) && f(r.getLong(1), r.getLong(2)))
+          Seq("duplicate" -> (probe.distinct.size < probe.size),
+            "null" -> probe.exists(r => r.isNullAt(1) || r.isNullAt(2)),
+            "point" -> has(_ == _), "degenerate" -> has(_ > _)
+          ).collect { case (what, true) => covered += what -> mode }
+        }
         cases += 1
       }
-      assert(cases >= 6 && anchoredCases >= 3, s"$cases cases ran")
+      val want = for (what <- Seq("duplicate", "null", "point", "degenerate");
+                      mode <- Modes) yield what -> mode
+      assert(want.forall(covered), s"$cases cases ran, covering $covered")
     }
   }
 }

@@ -23,7 +23,7 @@ class PipelineSpec extends SparkTestBase {
       |""".stripMargin
 
   private def writeCsv(): String = {
-    val dir = Files.createTempDirectory("ais")
+    val dir = tempDir("ais")
     Files.writeString(dir.resolve("a.csv"), csv)
     dir.toString
   }
@@ -40,7 +40,7 @@ class PipelineSpec extends SparkTestBase {
   test("aisToFile: full pipeline to JSON-lines, hexwkb payload decodes " +
     "back to the assembled trip") {
     import spark.implicits._
-    val out = Files.createTempDirectory("trips").toString + "/out"
+    val out = tempDir("trips").toString + "/out"
     val trips = Pipelines.aisToFile(AisCsv.read(spark, writeCsv()), out)
     // dup-ts posit dropped: vessel 1 keeps 3 instants (00:00, 00:00:30,
     // 00:01), vessel 2 keeps 1
@@ -63,7 +63,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   private def csvDir(rows: String*): String = {
-    val dir = Files.createTempDirectory("ais")
+    val dir = tempDir("ais")
     Files.writeString(dir.resolve("a.csv"),
       ("MMSI,BaseDateTime,LAT,LON,VesselType" +: rows).mkString("\n") + "\n")
     dir.toString
@@ -127,7 +127,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("aisToFile with MF-JSON payload") {
     import spark.implicits._
-    val out = Files.createTempDirectory("tripsmf").toString + "/out"
+    val out = tempDir("tripsmf").toString + "/out"
     Pipelines.aisToFile(AisCsv.read(spark, writeCsv()), out, asMfJson = true)
     val j = spark.read.json(out).where(col("id") === 367000001L)
       .select("json").as[String].collect()(0)
@@ -137,7 +137,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("trip file written by the sink reads back as temporal values " +
     "(sink→source loop)") {
-    val out = Files.createTempDirectory("loop").toString + "/out"
+    val out = tempDir("loop").toString + "/out"
     val written = Pipelines.aisToFile(AisCsv.read(spark, writeCsv()), out)
     val back = graft.sources.TripSource.readJsonLines(spark, out)
       .select(col("id"),

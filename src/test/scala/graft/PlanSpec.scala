@@ -162,7 +162,7 @@ class PlanSpec extends SparkTestBase {
 
   test("date-partitioned writes prune partitions at scan (PartitionFilters)") {
     import org.apache.spark.sql.functions.{to_date, col => c}
-    val dir = java.nio.file.Files.createTempDirectory("part").toString + "/ev"
+    val dir = tempDir("part").toString + "/ev"
     Tables.events(spark, sfDir)
       .withColumn("day", to_date(c("ts")))
       .write.mode("overwrite").partitionBy("day").parquet(dir)

@@ -117,7 +117,7 @@ class Round10Spec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10ev").toString
+    val dir = tempDir("r10ev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -128,7 +128,7 @@ class Round10Spec extends SparkTestBase {
 
   private def plantDocs(rows: Seq[(Long, String, String, String)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10doc").toString
+    val dir = tempDir("r10doc").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -586,7 +586,7 @@ class Round10Spec extends SparkTestBase {
   }
 
   private def plantEmb(rows: Seq[(Long, Seq[Float])]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10emb").toString
+    val dir = tempDir("r10emb").toString
     rows.map { case (id, e) => (id, e, 0) }
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -721,7 +721,7 @@ class Round10Spec extends SparkTestBase {
     // file-based sources (InjectRuntimeFilter requires a scan to push
     // the filter toward) + forced SMJ (a broadcast join would reuse its
     // own exchange instead of a bloom)
-    val base = java.nio.file.Files.createTempDirectory("r10bloom").toString
+    val base = tempDir("r10bloom").toString
     spark.range(50000).select(col("id").as("k"),
       (col("id") % 1000).as("payload"))
       .write.mode("overwrite").parquet(s"$base/fact")

@@ -10,7 +10,7 @@ class Round10bSpec extends SparkTestBase {
   import spark.implicits._
 
   private def plantOrders(prices: Seq[Double]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10bord").toString
+    val dir = tempDir("r10bord").toString
     prices.zipWithIndex
       .map { case (p, i) => (i.toLong + 1L, 1L, "O", p) }
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -23,7 +23,7 @@ class Round10bSpec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10bev").toString
+    val dir = tempDir("r10bev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -33,7 +33,7 @@ class Round10bSpec extends SparkTestBase {
   }
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10bdoc").toString
+    val dir = tempDir("r10bdoc").toString
     rows.map { case (id, t) => (id, t, "en", "webcrawl") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -156,7 +156,7 @@ class Round10bSpec extends SparkTestBase {
 
   private def plantDocsEmb(docs: Seq[(Long, String)],
                            embs: Seq[(Long, Seq[Float])]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10bde").toString
+    val dir = tempDir("r10bde").toString
     docs.map { case (id, t) => (id, t, "en", "webcrawl") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -13,7 +13,7 @@ class Round10cSpec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10cev").toString
+    val dir = tempDir("r10cev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -23,7 +23,7 @@ class Round10cSpec extends SparkTestBase {
   }
 
   private def plantDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10cdoc").toString
+    val dir = tempDir("r10cdoc").toString
     rows.map { case (id, t, src) => (id, t, "en", src) }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

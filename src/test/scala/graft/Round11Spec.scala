@@ -33,7 +33,7 @@ class Round11Spec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r11ev").toString
+    val dir = tempDir("r11ev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -119,7 +119,7 @@ class Round11Spec extends SparkTestBase {
   }
 
   private def plantDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r11doc").toString
+    val dir = tempDir("r11doc").toString
     rows.map { case (id, t, src) => (id, t, "en", src) }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -231,7 +231,7 @@ class Round11Spec extends SparkTestBase {
 
   private def plantEmbeddings(rows: Seq[(Long, Seq[Float], Int)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r11emb").toString
+    val dir = tempDir("r11emb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -129,8 +129,7 @@ class Round12Spec extends SparkTestBase {
     "payload column out of the scan, and plans one input partition " +
     "per line file") {
     import spark.implicits._
-    val path = java.nio.file.Files
-      .createTempDirectory("r12-envelope").toString
+    val path = tempDir("r12-envelope").toString
     val df = Seq((1L, 1, "AABB"), (2L, 1, "CCDD"), (3L, 2, "EEFF"))
       .toDF("id", "vt", "payload")
     graft.sources.TripSink.writeJsonLines(df.repartition(2), col("id"),
@@ -159,7 +158,7 @@ class Round12Spec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r12ev").toString
+    val dir = tempDir("r12ev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -169,7 +168,7 @@ class Round12Spec extends SparkTestBase {
   }
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r12doc").toString
+    val dir = tempDir("r12doc").toString
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("src0").as("source"), length(col("text")).as("n_chars"))
@@ -179,7 +178,7 @@ class Round12Spec extends SparkTestBase {
 
   private def plantEmbeddings(rows: Seq[(Long, Seq[Float], Int)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r12emb").toString
+    val dir = tempDir("r12emb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -14,7 +14,7 @@ class Round13bSpec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r13ev").toString
+    val dir = tempDir("r13ev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -24,7 +24,7 @@ class Round13bSpec extends SparkTestBase {
   }
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r13doc").toString
+    val dir = tempDir("r13doc").toString
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("src0").as("source"), length(col("text")).as("n_chars"))
@@ -34,7 +34,7 @@ class Round13bSpec extends SparkTestBase {
 
   private def plantEmbeddings(rows: Seq[(Long, Seq[Float], Int)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r13emb").toString
+    val dir = tempDir("r13emb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -146,7 +146,7 @@ class Round13bSpec extends SparkTestBase {
   test("qz70 water-filling: caps {10, 20, 100} with budget 65 fill the " +
     "two small sources and cap the big one at the hand-computed level") {
     def words(n: Int) = Seq.fill(n)("w").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("r13wf").toString
+    val dir = tempDir("r13wf").toString
     Seq((1L, words(10), "srcA"), (2L, words(20), "srcB"),
       (3L, words(100), "srcC"))
       .toDF("doc_id", "text", "source")

@@ -13,7 +13,7 @@ class Round13cSpec extends SparkTestBase {
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r13cev").toString
+    val dir = tempDir("r13cev").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -34,14 +34,14 @@ class Round13cSpec extends SparkTestBase {
 
   private def plantEmbeddings(rows: Seq[(Long, Seq[Float], Int)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r13cemb").toString
+    val dir = tempDir("r13cemb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
   }
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r13cdoc").toString
+    val dir = tempDir("r13cdoc").toString
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("src0").as("source"), length(col("text")).as("n_chars"))

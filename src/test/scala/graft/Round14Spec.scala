@@ -11,7 +11,7 @@ import graft.sources.v2.TripEnvelopeMicroBatchStream
 class Round14Spec extends SparkTestBase {
 
   private def plantEnvelopeDir(n: Int): String = {
-    val d = Files.createTempDirectory("r14-env").toString
+    val d = tempDir("r14-env").toString
     (0 until n).foreach { i =>
       Files.write(Paths.get(d, f"part-$i%05d-$i.txt"),
         s"""{"id":$i,"vt":1,"json":"AB"}""".getBytes(StandardCharsets.UTF_8))
@@ -27,7 +27,7 @@ class Round14Spec extends SparkTestBase {
     "unpushable predicates stay post-scan, statistics are reported") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val d = Files.createTempDirectory("r14-envpush").toString + "/env"
+    val d = tempDir("r14-envpush").toString + "/env"
     Seq((10L, 1, "AA"), (42L, 1, "BB"), (99L, 1, "CC"), (150L, 1, "DD"))
       .toDF("id", "vt", "json")
       .write.format("trip-envelope").mode("overwrite").save(d)
@@ -105,7 +105,7 @@ class Round14Spec extends SparkTestBase {
     "flagged, a 12-token overlap is not, self-hits are excluded") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val d = Files.createTempDirectory("r14-decontam").toString
+    val d = tempDir("r14-decontam").toString
     val w = (1 to 20).map("w" + _)
     val donor = w.mkString(" ")                      // doc 62: % 31 == 0
     val hit = ("p1 p2 " + w.slice(2, 15).mkString(" ") +
@@ -134,7 +134,7 @@ class Round14Spec extends SparkTestBase {
     // (3,5): dev at i=4 = |50*2000 - 100*1000| = 0 -> final.
     // Kept {1,2,3,5}: n_kept 4, milli sum 0+1000+0+100 = 1100,
     // dropped_ppm = 1000000*1 // 5 = 200000.
-    val d = Files.createTempDirectory("r14-dp").toString
+    val d = tempDir("r14-dp").toString
     Seq(
       (1L, 0L, 1L, 0.0), (1L, 1000L, 2L, 1.0), (1L, 2000L, 3L, 0.0),
       (1L, 3000L, 4L, 0.05), (1L, 4000L, 5L, 0.1))
@@ -170,7 +170,7 @@ class Round14Spec extends SparkTestBase {
   test("qz75 distributed footer walk: global per-table row-group " +
     "numbering over multi-file directory layouts matches a driver walk") {
     import scala.jdk.CollectionConverters._
-    val d = Files.createTempDirectory("r14-layout").toString
+    val d = tempDir("r14-layout").toString
     // stage every layout table as a DIRECTORY of part files so the
     // one-task-per-file parse and its base-offset renumbering are
     // actually exercised (the sf dirs are single-file)

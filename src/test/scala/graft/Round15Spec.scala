@@ -19,7 +19,7 @@ class Round15Spec extends SparkTestBase {
   private def writeEnvelope(rows: Seq[(Long, Int, String)],
                             parts: Int = 1): String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("r15-env").toString + "/env"
+    val d = tempDir("r15-env").toString + "/env"
     val df = rows.toDF("id", "vt", "json")
     (if (parts > 1) df.repartitionByRange(parts, df("id")) else df)
       .write.format("trip-envelope").mode("overwrite").save(d)
@@ -96,7 +96,7 @@ class Round15Spec extends SparkTestBase {
 
   test("empty-directory pushed COUNT is 0, not NULL (ADVICE r14): the " +
     "synthetic zero partial; MIN/MAX over nothing stay NULL") {
-    val d = Files.createTempDirectory("r15-env-empty").toString
+    val d = tempDir("r15-env-empty").toString
     val c = spark.read.format("trip-envelope").load(d)
       .selectExpr("count(*) AS n").collect()(0)
     assert(!c.isNullAt(0) && c.getLong(0) == 0L,
@@ -226,7 +226,7 @@ class Round15Spec extends SparkTestBase {
     // OVERLAPPING ranges (two appends): the prefix shortcut must
     // disable — a best id could hide in either file — but per-reader
     // k-best still returns the exact set
-    val d2 = Files.createTempDirectory("r15-env-ov").toString + "/env"
+    val d2 = tempDir("r15-env-ov").toString + "/env"
     (0L until 40L).map(i => (i, 1, s"A$i")).toDF("id", "vt", "json")
       .coalesce(1).write.format("trip-envelope").mode("append").save(d2)
     (20L until 60L).map(i => (i + 1000L, 1, s"B$i"))
@@ -258,7 +258,7 @@ class Round15Spec extends SparkTestBase {
     "the first write's entries survive and totals stay exact") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val d = Files.createTempDirectory("r15-env-append").toString + "/env"
+    val d = tempDir("r15-env-append").toString + "/env"
     Seq((1L, 1, "AA"), (2L, 1, "BB")).toDF("id", "vt", "json")
       .coalesce(1).write.format("trip-envelope").mode("append").save(d)
     val idx1 = TripEnvelopeIdIndex.read(d)
@@ -317,7 +317,7 @@ class Round15Spec extends SparkTestBase {
     "step-held integral; a single posit reports itself") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val d = Files.createTempDirectory("r15-tw").toString
+    val d = tempDir("r15-tw").toString
     // user 1: x holds 1.0 for 2 s, then 3.0 for 1 s → twx = (1000·2000
     // + 3000·1000) div 3000 = 1666 milli; y constant 2 (len "ab")
     // user 2: single posit → (x, y) reported directly, dur 0

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Round-16 pins: the LINEAR-interpolation restriction/comparison
@@ -14,7 +12,7 @@ class Round16Spec extends SparkTestBase {
     * ramps whose 250.0-threshold crossings are hand-computable. */
   private lazy val fixtureDir: String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("r16-linear").toString
+    val d = tempDir("r16-linear").toString
     Seq(
       // user 1 — every q103 branch: below → above → exactly-c →
       // above → below (c = 250.0)
@@ -183,7 +181,7 @@ class Round16Spec extends SparkTestBase {
   private def writeEnvelope(rows: Seq[(Long, Int, String)],
                             parts: Int): String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("r16-env").toString + "/env"
+    val d = tempDir("r16-env").toString + "/env"
     val df = rows.toDF("id", "vt", "json")
     (if (parts > 1) df.repartitionByRange(parts, df("id")) else
       df.coalesce(1))

@@ -225,7 +225,7 @@ class Round9Spec extends SparkTestBase {
   test("qs8 stream-stream interval join: a purchase at EXACTLY " +
     "click_ts + window joins (inclusive upper bound), one microsecond " +
     "past does not, and a pre-click purchase never matches") {
-    val dir = java.nio.file.Files.createTempDirectory("qs8spec").toString
+    val dir = tempDir("qs8spec").toString
     val t0 = 1_700_000_000_000_000L // micros
     val winUs = 21_600L * 1_000_000L // the declared 6h default
     Seq(
@@ -249,7 +249,7 @@ class Round9Spec extends SparkTestBase {
   test("qs9 left-outer stream-stream join: matched clicks pair up, " +
     "unmatched clicks emit exactly one null-padded row once the " +
     "watermark passes their horizon, and the boundary stays inclusive") {
-    val dir = java.nio.file.Files.createTempDirectory("qs9spec").toString
+    val dir = tempDir("qs9spec").toString
     val t0 = 1_700_000_000_000_000L
     val winUs = 21_600L * 1_000_000L
     Seq(
@@ -295,7 +295,7 @@ class Round9Spec extends SparkTestBase {
 
   test("qe21 centroid drift: identical halves drift 0 at cosine 1; a " +
     "planted one-dimension shift moves l2 by exactly its magnitude") {
-    val dir = java.nio.file.Files.createTempDirectory("qe21spec").toString
+    val dir = tempDir("qe21spec").toString
     Seq(
       (0L, Seq(1f, 2f, 3f, 4f), 0), // label 0: halves identical
       (1L, Seq(1f, 2f, 3f, 4f), 0),
@@ -316,7 +316,7 @@ class Round9Spec extends SparkTestBase {
 
   test("qz10 BPE pairs: char bigrams count within words only — never " +
     "across whitespace — and rank by count desc then pair asc") {
-    val dir = java.nio.file.Files.createTempDirectory("qz10spec").toString
+    val dir = tempDir("qz10spec").toString
     Seq((0L, "ababa xy", "en", "s0", 8L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -329,7 +329,7 @@ class Round9Spec extends SparkTestBase {
   test("qz11 shard planning: a doc is assigned where its cumulative " +
     "offset starts; an oversized doc overfills its shard (docs never " +
     "split); later docs resume in the next derived shard") {
-    val dir = java.nio.file.Files.createTempDirectory("qz11spec").toString
+    val dir = tempDir("qz11spec").toString
     def doc(id: Long, n: Int) = (id, "x" * n, "en", "s", n.toLong)
     // cum-before: 0, 40000, 80000, 180000 → shards 0, 0, 1, 2
     Seq(doc(1, 40000), doc(2, 40000), doc(3, 100000), doc(4, 10000))
@@ -347,7 +347,7 @@ class Round9Spec extends SparkTestBase {
   test("qx64 repeated-gram fraction: a doc of one repeated token is " +
     "maximally repetitive, an all-distinct doc scores 0, and docs under " +
     "3 tokens are excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("qx64spec").toString
+    val dir = tempDir("qx64spec").toString
     Seq(
       (1L, "a a a a", "en", "s", 7L), // grams: "a a a" ×2 → rep 1/2
       (2L, "b c d e", "en", "s", 7L), // grams distinct → rep 0
@@ -382,7 +382,7 @@ class Round9Spec extends SparkTestBase {
   test("qp3 ingest pipeline: scrubbing BEFORE dedup collapses docs that " +
     "differ only in volatile tokens — two same-text docs with distinct " +
     "staged ids dedup to one survivor; manifest counts nest") {
-    val dir = java.nio.file.Files.createTempDirectory("qp3spec").toString
+    val dir = tempDir("qp3spec").toString
     val body = "the quick brown fox jumps over the lazy dog again " * 3
     Seq((1L, body.trim, "en", "s", body.trim.length.toLong),
       (2L, body.trim, "en", "s", body.trim.length.toLong))
@@ -414,7 +414,7 @@ class Round9Spec extends SparkTestBase {
   test("qx66 burstiness: a term clumped into one doc scores the " +
     "hand-computed VMR, a perfectly scattered term scores exactly 0, " +
     "and the clumped term outranks it") {
-    val dir = java.nio.file.Files.createTempDirectory("qx66spec").toString
+    val dir = tempDir("qx66spec").toString
     val docs = ((("bb " * 10) + "aa") +: Seq.fill(4)("bb aa")) ++
       Seq.fill(5)("aa")
     docs.zipWithIndex.map { case (t, i) =>
@@ -474,7 +474,7 @@ class Round9Spec extends SparkTestBase {
   test("qx67 span-mask plan: the md5 coin reproduces exactly per " +
     "(doc, span), sentinel count = masked spans, and the realized " +
     "corpus mask fraction sits near the 15% design point") {
-    val dir = java.nio.file.Files.createTempDirectory("qx67spec").toString
+    val dir = tempDir("qx67spec").toString
     Seq((7L, (1 to 9).map(i => s"w$i").mkString(" "), "en", "s", 30L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -503,7 +503,7 @@ class Round9Spec extends SparkTestBase {
   test("qm5 frame stats: byte energy/peak/mean computed exactly from " +
     "the frame bytes (hand-checked ASCII), short tail frames keep " +
     "their true length") {
-    val dir = java.nio.file.Files.createTempDirectory("qm5spec").toString
+    val dir = tempDir("qm5spec").toString
     Seq((1L, "AB", "en", "s", 2L), // one 2-byte frame: 0x41, 0x42
       (2L, "A" * 100, "en", "s", 100L)) // one full 16-byte frame of 'A'
       .toDF("doc_id", "text", "lang", "source", "n_chars")

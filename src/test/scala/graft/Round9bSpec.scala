@@ -12,7 +12,7 @@ class Round9bSpec extends SparkTestBase {
 
   private def plantDocs(rows: Seq[(Long, String, String, String, Long)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r9bspec").toString
+    val dir = tempDir("r9bspec").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -99,7 +99,7 @@ class Round9bSpec extends SparkTestBase {
   }
 
   private def plantEmb(rows: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r9bemb").toString
+    val dir = tempDir("r9bemb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -155,7 +155,7 @@ class Round9bSpec extends SparkTestBase {
   }
 
   private def plantEvents(rows: Seq[(Long, Long, Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r9bev").toString
+    val dir = tempDir("r9bev").toString
     rows.toDF("event_id", "us", "user_id", "event_type")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), lit(0.0).as("value"),
@@ -293,7 +293,7 @@ class Round9bSpec extends SparkTestBase {
 
   private def plantEventsV(rows: Seq[(Long, Long, Long, String, Double)])
       : String = {
-    val dir = java.nio.file.Files.createTempDirectory("r9bevv").toString
+    val dir = tempDir("r9bevv").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"), col("value"),

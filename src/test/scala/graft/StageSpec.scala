@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class StageSpec extends SparkTestBase {
 
   private def freshStage(): (Stage, Path) = {
-    val parent = Files.createTempDirectory("stage-spec")
+    val parent = tempDir("stage-spec")
     (new Stage(parent, Some(parent.resolve("shm"))), parent)
   }
 
@@ -111,7 +111,7 @@ class StageSpec extends SparkTestBase {
 
   test("ADVICE r17 #3: a zero-pair gram-overlap fact is staged once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("stage-zero-pair").toString
+    val dir = tempDir("stage-zero-pair").toString
     // no two docs share a token, so no 3-gram overlaps
     (1L to 12L).map(i => (i, (1 to 6).map(w => s"w${i}x$w").mkString(" ")))
       .toDF("doc_id", "text")

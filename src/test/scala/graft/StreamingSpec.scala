@@ -222,7 +222,7 @@ class StreamingSpec extends SparkTestBase {
     "flow through the AIS projection into stateful assembly") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("aisstream").toString
+    val dir = tempDir("aisstream").toString
     def writeCsv(name: String, rows: Seq[String]): Unit = {
       val p = java.nio.file.Paths.get(dir, name)
       java.nio.file.Files.write(p,
@@ -313,10 +313,10 @@ class StreamingSpec extends SparkTestBase {
     val chunks = Seq(ev.slice(0, k).toSeq, ev.slice(k, 2 * k).toSeq,
       (ev.drop(2 * k) ++ sentinels).toSeq)
 
-    val srcDir = java.nio.file.Files.createTempDirectory("gap-replay-src")
+    val srcDir = tempDir("gap-replay-src")
     val base = System.currentTimeMillis()
     chunks.zipWithIndex.foreach { case (c, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"gap-replay-w$i")
+      val tmp = tempDir(s"gap-replay-w$i")
       spark.createDataset(c).coalesce(1).write.mode("overwrite")
         .parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -710,7 +710,7 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.streams.active.isEmpty, "a replay query is still active")
     assert(tempViews() == before, s"views left: ${tempViews() -- before}")
 
-    val d = java.nio.file.Files.createTempDirectory("throwing").toString
+    val d = tempDir("throwing").toString
     spark.range(5).write.mode("overwrite").parquet(d)
     val boom = udf((x: Long) =>
       if (x == 3L) throw new IllegalStateException("planted") else x)

@@ -25,25 +25,6 @@ class TripCodecSpec extends SparkTestBase {
   private def sample[A](gen: Gen[A], n: Int = Samples): Seq[A] =
     (1 to n).map(i => gen.pureApply(Gen.Parameters.default, Seed(i.toLong)))
 
-  /** `body` with expression evaluation forced to one mode: NO_CODEGEN also
-    * turns whole-stage codegen off (it would compile the projection
-    * anyway); CODEGEN_ONLY keeps it on with the interpreted fallback off,
-    * so a janino failure fails the test. */
-  private def inMode[A](mode: String)(body: => A): A = {
-    val confs = Seq("spark.sql.codegen.factoryMode" -> mode,
-      "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString,
-      "spark.sql.codegen.fallback" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private val Modes = Seq("NO_CODEGEN", "CODEGEN_ONLY")
-
   /** An RDD-backed frame: a local relation would be folded (and its
     * expressions evaluated) by the optimizer, outside the mode under test. */
   private def frame(rows: Seq[Row], schema: StructType): DataFrame =

@@ -1,16 +1,21 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{ScalaAggregator, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -62,9 +67,34 @@ class TripPlanSpec extends SparkTestBase {
       case u: ScalaUDF => u.toString })
     }.flatten
 
+  /** `f`'s value and the number of jobs its one SQL execution ran. */
+  private def jobsOf[A](s: SparkSession)(f: => A): (A, Int) = {
+    val jobs = new ConcurrentLinkedQueue[Long]()
+    val ended = new ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .foreach(id => jobs.add(id.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd => ended.add(end.executionId)
+        case _ =>
+      }
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val a = f
+      // events arrive asynchronously, an execution's jobs before its end
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (ended.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(ended.size == 1, s"executions ended: $ended")
+      (a, jobs.asScala.count(_ == ended.peek))
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
   /** Eight vessels, 40 posits each a minute apart, on a diagonal. */
   private def writeCsv(): String = {
-    val dir = Files.createTempDirectory("ais-plan")
+    val dir = tempDir("ais-plan")
     val rows = for (v <- 0 until 8; k <- 0 until 40) yield {
       val ts = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
         .plusMinutes(k + 5L * v).format(
@@ -88,7 +118,7 @@ class TripPlanSpec extends SparkTestBase {
                              e: Exception): Unit = ()
     }
     s.listenerManager.register(listener)
-    val out = Files.createTempDirectory("trips-plan").toString + "/out"
+    val out = tempDir("trips-plan").toString + "/out"
     try Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
     finally {
       // listener events are delivered asynchronously
@@ -134,7 +164,7 @@ class TripPlanSpec extends SparkTestBase {
     "WKT print) has no ScalaUDF, compiles in codegen, and matches the " +
     "driver codec") {
     withExtSession { s =>
-      val out = Files.createTempDirectory("trips-plan").toString + "/out"
+      val out = tempDir("trips-plan").toString + "/out"
       Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
       val trips = TripSource.readJsonLines(s, out)
       val inst = col("trip.sequences").getItem(0).getField("instants")
@@ -165,18 +195,16 @@ class TripPlanSpec extends SparkTestBase {
       val joined = lookup(ws)
       assert(udfs(joined.queryExecution.analyzed).isEmpty,
         joined.queryExecution.analyzed.treeString)
-      val rows = joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin") &&
-        !plan.contains("CartesianProduct"), plan)
-      // the literal windows anchor the join: each trip is shuffled once,
-      // not once per hour bucket it spans (vessels 5-7 span two)
-      val tripShuffles = aqe.collect(joined.queryExecution.executedPlan) {
-        case e: ShuffleExchangeExec if e.output.exists(_.name == "trip") =>
-          e.metrics("shuffleRecordsWritten").value
-      }
-      assert(tripShuffles == Seq(8L), plan)
-      // the anchor changes with the windows but is not inlined into the
+      val (rows, jobs) = jobsOf(s)(joined.collect())
+      // the literal windows join inside the trips' scan stage: nothing is
+      // shuffled or broadcast, and the lookup runs as one job
+      val plan = joined.queryExecution.executedPlan
+      assert(aqe.collect(plan) {
+        case p @ (_: ShuffleExchangeExec | _: BroadcastExchangeExec |
+                  _: BaseJoinExec) => p
+      }.isEmpty, plan)
+      assert(jobs == 1, plan)
+      // the windows change with every lookup but are not inlined into the
       // generated code: windows five minutes later compile nothing new
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       assert(lookup(ws.map { case (w, x0, x1, y0, y1, t1, t2, at) =>

@@ -12,7 +12,7 @@ class TripSinkSpec extends SparkTestBase {
   test("json-lines envelope matches the reference's record shape " +
     "(04_to_file.rs:142)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tripsink").toString + "/out"
+    val dir = tempDir("tripsink").toString + "/out"
     val df = Seq((367000001L, 70, "01ABCD"), (367000002L, 0, "01EF00"))
       .toDF("mmsi", "vtype", "hex")
     TripSink.writeJsonLines(df, col("mmsi"), col("vtype"), col("hex"), dir)
@@ -28,7 +28,7 @@ class TripSinkSpec extends SparkTestBase {
   test("DSv2 envelope write is byte-identical to the legacy text sink, " +
     "mode(overwrite) truncates, and a pruned v2 read round-trips it") {
     import spark.implicits._
-    val base = Files.createTempDirectory("tripsink-v2").toString
+    val base = tempDir("tripsink-v2").toString
     val legacy = base + "/legacy"
     val v2 = base + "/v2"
     val df = Seq((367000001L, 70, "01ABCD"), (367000002L, 0, "01EF00"),
@@ -60,7 +60,7 @@ class TripSinkSpec extends SparkTestBase {
   test("envelope reader ignores dot/underscore files — an aborted v2 " +
     "write attempt's .inprogress temp file is never visible to a scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tripsink-abort").toString
+    val dir = tempDir("tripsink-abort").toString
     Seq((1L, 1, "AA")).toDF("id", "vt", "json")
       .write.format("trip-envelope").mode("overwrite").save(dir)
     // plant what a dead task attempt leaves behind

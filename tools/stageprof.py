@@ -2,6 +2,7 @@
 """Per-stage profile of each SQL execution in a Spark event log.
 
     python3 tools/stageprof.py <event log file | event log dir> [--min-ms N]
+                               [--timeline]
 
 The log must be uncompressed JSON lines (spark.eventLog.compress=false);
 a rolling log (an `eventlog_v2_<app>` dir) is read part by part, and given
@@ -13,9 +14,19 @@ one line per stage that ran for it (skipped stages are not listed):
 
 wall_ms is stage submission to completion; task_ms is each task's launch to
 finish; shuf_w_mb / shuf_r_mb are the bytes its tasks wrote to / read from
-the shuffle; ops are the stage's plan operators (from its RDD scopes). Stages map to executions through their jobs'
-`spark.sql.execution.id` property. Executions whose wall time is below
---min-ms are left out.
+the shuffle; ops are the stage's plan operators (from its RDD scopes).
+Stages map to executions through their jobs' `spark.sql.execution.id`
+property. Executions whose wall time is below --min-ms are left out.
+
+With --timeline it prints, per execution, one line per job instead:
+
+    job  start_ms  end_ms  wall_ms  stages  tasks  shuf_w_mb
+
+start_ms / end_ms are offsets from the execution's start; stages and tasks
+count what ran (skipped stages are left out). A last line splits the
+driver's time outside jobs: before the first job (analysis, planning,
+codegen), between jobs (time no job ran, such as AQE re-planning after a
+query stage) and after the last one (result handling).
 """
 import argparse
 import json
@@ -55,6 +66,7 @@ def read(files):
     stage_exec = {}                 # stage id -> execution id
     stages = {}                     # stage id -> completed stage info
     tasks = defaultdict(lambda: {"n": 0, "sum": 0, "max": 0, "w": 0, "r": 0})
+    jobs = {}                       # job id -> {exec, start, end, stages}
     for line in events(files):
         try:
             e = json.loads(line)
@@ -74,6 +86,12 @@ def read(files):
             if eid is not None:
                 for sid in e.get("Stage IDs", []):
                     stage_exec[sid] = int(eid)
+                jobs[e["Job ID"]] = {
+                    "exec": int(eid), "start": e.get("Submission Time"),
+                    "end": None, "stages": e.get("Stage IDs", [])}
+        elif kind == "SparkListenerJobEnd":
+            if e["Job ID"] in jobs:
+                jobs[e["Job ID"]]["end"] = e.get("Completion Time")
         elif kind == "SparkListenerStageCompleted":
             info = e["Stage Info"]
             stages[info["Stage ID"]] = info
@@ -90,7 +108,7 @@ def read(files):
             sr = tm.get("Shuffle Read Metrics") or {}
             t["r"] += sr.get("Remote Bytes Read", 0) + sr.get(
                 "Local Bytes Read", 0)
-    return execs, stage_exec, stages, tasks
+    return execs, stage_exec, stages, tasks, jobs
 
 
 def operators(info):
@@ -107,17 +125,67 @@ def operators(info):
     return " > ".join(names)
 
 
+def print_stages(rows, tasks):
+    print(f"  {'stage':>5} {'tasks':>6} {'wall_ms':>8} {'task_ms_sum':>11} "
+          f"{'task_ms_max':>11} {'shuf_w_mb':>9} {'shuf_r_mb':>9}  ops")
+    for s in rows:
+        t = tasks[s["Stage ID"]]
+        sw = (s.get("Completion Time") or 0) - (s.get("Submission Time") or 0)
+        name = operators(s) or s.get("Stage Name", "")
+        print(f"  {s['Stage ID']:>5} {t['n']:>6} {sw:>8} {t['sum']:>11} "
+              f"{t['max']:>11} {t['w'] / MB:>9.2f} {t['r'] / MB:>9.2f}  "
+              f"{name}")
+
+
+def print_timeline(x, jobs, ran, tasks):
+    """One line per job of execution `x`, offsets from its start, then the
+    driver's time before, between and after its jobs. `ran` maps a job to
+    the stages that ran for it."""
+    t0 = x["start"]
+    print(f"  {'job':>5} {'start_ms':>8} {'end_ms':>8} {'wall_ms':>8} "
+          f"{'stages':>6} {'tasks':>6} {'shuf_w_mb':>9}")
+    before = between = 0
+    reached = None                  # latest end of the jobs so far
+    for jid, j in sorted(jobs, key=lambda kv: (kv[1]["start"], kv[0])):
+        end = j["end"] if j["end"] is not None else j["start"]
+        if reached is None:
+            before = j["start"] - t0
+        else:
+            between += max(0, j["start"] - reached)
+        reached = end if reached is None else max(reached, end)
+        mine = ran.get(jid, [])
+        print(f"  {jid:>5} {j['start'] - t0:>8} {end - t0:>8} "
+              f"{end - j['start']:>8} {len(mine):>6} "
+              f"{sum(tasks[sid]['n'] for sid in mine):>6} "
+              f"{sum(tasks[sid]['w'] for sid in mine) / MB:>9.2f}")
+    after = (x["end"] - reached) if x["end"] is not None else float("nan")
+    print(f"  driver_ms  before_first_job {before}  between_jobs {between}  "
+          f"after_last_job {after:.0f}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[1])
     ap.add_argument("log")
     ap.add_argument("--min-ms", type=float, default=0.0)
+    ap.add_argument("--timeline", action="store_true",
+                    help="per execution, its jobs over time instead of its "
+                         "stages")
     a = ap.parse_args()
     files = log_files(a.log)
-    execs, stage_exec, stages, tasks = read(files)
+    execs, stage_exec, stages, tasks, jobs = read(files)
     by_exec = defaultdict(list)
     for sid, info in stages.items():
         if sid in stage_exec:
             by_exec[stage_exec[sid]].append(info)
+    # a stage runs for the first job that lists it; later jobs skip it
+    jobs_by_exec, ran, owned = defaultdict(list), defaultdict(list), set()
+    for jid, j in sorted(jobs.items()):
+        if j["start"] is not None:
+            jobs_by_exec[j["exec"]].append((jid, j))
+        for sid in j["stages"]:
+            if sid in stages and sid not in owned:
+                owned.add(sid)
+                ran[jid].append(sid)
     print(f"# {', '.join(files)}")
     for eid in sorted(execs, key=lambda k: execs[k]["start"]):
         x = execs[eid]
@@ -126,19 +194,17 @@ def main():
             continue
         desc = " ".join(x["desc"].split())[:100]
         print(f"\nexecution {eid}  wall_ms {wall:.0f}  {desc}")
+        if a.timeline:
+            if not jobs_by_exec.get(eid):
+                print("  (no jobs ran)")
+                continue
+            print_timeline(x, jobs_by_exec[eid], ran, tasks)
+            continue
         rows = sorted(by_exec.get(eid, []), key=lambda s: s["Stage ID"])
         if not rows:
             print("  (no stages ran)")
             continue
-        print(f"  {'stage':>5} {'tasks':>6} {'wall_ms':>8} {'task_ms_sum':>11} "
-              f"{'task_ms_max':>11} {'shuf_w_mb':>9} {'shuf_r_mb':>9}  ops")
-        for s in rows:
-            t = tasks[s["Stage ID"]]
-            sw = (s.get("Completion Time") or 0) - (s.get("Submission Time") or 0)
-            name = operators(s) or s.get("Stage Name", "")
-            print(f"  {s['Stage ID']:>5} {t['n']:>6} {sw:>8} {t['sum']:>11} "
-                  f"{t['max']:>11} {t['w'] / MB:>9.2f} {t['r'] / MB:>9.2f}  "
-                  f"{name}")
+        print_stages(rows, tasks)
 
 
 if __name__ == "__main__":
