@@ -19,11 +19,12 @@ object Pipelines {
     *
     * One scan, one aggregation, like the reference's single pass per
     * vessel (`04_to_file.rs:88-114`: one map of instants, one of vessel
-    * types). Assembly goes through the salted two-phase path
-    * (property-checked equal to single-phase): the reference's
-    * "mega-vessel" case — one MMSI carrying a huge share of the posits —
-    * spreads over `salts` reducers in phase 1 instead of concentrating one
-    * reducer's heap; phase 2 merges the salt groups' runs. The vessel type
+    * types). Assembly goes through the by-key path behind one exchange
+    * (property-checked equal to single-phase): each CSV scan task folds
+    * its share of a vessel's posits into one sorted run before the
+    * exchange, so the "mega-vessel" case — one MMSI carrying a huge share
+    * of the posits — ships a run per task, and the reducer merges them
+    * into the trip (`maxTripSize` bounds what it holds). The vessel type
     * rides in the same buffer as the carried last value,
     * `max_by(vt, struct(t, seq))`. A posit without an MMSI belongs to no
     * vessel and is dropped.
@@ -32,15 +33,15 @@ object Pipelines {
     * [[graft.sources.AisCsv]] or any equivalent projection.
     */
   def assembleTrips(posits: DataFrame, minTripSize: Int = 1,
-                    maxTripSize: Int = 0, salts: Int = 16): DataFrame = {
+                    maxTripSize: Int = 0): DataFrame = {
     // content-derived tiebreak: stable across runs and partitionings
     // (unlike monotonically_increasing_id); rows identical in content sort
     // identically, so any winner is the same row
     val withTie = posits.where(col("mmsi").isNotNull).withColumn("seq",
       xxhash64(col("t"), col("lon"), col("lat"), col("vt")))
-    Assembly.tpointAssembleSalted(withTie,
+    Assembly.tpointAssembleByKey(withTie,
       col("mmsi"), unix_micros(col("t")), col("seq"),
-      col("lon"), col("lat"), salts = salts, maxSize = maxTripSize,
+      col("lon"), col("lat"), maxSize = maxTripSize,
       last = Some(col("vt")))
       .where(col("s.n") >= minTripSize)
       .select(col("k").as("mmsi"), col("last").as("vt"), col("s"),

@@ -19,10 +19,10 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    // salted two-phase assembly — the skew-immune declared path (one
-    // mega-entity never concentrates a reducer's heap; SkewSpec-proven
-    // equal to single-phase)
-    Assembly.tfloatAssembleSalted(
+    // by-key assembly behind one exchange — the declared path (each scan
+    // task folds its share of an entity into one run map-side; SkewSpec-
+    // and AssemblyPropSpec-proven equal to single-phase)
+    Assembly.tfloatAssembleByKey(
       Tables.events(spark, dir)
         .select(col("user_id"), col("ts"), col("event_id"), col("value")),
       col("user_id"), unix_micros(col("ts")), col("event_id"), col("value"))

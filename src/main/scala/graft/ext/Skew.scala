@@ -3,11 +3,12 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skewed-join mitigation — the JOIN-grain counterpart of the salted
-  * assembly aggregation (Assembly.tpointAssembleSalted, the round-8
-  * discipline): when one join key carries a disproportionate share of
-  * the fact rows, a plain hash-partitioned equi-join funnels that key's
-  * entire fact slice through one task.
+/** Skewed-join mitigation. The assembly aggregate
+  * (Assembly.tpointAssembleByKey) needs no salt: each map task folds its
+  * share of a hot key into one run before the exchange. A join has no
+  * such map-side combine: when one join key carries a disproportionate
+  * share of the fact rows, a plain hash-partitioned equi-join funnels
+  * that key's entire fact slice through one task.
   *
   * Two production answers, both demonstrated in this repo:
   *

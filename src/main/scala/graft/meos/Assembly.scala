@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.Platform
   *  - single-phase: a typed `Aggregator` per key whose buffer is a bag of
   *    posits, with the kernel applied at `finish` ([[tfloatAssemble]],
   *    [[tpointAssemble]]);
-  *  - salted two-phase, the skew-immune path: a pair of
-  *    `TypedImperativeAggregate`s over primitive-column buffers
-  *    ([[tfloatAssembleSalted]], [[tpointAssembleSalted]]).
+  *  - by key, behind one exchange: one partial-aggregating
+  *    `TypedImperativeAggregate` over primitive-column buffers
+  *    ([[tfloatAssembleByKey]], [[tpointAssembleByKey]]).
   * Distribution semantics:
   *  - reduce/merge are order-insensitive (shuffle order never changes the
   *    result); determinism comes from sorting by (t, tie) where `tie` is a
@@ -123,66 +123,60 @@ object Assembly {
   def tpointAssemble(maxSize: Int = 0) =
     udaf(new TPointAssembler(maxSize))
 
-  // ---- skew path: salted two-phase assembly -------------------------------
+  // ---- keyed path: one partial-aggregating assembly ----------------------
 
-  /** Two-phase assembly for skewed entities (SURVEY.md §7.3: mega-vessels).
-    * Phase 1 groups by (key, salt) — spreading one hot key over `salts`
-    * reducers — and turns each group's posits into a run: sorted by
-    * (t, tie), one posit per timestamp, the tiebreakers kept. Phase 2
-    * merges a key's runs into its trip. Both phases are one pair of
-    * `TypedImperativeAggregate`s ([[AssembleRun]], [[MergeRuns]]) over one
-    * buffer of primitive columns ([[Runs]]), and one kernel
-    * ([[Runs.compact]]: sort → smallest tie per t → cap) does the
-    * assembly in both. Identical output to single-phase assembly on EVERY
-    * input (property-checked, duplicate timestamps included: a timestamp
-    * present in several salt groups keeps the smallest tie, exactly like
-    * the single-phase dedupe).
+  /** Assembly per key behind one exchange: one `TypedImperativeAggregate`
+    * ([[AssembleTrip]]) over a buffer of primitive columns ([[Runs]]).
+    * Spark's object-hash aggregate runs it map-side first: each input task
+    * folds its posits of a key into one buffer, which is compacted into a
+    * run — sorted by (t, tie), one posit per timestamp, the tiebreakers
+    * kept — when it is serialized for the exchange. The reducer merges a
+    * key's runs into its trip. One kernel ([[Runs.compact]]: sort →
+    * smallest tie per t → cap) does the assembly on both sides of the
+    * exchange. Identical output to single-phase assembly on EVERY input
+    * (property-checked, duplicate timestamps included: a timestamp present
+    * in several input partitions keeps the smallest tie, exactly like the
+    * single-phase dedupe).
     *
-    * Mirrors the reference's own batching escape hatch (`batch_size`
-    * chunking, `ais_to_db.rs:176`) — the chunk id is the salt.
-    *
-    * `maxSize` caps state in BOTH phases: each salt group keeps its
-    * earliest `maxSize` distinct-ts posits (a superset of the global
-    * earliest `maxSize`), and the phase-2 merge re-caps — so per-task peak
-    * memory is O(maxSize), never O(hot-key history).
+    * A key's whole trip is assembled on one reducer, as its output row is
+    * one value; `maxSize` is what bounds per-key state: every buffer is cut
+    * to its earliest `maxSize` distinct-ts posits whenever it doubles past
+    * the cap and when it is serialized (a superset of the global earliest
+    * `maxSize`), so a map task holds O(maxSize) per key and the reducer
+    * O(maxSize) per key, never O(hot-key history).
     *
     * `last` (an INT or BIGINT column, points only), when given, adds a
     * column `last`: that column's value on the posit with the greatest
-    * (t, tie) — `max_by(last, struct(t, tie))` carried through both
-    * phases in the same buffer, so a per-key last-value (the AIS vessel
-    * type) costs no second aggregation. Null inputs read as the
-    * single-phase assembler reads them: t and tie 0, values 0.0; in the
-    * (t, tie) order of `last` a null sorts first, as in `max_by`.
+    * (t, tie) — `max_by(last, struct(t, tie))` carried in the same buffer,
+    * so a per-key last-value (the AIS vessel type) costs no second
+    * aggregation. Null inputs read as the single-phase assembler reads
+    * them: t and tie 0, values 0.0; in the (t, tie) order of `last` a null
+    * sorts first, as in `max_by`.
     */
-  def tfloatAssembleSalted(df: DataFrame, key: Column, t: Column,
-                           tie: Column, v: Column, salts: Int = 16,
-                           maxSize: Int = 0): DataFrame =
-    assembleSalted(df, key, t, tie, Seq("v" -> v), None, salts, maxSize)
+  def tfloatAssembleByKey(df: DataFrame, key: Column, t: Column,
+                          tie: Column, v: Column,
+                          maxSize: Int = 0): DataFrame =
+    assembleByKey(df, key, t, tie, Seq("v" -> v), None, maxSize)
 
-  /** 2-D (tgeompoint) variant of [[tfloatAssembleSalted]]; it also takes
+  /** 2-D (tgeompoint) variant of [[tfloatAssembleByKey]]; it also takes
     * the carried `last` column. */
-  def tpointAssembleSalted(df: DataFrame, key: Column, t: Column,
-                           tie: Column, x: Column, y: Column,
-                           salts: Int = 16, maxSize: Int = 0,
-                           last: Option[Column] = None): DataFrame =
-    assembleSalted(df, key, t, tie, Seq("x" -> x, "y" -> y), last, salts,
-      maxSize)
+  def tpointAssembleByKey(df: DataFrame, key: Column, t: Column,
+                          tie: Column, x: Column, y: Column,
+                          maxSize: Int = 0,
+                          last: Option[Column] = None): DataFrame =
+    assembleByKey(df, key, t, tie, Seq("x" -> x, "y" -> y), last, maxSize)
 
-  private def assembleSalted(df: DataFrame, key: Column, t: Column,
-                             tie: Column, values: Seq[(String, Column)],
-                             last: Option[Column], salts: Int, maxSize: Int)
-      : DataFrame = {
+  private def assembleByKey(df: DataFrame, key: Column, t: Column,
+                            tie: Column, values: Seq[(String, Column)],
+                            last: Option[Column], maxSize: Int): DataFrame = {
     import org.apache.spark.sql.GraftShims.{column, expression}
     val lastType = last.map(c => df.select(c).schema.head.dataType)
     val inputs = Seq(t.cast(LongType), tie.cast(LongType)) ++
       values.map(_._2.cast(DoubleType)) ++ last
-    val run = AssembleRun(inputs.map(expression), values.size, lastType,
-      maxSize)
-    val trips = df.groupBy(key.as("k"), pmod(tie, lit(salts)).as("salt"))
-      .agg(column(run.toAggregateExpression()).as("p"))
-      .groupBy(col("k"))
-      .agg(column(MergeRuns(expression(col("p")), values.map(_._1),
-        lastType, maxSize).toAggregateExpression()).as("s"))
+    val trip = AssembleTrip(inputs.map(expression), values.map(_._1),
+      lastType, maxSize)
+    val trips = df.groupBy(key.as("k"))
+      .agg(column(trip.toAggregateExpression()).as("s"))
     if (last.isEmpty) trips
     else trips.select(col("k"), col("s").dropFields("last").as("s"),
       col("s.last").as("last"))
@@ -273,7 +267,7 @@ object Assembly {
 
     /** Indices of [0, n) in [[less]] order: a stable bottom-up merge of
       * the natural ascending runs, so input made of a few sorted runs
-      * (phase 2's partial trips; mostly ordered posits) costs a few
+      * (the runs a reducer merges; mostly ordered posits) costs a few
       * linear passes. */
     private def order(): Array[Int] = {
       var src = Array.range(0, n)
@@ -392,52 +386,43 @@ object Assembly {
     private val Header = 4 + 1 + 3 * 8
   }
 
-  /** What both phases share: the [[Runs]] buffer, its byte form, merging
-    * two buffers, and the cap applied whenever a buffer doubles past it. */
-  sealed trait RunsAggregate extends TypedImperativeAggregate[Runs] {
-    def nValues: Int
-    def maxSize: Int
-
-    override def createAggregationBuffer(): Runs = new Runs(nValues)
-
-    protected def capped(b: Runs): Runs = {
-      if (maxSize > 0 && b.n > 2 * maxSize) b.compact(maxSize)
-      b
-    }
-
-    override def merge(b: Runs, o: Runs): Runs = { b.append(o); capped(b) }
-
-    override def serialize(b: Runs): Array[Byte] = {
-      b.compact(maxSize)
-      b.toBytes
-    }
-
-    override def deserialize(bytes: Array[Byte]): Runs = {
-      val b = createAggregationBuffer()
-      b.appendBytes(bytes)
-      b
-    }
-  }
-
-  /** Phase 1: posits (t, tie, `nValues` values[, carried]) → one run, as
-    * [[Runs]] bytes. */
-  case class AssembleRun(children: Seq[Expression], nValues: Int,
-                         lastType: Option[DataType], maxSize: Int,
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-      extends RunsAggregate {
+  /** Posits (t, tie, one value per name[, carried]) → a key's trip: a
+    * struct of `t` and one array per value name, `n`, and `last` when
+    * carried. Map-side, `update` appends posits to a [[Runs]] buffer;
+    * `serialize` compacts it to a run and writes its byte form; the
+    * reducer merges the runs and `eval` compacts them into the trip. */
+  case class AssembleTrip(children: Seq[Expression], valueNames: Seq[String],
+                          lastType: Option[DataType], maxSize: Int,
+                          mutableAggBufferOffset: Int = 0,
+                          inputAggBufferOffset: Int = 0)
+      extends TypedImperativeAggregate[Runs] {
     lastType.foreach(dt => require(dt == IntegerType || dt == LongType,
       s"the carried last value must be an INT or BIGINT column, got " +
         dt.simpleString))
 
-    override def nullable: Boolean = false
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "assemble_run"
+    private val nValues = valueNames.size
+    override def nullable: Boolean = true
+    override def prettyName: String = "assemble_trip"
+
+    override def dataType: DataType = StructType(
+      (StructField("t", ArrayType(LongType, containsNull = false)) +:
+        valueNames.map(StructField(_, ArrayType(DoubleType,
+          containsNull = false)))) ++
+        Seq(StructField("n", LongType, nullable = false)) ++
+        lastType.map(StructField("last", _)))
+
+    override def createAggregationBuffer(): Runs = new Runs(nValues)
 
     /** The inputs of one row in one generated projection: no boxing. */
     @transient private lazy val inputs = UnsafeProjection.create(children)
     private val lastAt = 2 + nValues
     private val lastInt = lastType.contains(IntegerType)
+
+    /** The cap, applied whenever a buffer doubles past it. */
+    private def capped(b: Runs): Runs = {
+      if (maxSize > 0 && b.n > 2 * maxSize) b.compact(maxSize)
+      b
+    }
 
     override def update(b: Runs, row: InternalRow): Runs = {
       val r = inputs(row)
@@ -460,38 +445,17 @@ object Assembly {
       capped(b)
     }
 
-    override def eval(b: Runs): Any = serialize(b)
+    override def merge(b: Runs, o: Runs): Runs = { b.append(o); capped(b) }
 
-    override def withNewMutableAggBufferOffset(o: Int): AssembleRun =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): AssembleRun =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildrenInternal(
-        c: IndexedSeq[Expression]): AssembleRun = copy(children = c)
-  }
+    override def serialize(b: Runs): Array[Byte] = {
+      b.compact(maxSize)
+      b.toBytes
+    }
 
-  /** Phase 2: a key's runs ([[AssembleRun]] bytes) → its trip: a struct of
-    * `t` and one array per value name, `n`, and `last` when carried. */
-  case class MergeRuns(child: Expression, valueNames: Seq[String],
-                       lastType: Option[DataType], maxSize: Int,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-      extends RunsAggregate {
-    override def nValues: Int = valueNames.size
-    override def children: Seq[Expression] = Seq(child)
-    override def nullable: Boolean = true
-    override def prettyName: String = "merge_runs"
-
-    override def dataType: DataType = StructType(
-      (StructField("t", ArrayType(LongType, containsNull = false)) +:
-        valueNames.map(StructField(_, ArrayType(DoubleType,
-          containsNull = false)))) ++
-        Seq(StructField("n", LongType, nullable = false)) ++
-        lastType.map(StructField("last", _)))
-
-    override def update(b: Runs, row: InternalRow): Runs = {
-      b.appendBytes(child.eval(row).asInstanceOf[Array[Byte]])
-      capped(b)
+    override def deserialize(bytes: Array[Byte]): Runs = {
+      val b = createAggregationBuffer()
+      b.appendBytes(bytes)
+      b
     }
 
     override def eval(b: Runs): Any = {
@@ -509,12 +473,12 @@ object Assembly {
       new GenericInternalRow(fields.toArray[Any])
     }
 
-    override def withNewMutableAggBufferOffset(o: Int): MergeRuns =
+    override def withNewMutableAggBufferOffset(o: Int): AssembleTrip =
       copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): MergeRuns =
+    override def withNewInputAggBufferOffset(o: Int): AssembleTrip =
       copy(inputAggBufferOffset = o)
     override protected def withNewChildrenInternal(
-        c: IndexedSeq[Expression]): MergeRuns = copy(child = c.head)
+        c: IndexedSeq[Expression]): AssembleTrip = copy(children = c)
   }
 
   // ---- lifting raw assembled arrays to Temporal structs -------------------

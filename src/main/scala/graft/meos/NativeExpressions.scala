@@ -421,6 +421,7 @@ object TGeomOutBridge {
   * Top-level for janino visibility (see [[TGeomBridge]]). */
 object WkbBridge {
   import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+  import org.apache.spark.unsafe.Platform
   import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
   import MobilityWkb.Codes
 
@@ -587,6 +588,9 @@ object WkbBridge {
   private val L = TGeomOutBridge.layoutOf(TGeomBridge.valDataType)
   private val NTopFields =
     TGeomBridge.valDataType.asInstanceOf[org.apache.spark.sql.types.StructType].size
+  /** A decoded instant's row: one null word (fewer than 64 fields) and an
+    * 8-byte slot per field, all fixed-width (x, y, z, t). */
+  private val InstBytes = 8 + 8 * L.nInstFields
 
   /** Sequential little/big-endian reader over WKB bytes, or over the hex
     * digits spelling them (`hex != null`; byte i is digits 2i, 2i+1). */
@@ -672,7 +676,10 @@ object WkbBridge {
     val seqs = new UnsafeArrayWriter(top, 8)
     val seqW = new UnsafeRowWriter(seqs, L.nSeqFields)
     val insts = new UnsafeArrayWriter(seqW, 8)
-    val instW = new UnsafeRowWriter(insts, L.nInstFields)
+    // instants are fixed-width rows, written in place after one grow per
+    // sequence: no row writer to reset (and re-zero) per instant
+    val zNull = if (hasZ) 0L else 1L << L.instZ
+    def slot(ordinal: Int): Long = 8L + 8L * ordinal
     val nSeq = if (subtype == TGeom.SubSequenceSet) in.count(5) else 1
     seqs.initialize(nSeq)
     var k = 0
@@ -684,15 +691,20 @@ object WkbBridge {
       if (subtype != TGeom.SubInstant) { n = in.count(instBytes); bounds = in.u8() }
       val instsAt = seqW.cursor()
       insts.initialize(n)
+      insts.grow(n * InstBytes)
+      val buf = insts.getBuffer
       var j = 0
       while (j < n) {
-        val instAt = insts.cursor()
-        instW.resetRowWriter()
-        instW.write(L.instX, in.f64())
-        instW.write(L.instY, in.f64())
-        if (hasZ) instW.write(L.instZ, in.f64()) else instW.setNullAt(L.instZ)
-        instW.write(L.instT, in.i64() + MobilityWkb.PgEpochUs)
-        insts.setOffsetAndSizeFromPreviousCursor(j, instAt)
+        val at = insts.cursor().toLong
+        Platform.putLong(buf, at, zNull)
+        Platform.putDouble(buf, at + slot(L.instX), in.f64())
+        Platform.putDouble(buf, at + slot(L.instY), in.f64())
+        if (hasZ) Platform.putDouble(buf, at + slot(L.instZ), in.f64())
+        else Platform.putLong(buf, at + slot(L.instZ), 0L)
+        Platform.putLong(buf, at + slot(L.instT),
+          in.i64() + MobilityWkb.PgEpochUs)
+        insts.increaseCursor(InstBytes)
+        insts.setOffsetAndSizeFromPreviousCursor(j, at.toInt)
         j += 1
       }
       seqW.setOffsetAndSizeFromPreviousCursor(L.seqInstants, instsAt)

@@ -363,13 +363,13 @@ object CoreQueries {
         .orderBy("user_id", "chunk")
     }),
 
-    // q12 — A5/A6: trajectory assembly through the salted two-phase path
-    // (phase 1: (key, salt) runs that keep their ties; phase 2: the runs
-    // merged, smallest tie per timestamp) — one mega-entity's history never
-    // concentrates in a single reducer's heap, and the output is proven
-    // equal to single-phase assembly in SkewSpec
+    // q12 — A5/A6: trajectory assembly through the by-key path behind one
+    // exchange (map-side: each task's posits of a key become one run that
+    // keeps its ties; reduce-side: the runs merged, smallest tie per
+    // timestamp) — the output is proven equal to single-phase assembly in
+    // SkewSpec and AssemblyPropSpec
     "q12_trip_assembly" -> ((s, dir) => {
-      Assembly.tfloatAssembleSalted(Tables.events(s, dir),
+      Assembly.tfloatAssembleByKey(Tables.events(s, dir),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
         col("value"))
         .select(col("k").as("user_id"),
@@ -532,9 +532,9 @@ object CoreQueries {
 
     // q23 — A6 on the 2-D point path: tgeompoint assembly (x=value,
     // y=props length) with the same dedupe/sort semantics as q12, also
-    // through the salted two-phase path
+    // through the by-key path
     "q23_tpoint_assembly" -> ((s, dir) => {
-      Assembly.tpointAssembleSalted(
+      Assembly.tpointAssembleByKey(
         Tables.events(s, dir)
           .withColumn("y", length(col("props")).cast("double")),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
@@ -715,7 +715,7 @@ object CoreQueries {
         .orderBy("p_partkey")),
 
     // q36 — TSet production under the oracle: assemble each entity's trip
-    // (salted path), split it at >= 1h gaps into maximal sub-sequences
+    // (by-key path), split it at >= 1h gaps into maximal sub-sequences
     // (Trajectory.gapSegments — the sequence-set shape, tset.rs:10-13),
     // then roll up per segment
     "q36_gap_split" -> ((s, dir) =>
@@ -724,7 +724,7 @@ object CoreQueries {
       // POSIT and re-aggregated, paying a full-data-volume shuffle that
       // at 100 TB dwarfs the split itself; now the explode emits one row
       // per SEGMENT
-      Assembly.tpointAssembleSalted(
+      Assembly.tpointAssembleByKey(
         Tables.events(s, dir)
           .withColumn("y", length(col("props")).cast("double")),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
@@ -1811,7 +1811,7 @@ object CoreQueries {
     // ordered list. ε = 50.000 in milli units; the first posit is
     // always kept (the sentinel init).
     "q77_deadband_simplify" -> ((s, dir) => {
-      val asm = Assembly.tfloatAssembleSalted(Tables.events(s, dir),
+      val asm = Assembly.tfloatAssembleByKey(Tables.events(s, dir),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
         col("value"))
       asm
@@ -1845,7 +1845,7 @@ object CoreQueries {
     // pass of higher-order array functions over the q12-assembled
     // sequences: flatten(transform(segs, split-or-finalize)) with the
     // argmax as an `aggregate` fold over the segment interior. No
-    // shuffle beyond the salted assembly envelope; per-level work is
+    // shuffle beyond the assembly's one exchange; per-level work is
     // O(n) per user, total O(n·D). Integer-exact throughout: the MEOS
     // tfloat deviation |v_i − lerp(t_i)| > ε is cross-multiplied by the
     // chord's Δt — dev = |Δv_i·Δt_seg − Δv_seg·Δt_i| vs ε·Δt_seg in
@@ -1859,7 +1859,7 @@ object CoreQueries {
     // children, so that union equals the final segments' endpoints).
     // ε = 250 milli-units.
     "q78_dp_simplify" -> ((s, dir) => {
-      val asm = Assembly.tfloatAssembleSalted(Tables.events(s, dir),
+      val asm = Assembly.tfloatAssembleByKey(Tables.events(s, dir),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
         col("value"))
       // dev(i) for segment g over arrays vm/tm (both 1-based via
@@ -2023,7 +2023,7 @@ object CoreQueries {
     // q102 — the ONE-PASS TRAJECTORY FEATURE TABLE: the production
     // shape for MEOS-style feature extraction — q86's speed extremes,
     // q96's stop detection, and q77's dead-band compression computed
-    // from a SINGLE q12 assembly (one scan, one salted shuffle, every
+    // from a SINGLE q12 assembly (one scan, one assembly shuffle, every
     // per-step feature a row-local HOF over the assembled arrays)
     // instead of three separate window queries over three scans. The
     // twin joins the three proven CTE spellings on user_id, so each
@@ -2031,7 +2031,7 @@ object CoreQueries {
     // Same constants as the source queries (speed in milli-units/s;
     // stops ε = 100.000 milli / 6 h; dead-band ε = 50.000 milli).
     "q102_trajectory_features" -> ((s, dir) => {
-      val asm = Assembly.tfloatAssembleSalted(Tables.events(s, dir),
+      val asm = Assembly.tfloatAssembleByKey(Tables.events(s, dir),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
         col("value"))
       val eps = 100000L
@@ -2108,7 +2108,7 @@ object CoreQueries {
     // oracle's DuckDB misfolds struct-accumulator list_reduce on
     // column data). ε = 100.000 milli-units, minDur = 6 h. All BIGINT.
     "q96_stops" -> ((s, dir) => {
-      val asm = Assembly.tfloatAssembleSalted(Tables.events(s, dir),
+      val asm = Assembly.tfloatAssembleByKey(Tables.events(s, dir),
         col("user_id"), unix_micros(col("ts")), col("event_id"),
         col("value"))
       val eps = 100000L

@@ -38,11 +38,11 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("GreaterThanOrEqual(o_orderdate"), p)
   }
 
-  test("q12 salted assembly: two ObjectHashAggregate stages, each with " +
-    "map-side partial aggregation") {
+  test("q12 assembly: one ObjectHashAggregate pair (map-side partial, " +
+    "then final) behind one hash exchange") {
     val p = plan("q12_trip_assembly")
-    // phase 1 groupBy(key, salt) + phase 2 groupBy(key), partial+final each
-    assert("ObjectHashAggregate".r.findAllIn(p).length == 4, p)
+    assert("ObjectHashAggregate".r.findAllIn(p).length == 2, p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).length == 1, p)
   }
 
   test("q07 sort+limit plans as TakeOrderedAndProject (no global sort)") {
@@ -61,11 +61,11 @@ class PlanSpec extends SparkTestBase {
       p.contains("ShuffledHashJoin"), p)
   }
 
-  test("q36 gap-split: salted assembly shape, no cartesian") {
+  test("q36 gap-split: by-key assembly shape, no cartesian") {
     val p = plan("q36_gap_split")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
-    assert("ObjectHashAggregate".r.findAllIn(p).length == 4, p) // 2 phases
+    assert("ObjectHashAggregate".r.findAllIn(p).length == 2, p) // partial+final
   }
 
   test("qx5 jaccard and qe5 near-dup: equi-joins only (inverted-index / " +

@@ -5,72 +5,75 @@ import org.apache.spark.sql.functions._
 import graft.meos.Assembly
 import graft.ext.Text
 
-/** Scale-path equivalences: salted two-phase assembly must equal
-  * single-phase; fast (xxhash) LSH banding must produce the same candidate
-  * pairs as the md5 variant on identical inputs (same min-shingle → same
-  * bucketing behavior statistically; here we check exact-dup detection). */
+/** Scale-path equivalences: by-key assembly must equal single-phase at
+  * every input partitioning; fast (xxhash) LSH banding must produce the
+  * same candidate pairs as the md5 variant on identical inputs (same
+  * min-shingle → same bucketing behavior statistically; here we check
+  * exact-dup detection). */
 class SkewSpec extends SparkTestBase {
 
-  test("salted two-phase assembly == single-phase assembly") {
+  private val Parts = Seq(1, 3, 16)
+
+  test("by-key assembly == single-phase assembly, at 1, 3 and 16 input " +
+    "partitions") {
     val ev = Tables.events(spark, sfDir)
+    def collect(res: org.apache.spark.sql.DataFrame) =
+      res.collect().map(r => r.getLong(0) ->
+        (r.getAs[scala.collection.Seq[Long]]("t"),
+          r.getAs[scala.collection.Seq[Double]]("v"))).toMap
     val asm = Assembly.tfloatAssemble()
-    val single = ev.groupBy("user_id")
+    val single = collect(ev.groupBy("user_id")
       .agg(asm(unix_micros(col("ts")), col("event_id"), col("value")).as("s"))
-      .select(col("user_id"), col("s.t").as("t"), col("s.v").as("v"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getAs[scala.collection.Seq[Long]]("t"),
-          r.getAs[scala.collection.Seq[Double]]("v"))).toMap
-    val salted = Assembly.tfloatAssembleSalted(ev,
-      col("user_id"), unix_micros(col("ts")), col("event_id"), col("value"),
-      salts = 8)
-      .select(col("k"), col("s.t").as("t"), col("s.v").as("v"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getAs[scala.collection.Seq[Long]]("t"),
-          r.getAs[scala.collection.Seq[Double]]("v"))).toMap
-    assert(salted.keySet == single.keySet)
-    single.foreach { case (k, (t, v)) =>
-      assert(salted(k)._1 == t, s"user $k timestamps differ")
-      assert(salted(k)._2 == v, s"user $k values differ")
+      .select(col("user_id"), col("s.t").as("t"), col("s.v").as("v")))
+    Parts.foreach { parts =>
+      val byKey = collect(Assembly.tfloatAssembleByKey(ev.repartition(parts),
+        col("user_id"), unix_micros(col("ts")), col("event_id"), col("value"))
+        .select(col("k"), col("s.t").as("t"), col("s.v").as("v")))
+      assert(byKey.keySet == single.keySet, s"parts $parts")
+      single.foreach { case (k, (t, v)) =>
+        assert(byKey(k)._1 == t, s"parts $parts: user $k timestamps differ")
+        assert(byKey(k)._2 == v, s"parts $parts: user $k values differ")
+      }
     }
   }
 
-  test("salted == single-phase under duplicate timestamps and a size cap " +
-    "(tie-aware phase-2 merge keeps the smallest-tie posit)") {
-    import spark.implicits._
-    // duplicate timestamps with DIFFERENT values and ties, spread so dup-ts
-    // twins land in different salt groups; cap at 5 of 8 distinct ts
+  test("by-key == single-phase under duplicate timestamps and a size cap " +
+    "(the reducer's merge keeps the smallest-tie posit)") {
+    // duplicate timestamps with DIFFERENT values and ties, rows ordered
+    // copy-major so a timestamp's copies land in different input
+    // partitions; cap at 5 of 8 distinct ts
     val rows = for {
-      k <- Seq(1L, 2L); t <- 0L until 8L; dup <- 0L until 3L
+      dup <- 0L until 3L; k <- Seq(1L, 2L); t <- 0L until 8L
     } yield (k, t * 1000000L, t * 100 + dup * 7 + k, (t * 10 + dup).toDouble)
-    val df = rows.toDF("k0", "us", "tie", "v")
     def collect(res: org.apache.spark.sql.DataFrame, keyCol: String) =
       res.select(col(keyCol), col("s.t").as("t"), col("s.v").as("v"))
         .collect().map(r => r.getLong(0) ->
           (r.getAs[scala.collection.Seq[Long]]("t"),
             r.getAs[scala.collection.Seq[Double]]("v"))).toMap
     val asm = Assembly.tfloatAssemble(maxSize = 5)
-    val single = collect(df.groupBy("k0")
-      .agg(asm(col("us"), col("tie"), col("v")).as("s"))
-      .withColumnRenamed("k0", "k"), "k")
-    val salted = collect(Assembly.tfloatAssembleSalted(df,
-      col("k0"), col("us"), col("tie"), col("v"), salts = 4, maxSize = 5),
-      "k")
-    assert(salted == single)
-    assert(single.values.forall(_._1.length == 5))
+    Parts.foreach { parts =>
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows,
+        parts)).toDF("k0", "us", "tie", "v")
+      val single = collect(df.groupBy("k0")
+        .agg(asm(col("us"), col("tie"), col("v")).as("s"))
+        .withColumnRenamed("k0", "k"), "k")
+      val byKey = collect(Assembly.tfloatAssembleByKey(df,
+        col("k0"), col("us"), col("tie"), col("v"), maxSize = 5), "k")
+      assert(byKey == single, s"parts $parts")
+      assert(single.values.forall(_._1.length == 5))
+    }
   }
 
-  test("mega-key (1e6 posits) assembles through the salted path with " +
-    "bounded per-task state (cap applied in both phases)") {
-    import spark.implicits._
+  test("mega-key (1e6 posits) assembles by key with bounded per-task " +
+    "state (cap applied map-side and at the reducer)") {
     val n = 1000000L
     val df = spark.range(n).select(
       lit(42L).as("k0"),
       (col("id") * 1000000L).as("us"),
       col("id").as("tie"),
       col("id").cast("double").as("v"))
-    val out = Assembly.tfloatAssembleSalted(df,
-      col("k0"), col("us"), col("tie"), col("v"),
-      salts = 32, maxSize = 10000)
+    val out = Assembly.tfloatAssembleByKey(df,
+      col("k0"), col("us"), col("tie"), col("v"), maxSize = 10000)
       .select(col("k"), col("s.n").as("n"), col("s.t").as("t"))
       .collect()
     assert(out.length == 1)

@@ -27,7 +27,8 @@ import graft.sources.{AisCsv, TripSource}
   * [[TripSource]], box-overlap join, value-at and WKT print) carry no
   * `ScalaUDF`, and every bridge they call compiles under janino
   * (`spark.sql.codegen.fallback=false`, so a compile error fails instead
-  * of falling back to interpretation). Results are checked against TGeom's
+  * of falling back to interpretation). The ingest assembles its trips
+  * behind one exchange, in 2 jobs. Results are checked against TGeom's
   * driver-side codec on the written trip file. */
 class TripPlanSpec extends SparkTestBase {
 
@@ -108,8 +109,9 @@ class TripPlanSpec extends SparkTestBase {
   }
 
   /** The executions of `aisToFile` on [[writeCsv]]'s file in `s`, after
-    * checking it wrote the eight trips. */
-  private def aisToFileExecutions(s: SparkSession): Seq[QueryExecution] = {
+    * checking it wrote the eight trips, and the jobs the write ran. */
+  private def aisToFileExecutions(s: SparkSession)
+      : (Seq[QueryExecution], Int) = {
     val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -119,7 +121,8 @@ class TripPlanSpec extends SparkTestBase {
     }
     s.listenerManager.register(listener)
     val out = tempDir("trips-plan").toString + "/out"
-    try Pipelines.aisToFile(AisCsv.read(s, writeCsv()), out)
+    val posits = AisCsv.read(s, writeCsv())
+    val (_, jobs) = try jobsOf(s)(Pipelines.aisToFile(posits, out))
     finally {
       // listener events are delivered asynchronously
       val deadline = System.nanoTime() + 30e9.toLong
@@ -129,12 +132,12 @@ class TripPlanSpec extends SparkTestBase {
     }
     assert(!qes.isEmpty, "the write was not observed")
     assert(s.read.text(out).count() == 8)
-    qes.toArray(Array.empty[QueryExecution]).toSeq
+    (qes.toArray(Array.empty[QueryExecution]).toSeq, jobs)
   }
 
   test("aisToFile's write plan has no ScalaUDF and compiles in codegen") {
     withExtSession { s =>
-      aisToFileExecutions(s).map(_.analyzed).foreach(p =>
+      aisToFileExecutions(s)._1.map(_.analyzed).foreach(p =>
         assert(udfs(p).isEmpty, p.treeString))
     }
   }
@@ -142,7 +145,7 @@ class TripPlanSpec extends SparkTestBase {
   test("aisToFile's executed plan scans the CSV once, with no join, no " +
     "sort aggregate and no ScalaAggregator") {
     withExtSession { s =>
-      val qes = aisToFileExecutions(s)
+      val (qes, _) = aisToFileExecutions(s)
       assert(qes.size == 1, "one action writes the trips")
       val plan = qes.head.executedPlan
       val nodes = aqe.collect(plan) { case p => p }
@@ -157,6 +160,19 @@ class TripPlanSpec extends SparkTestBase {
       }, plan.treeString)
       assert(!nodes.exists(_.expressions.exists(_.exists(
         _.isInstanceOf[ScalaAggregator[_, _, _]]))), plan.treeString)
+    }
+  }
+
+  test("aisToFile's write plan has one shuffle exchange and its execution " +
+    "runs 2 jobs") {
+    withExtSession { s =>
+      val (qes, jobs) = aisToFileExecutions(s)
+      val plan = qes.head.executedPlan
+      // the trips assemble behind one exchange: a shuffle-map job (scan
+      // and map-side assembly) and the write's job (merge, encode, write)
+      assert(aqe.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1,
+        plan.treeString)
+      assert(jobs == 2, plan.treeString)
     }
   }
 

@@ -2,7 +2,7 @@
 """Per-stage profile of each SQL execution in a Spark event log.
 
     python3 tools/stageprof.py <event log file | event log dir> [--min-ms N]
-                               [--timeline]
+                               [--timeline | --summary]
 
 The log must be uncompressed JSON lines (spark.eventLog.compress=false);
 a rolling log (an `eventlog_v2_<app>` dir) is read part by part, and given
@@ -27,10 +27,21 @@ count what ran (skipped stages are left out). A last line splits the
 driver's time outside jobs: before the first job (analysis, planning,
 codegen), between jobs (time no job ran, such as AQE re-planning after a
 query stage) and after the last one (result handling).
+
+With --summary it groups the executions by call site (their description)
+and prints, per site, its first execution as `cold` and the medians of the
+others as `warm`:
+
+    run  n  wall_ms  jobs  stages  tasks  shuf_w_mb  driver_ms
+
+n counts the executions; driver_ms is the driver's time outside jobs
+(before, between and after them, as in --timeline). --min-ms does not
+apply: every execution counts.
 """
 import argparse
 import json
 import os
+import statistics
 import sys
 from collections import defaultdict
 
@@ -137,39 +148,85 @@ def print_stages(rows, tasks):
               f"{name}")
 
 
-def print_timeline(x, jobs, ran, tasks):
-    """One line per job of execution `x`, offsets from its start, then the
-    driver's time before, between and after its jobs. `ran` maps a job to
-    the stages that ran for it."""
-    t0 = x["start"]
-    print(f"  {'job':>5} {'start_ms':>8} {'end_ms':>8} {'wall_ms':>8} "
-          f"{'stages':>6} {'tasks':>6} {'shuf_w_mb':>9}")
+def job_rows(x, jobs, ran, tasks):
+    """Execution `x`'s jobs in start order, as (job id, start, end, stages,
+    tasks, shuffle-write bytes), and the driver's ms before, between and
+    after them. `ran` maps a job to the stages that ran for it."""
+    rows = []
     before = between = 0
     reached = None                  # latest end of the jobs so far
     for jid, j in sorted(jobs, key=lambda kv: (kv[1]["start"], kv[0])):
         end = j["end"] if j["end"] is not None else j["start"]
         if reached is None:
-            before = j["start"] - t0
+            before = j["start"] - x["start"]
         else:
             between += max(0, j["start"] - reached)
         reached = end if reached is None else max(reached, end)
         mine = ran.get(jid, [])
-        print(f"  {jid:>5} {j['start'] - t0:>8} {end - t0:>8} "
-              f"{end - j['start']:>8} {len(mine):>6} "
-              f"{sum(tasks[sid]['n'] for sid in mine):>6} "
-              f"{sum(tasks[sid]['w'] for sid in mine) / MB:>9.2f}")
-    after = (x["end"] - reached) if x["end"] is not None else float("nan")
+        rows.append((jid, j["start"], end, len(mine),
+                     sum(tasks[sid]["n"] for sid in mine),
+                     sum(tasks[sid]["w"] for sid in mine)))
+    end = x["end"] if x["end"] is not None else float("nan")
+    after = end - (x["start"] if reached is None else reached)
+    return rows, (before, between, after)
+
+
+def print_timeline(x, jobs, ran, tasks):
+    """One line per job of execution `x`, offsets from its start, then the
+    driver's time before, between and after its jobs."""
+    t0 = x["start"]
+    print(f"  {'job':>5} {'start_ms':>8} {'end_ms':>8} {'wall_ms':>8} "
+          f"{'stages':>6} {'tasks':>6} {'shuf_w_mb':>9}")
+    rows, (before, between, after) = job_rows(x, jobs, ran, tasks)
+    for jid, start, end, nstages, ntasks, w in rows:
+        print(f"  {jid:>5} {start - t0:>8} {end - t0:>8} {end - start:>8} "
+              f"{nstages:>6} {ntasks:>6} {w / MB:>9.2f}")
     print(f"  driver_ms  before_first_job {before}  between_jobs {between}  "
           f"after_last_job {after:.0f}")
+
+
+SUMMARY = ("wall_ms", "jobs", "stages", "tasks", "shuf_w_mb", "driver_ms")
+
+
+def print_summary(execs, jobs_by_exec, ran, tasks):
+    """Per call site (execution description), in order of first start: the
+    first execution as cold, the medians of the rest as warm."""
+    sites = defaultdict(list)
+    for eid in sorted(execs, key=lambda k: execs[k]["start"]):
+        x = execs[eid]
+        if x["end"] is None:
+            continue
+        rows, split = job_rows(x, jobs_by_exec.get(eid, []), ran, tasks)
+        sites[" ".join(x["desc"].split())[:100]].append((
+            x["end"] - x["start"], len(rows), sum(r[3] for r in rows),
+            sum(r[4] for r in rows), sum(r[5] for r in rows) / MB,
+            sum(split)))
+    for desc, runs in sites.items():
+        print(f"\nsite  {desc}")
+        print(f"  {'run':<5} {'n':>4} " +
+              " ".join(f"{c:>9}" for c in SUMMARY))
+        cold, warm = runs[0], runs[1:]
+        print(f"  {'cold':<5} {1:>4} " + " ".join(
+            f"{v:>9.2f}" if c == "shuf_w_mb" else f"{v:>9.0f}"
+            for c, v in zip(SUMMARY, cold)))
+        if warm:
+            meds = [statistics.median(col) for col in zip(*warm)]
+            print(f"  {'warm':<5} {len(warm):>4} " + " ".join(
+                f"{v:>9.2f}" if c == "shuf_w_mb" else f"{v:>9.1f}"
+                for c, v in zip(SUMMARY, meds)))
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[1])
     ap.add_argument("log")
     ap.add_argument("--min-ms", type=float, default=0.0)
-    ap.add_argument("--timeline", action="store_true",
-                    help="per execution, its jobs over time instead of its "
-                         "stages")
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--timeline", action="store_true",
+                      help="per execution, its jobs over time instead of "
+                           "its stages")
+    mode.add_argument("--summary", action="store_true",
+                      help="per call site, the cold execution and the "
+                           "warm medians")
     a = ap.parse_args()
     files = log_files(a.log)
     execs, stage_exec, stages, tasks, jobs = read(files)
@@ -187,6 +244,9 @@ def main():
                 owned.add(sid)
                 ran[jid].append(sid)
     print(f"# {', '.join(files)}")
+    if a.summary:
+        print_summary(execs, jobs_by_exec, ran, tasks)
+        return
     for eid in sorted(execs, key=lambda k: execs[k]["start"]):
         x = execs[eid]
         wall = (x["end"] - x["start"]) if x["end"] is not None else float("nan")
